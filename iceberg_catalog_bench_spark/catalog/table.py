@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import snapshots
 from .transforms import Transform, parse_spec, transform_expr
 
 _META_DIR = "_meta"
@@ -812,23 +813,23 @@ class LakeTable:
             return snap
 
     def _snapshot(self, snapshot_id: int | None = None, as_of_ms: int | None = None) -> Snapshot | None:
-        snaps = [Snapshot.from_json(s) for s in self._meta["snapshots"]]
-        if not snaps:
+        """The snapshot an id, a timestamp (resolved on main's
+        ancestry) or neither (main's head) names; None on an empty
+        table or a main with no commits."""
+        meta = self._meta
+        if not meta["snapshots"]:
             return None
         if snapshot_id is not None:
-            for s in snaps:
-                if s.snapshot_id == snapshot_id:
-                    return s
-            raise KeyError(f"no snapshot {snapshot_id}")
+            return Snapshot.from_json(snapshots.get(meta, snapshot_id))
         if as_of_ms is not None:
-            eligible = [s for s in snaps if s.timestamp_ms <= as_of_ms]
-            if not eligible:
+            sn = snapshots.as_of(meta, as_of_ms, snapshots.ref_head(meta, None))
+            if sn is None:
                 raise KeyError(f"no snapshot at or before {as_of_ms}")
-            return eligible[-1]
-        cur = self._meta["current_snapshot_id"]
+            return Snapshot.from_json(sn)
+        cur = meta["current_snapshot_id"]
         if cur is None:  # snapshots may exist only on branches
             return None
-        return next(s for s in snaps if s.snapshot_id == cur)
+        return Snapshot.from_json(snapshots.get(meta, cur))
 
     def _fields(self, version: int | None = None) -> list[Field]:
         v = self._meta["current_schema_version"] if version is None else version
@@ -1027,18 +1028,10 @@ class LakeTable:
         fast-append retry. Row-level ops (delete/update/merge) do NOT
         auto-retry: their rewrites depend on the snapshot they read, so
         the caller must reload and re-run."""
-        if branch is not None and branch not in (self._meta.get("branches") or {}):
-            raise KeyError(
-                f"no branch {branch!r}; branches: "
-                f"{sorted(self._meta.get('branches') or {})}"
-            )
+        snapshots.ref_head(self._meta, branch)  # unknown branch: fail before writing
         new_files = self._write_files(df)
         for attempt in range(_retries + 1):
-            if branch is None:
-                cur = self._snapshot() if self._meta["current_snapshot_id"] else None
-            else:
-                head = (self._meta.get("branches") or {}).get(branch)
-                cur = self._snapshot(head) if head is not None else None
+            cur = self._ref_snapshot(branch)
             base = list(cur.files) if cur else []
             summary = {"added_files": len(new_files),
                        "added_rows": sum(f.rows for f in new_files)}
@@ -1111,7 +1104,7 @@ class LakeTable:
             try:
                 if overwrite:
                     return self._commit("overwrite", list(new_files), summary)
-                cur = self._snapshot() if self._meta["current_snapshot_id"] else None
+                cur = self._snapshot()
                 base = list(cur.files) if cur else []
                 return self._commit("append", base + new_files, summary)
             except CommitConflict:
@@ -1146,7 +1139,7 @@ class LakeTable:
             _discard(new_files)
             return None
         for attempt in range(_retries + 1):
-            cur = self._snapshot() if self._meta["current_snapshot_id"] else None
+            cur = self._snapshot()
             base = list(cur.files) if cur else []
             try:
                 return self._commit(
@@ -1232,11 +1225,7 @@ class LakeTable:
             fields = {f.name: f for f in self._fields()}
             for c, v in static.items():
                 df = df.withColumn(c, F.lit(v).cast(fields[c].type))
-        if branch is not None and branch not in (self._meta.get("branches") or {}):
-            raise KeyError(
-                f"no branch {branch!r}; branches: "
-                f"{sorted(self._meta.get('branches') or {})}"
-            )
+        snapshots.ref_head(self._meta, branch)  # unknown branch: fail before writing
         new_files = self._write_files(df)
         if not spec:
             return self._commit(
@@ -1263,11 +1252,7 @@ class LakeTable:
                 return tuple(sorted(part.items())) in touched
 
         for attempt in range(_retries + 1):
-            if branch is None:
-                head = self._meta["current_snapshot_id"]
-            else:
-                head = (self._meta.get("branches") or {}).get(branch)
-            cur = self._snapshot(head) if head is not None else None
+            cur = self._ref_snapshot(branch)
             base = list(cur.files) if cur else []
             carried: list[FileEntry] = []
             n_replaced = 0
@@ -1731,7 +1716,7 @@ class LakeTable:
                     pass
 
         for attempt in range(_retries + 1):
-            snap = self._snapshot() if self._meta["current_snapshot_id"] else None
+            snap = self._snapshot()
             base = list(snap.files) if snap else []
             base_dels = list(snap.delete_files) if snap else []
             try:
@@ -1789,20 +1774,14 @@ class LakeTable:
         those ranges — it nets exact row-level inserts and deletes."""
         start = self._snapshot(from_snapshot_id)
         end = self._snapshot(to_snapshot_id) if to_snapshot_id else self._snapshot()
-        by_id = {s["snapshot_id"]: s for s in self._meta["snapshots"]}
-        chain: list[dict] = []  # end → ... → child-of-start
-        cur: int | None = end.snapshot_id
-        while cur is not None and cur != start.snapshot_id:
-            s = by_id.get(cur)
-            if s is None:
-                break
-            chain.append(s)
-            cur = s.get("parent_id")
-        if cur != start.snapshot_id:
+        try:  # end → ... → child-of-start
+            chain = snapshots.ancestry(
+                self._meta, end.snapshot_id, start.snapshot_id)
+        except ValueError:
             raise ValueError(
                 f"snapshot {start.snapshot_id} is not an ancestor of "
                 f"{end.snapshot_id}; incremental_read needs a linear range"
-            )
+            ) from None
         non_append = {
             s["snapshot_id"]: s["operation"] for s in chain
             if s["operation"] not in ("append", "replace")
@@ -1917,17 +1896,14 @@ class LakeTable:
         snapshot committed at or before the cutoff ON THE CURRENT
         ANCESTRY (resolving over all snapshots would resurrect
         branch-staged commits), as a new commit."""
-        head = self._meta.get("current_snapshot_id") or 0
-        eligible = [
-            sn for sn in _ancestry_of(self._meta, head)
-            if sn.get("timestamp_ms", 0) <= ts_ms
-        ]
-        if not eligible:
+        sn = snapshots.as_of(
+            self._meta, ts_ms, snapshots.ref_head(self._meta, None))
+        if sn is None:
             raise ValueError(
                 f"no snapshot committed at or before {ts_ms} ms on the "
                 f"current ancestry"
             )
-        return self.rollback_to_snapshot(eligible[0]["snapshot_id"])
+        return self.rollback_to_snapshot(sn["snapshot_id"])
 
     def set_current_snapshot(self, snapshot_id: int) -> Snapshot:
         """CALL system.set_current_snapshot — point the table at ANY
@@ -1942,10 +1918,10 @@ class LakeTable:
         given snapshot (default: current head), newest first, as a
         DataFrame of (snapshot_id, timestamp_ms). Metadata-only."""
         head = (snapshot_id if snapshot_id is not None
-                else self._meta.get("current_snapshot_id") or 0)
+                else snapshots.ref_head(self._meta, None))
         rows = [
             (sn["snapshot_id"], sn.get("timestamp_ms", 0))
-            for sn in _ancestry_of(self._meta, head)
+            for sn in snapshots.ancestry(self._meta, head)
         ]
         return self.spark.createDataFrame(
             rows or [], "snapshot_id bigint, timestamp_ms bigint"
@@ -1971,15 +1947,8 @@ class LakeTable:
         wap_id=...)``) is recorded as ``published-wap-id`` on the
         publish commit and guards against double-publishing the same
         staged change."""
-        target = self._snapshot(snapshot_id)
-        parent = (
-            self._snapshot(target.parent_id) if target.parent_id is not None else None
-        )
-        parent_paths = {e.path for e in parent.files} if parent else set()
-        added = [e for e in target.files if e.path not in parent_paths]
-        removed = parent_paths - {e.path for e in target.files}
-        parent_dels = {d.path for d in parent.delete_files} if parent else set()
-        new_dels = [d for d in target.delete_files if d.path not in parent_dels]
+        target = snapshots.get(self._meta, snapshot_id)
+        added, removed, new_dels = snapshots.changes(self._meta, target)
         if removed or new_dels:
             raise ValueError(
                 f"cannot cherry-pick snapshot {snapshot_id}: only append "
@@ -1987,34 +1956,30 @@ class LakeTable:
                 f"{len(removed)} file(s) and added {len(new_dels)} delete "
                 f"file(s) — re-run the operation against the current head)"
             )
-        wap_id = target.summary.get("wap.id")
+        wap_id = (target.get("summary") or {}).get("wap.id")
         for attempt in range(_retries + 1):
-            cur = self._snapshot() if self._meta.get("current_snapshot_id") else None
+            cur = self._snapshot()
             # Double-publish guard along the MAIN ancestry: the same
             # staged snapshot (by id, or by wap.id) must not land twice.
-            node = cur
-            while node is not None:
-                if node.summary.get("cherry_picked_from") == snapshot_id or (
+            for node in snapshots.ancestry(
+                    self._meta, snapshots.ref_head(self._meta, None)):
+                stamped = node.get("summary") or {}
+                if stamped.get("cherry_picked_from") == snapshot_id or (
                     wap_id is not None
-                    and node.summary.get("published-wap-id") == wap_id
+                    and stamped.get("published-wap-id") == wap_id
                 ):
                     raise ValueError(
                         f"snapshot {snapshot_id} (wap.id={wap_id!r}) was "
-                        f"already published as snapshot {node.snapshot_id}"
+                        f"already published as snapshot {node['snapshot_id']}"
                     )
-                node = (
-                    self._snapshot(node.parent_id)
-                    if node.parent_id is not None
-                    else None
-                )
             head_paths = {e.path for e in cur.files} if cur else set()
-            if any(e.path in head_paths for e in added):
+            if any(f["path"] in head_paths for f in added):
                 raise ValueError(
                     f"snapshot {snapshot_id}'s files are already present on main"
                 )
             fresh = []
-            for e in added:
-                c = FileEntry.from_json(e.to_json())
+            for f in added:
+                c = FileEntry.from_json(f)
                 c.seq = None  # _commit stamps the publishing snapshot's seq
                 fresh.append(c)
             summary = {
@@ -2179,12 +2144,10 @@ class LakeTable:
     def read_branch(self, name: str) -> DataFrame:
         """Audit read of a branch head (the A in WAP): what main WOULD
         become if this branch were published."""
-        branches = self._meta.get("branches", {})
-        if name not in branches:
-            raise KeyError(f"no branch {name!r}; branches: {sorted(branches)}")
-        if branches[name] is None:
+        head = snapshots.ref_head(self._meta, name)
+        if not head:
             return self._read_entries([], self._meta["current_schema_version"])
-        return self.read(snapshot_id=branches[name])
+        return self.read(snapshot_id=head)
 
     def fast_forward(self, branch: str) -> int:
         """Publish a branch (the P in WAP): fast-forward main to the
@@ -2195,21 +2158,14 @@ class LakeTable:
         published: list[int] = []
 
         def mutate():
-            branches = self._meta.get("branches") or {}
-            if branch not in branches:
-                raise KeyError(f"no branch {branch!r}")
-            head = branches[branch]
-            if head is None:
+            head = snapshots.ref_head(self._meta, branch)
+            if not head:
                 raise ValueError(f"branch {branch!r} has no commits to publish")
             cur = self._meta.get("current_snapshot_id")
-            by_id = {s["snapshot_id"]: s for s in self._meta["snapshots"]}
-            node, ok = head, cur is None
-            while node is not None and not ok:
-                if node == cur:
-                    ok = True
-                    break
-                node = by_id[node].get("parent_id")
-            if not ok:
+            if cur is not None and all(
+                sn["snapshot_id"] != cur
+                for sn in snapshots.ancestry(self._meta, head)
+            ):
                 raise ValueError(
                     f"cannot fast-forward: main head {cur} is not an "
                     f"ancestor of branch {branch!r} head {head}"
@@ -2475,13 +2431,8 @@ class LakeTable:
     def _ref_snapshot(self, branch: str | None) -> "Snapshot | None":
         """The snapshot a write against ``branch`` (None = main) plans
         against."""
-        if branch is None:
-            return self._snapshot()
-        branches = self._meta.get("branches") or {}
-        if branch not in branches:
-            raise KeyError(f"no branch {branch!r}; branches: {sorted(branches)}")
-        head = branches[branch]
-        return self._snapshot(head) if head is not None else None
+        head = snapshots.ref_head(self._meta, branch)
+        return self._snapshot(head) if head else None
 
     def _row_op_mode(self, op: str, override: str | None) -> str:
         """Resolve copy-on-write vs merge-on-read for a row-level op,
@@ -3890,7 +3841,7 @@ class LakeTable:
         version = self._meta["current_schema_version"]
         entries = _external_footer_entries(src_files, version)
         for attempt in range(_retries + 1):
-            cur = self._snapshot() if self._meta["current_snapshot_id"] else None
+            cur = self._snapshot()
             base = list(cur.files) if cur else []
             try:
                 return self._commit(
@@ -4213,7 +4164,6 @@ class LakeTable:
 
         def mutate():
             snaps = self._meta["snapshots"]
-            by_id = {s["snapshot_id"]: s for s in snaps}
             now_ms = int(time.time() * 1000)
             retention = self._meta.get("ref_retention") or {}
             # 1) age out refs past their max-ref-age (Iceberg RETAIN):
@@ -4227,9 +4177,13 @@ class LakeTable:
                 for rname in list(store):
                     max_age = (retention.get(rname) or {}).get("max-ref-age-ms")
                     sid = store[rname]
-                    if max_age is None or sid is None or sid not in by_id:
+                    if max_age is None or sid is None:
                         continue
-                    if now_ms - by_id[sid]["timestamp_ms"] > max_age:
+                    try:
+                        ts = snapshots.get(self._meta, sid)["timestamp_ms"]
+                    except KeyError:
+                        continue  # dangling ref: nothing to age
+                    if now_ms - ts > max_age:
                         del store[rname]
                         retention.pop(rname, None)
             if len(snaps) <= retain_last:
@@ -4244,12 +4198,11 @@ class LakeTable:
             # stays valid across maintenance
             for rname, head in (self._meta.get("branches") or {}).items():
                 keep_n = (retention.get(rname) or {}).get("min-snapshots-to-keep")
-                node = head
-                for _ in range(keep_n or 0):
-                    if node is None or node not in by_id:
-                        break
-                    ref_ids.add(node)
-                    node = by_id[node].get("parent_id")
+                if keep_n and keep_n > 0:
+                    ref_ids.update(
+                        sn["snapshot_id"]
+                        for sn in snapshots.ancestry(self._meta, head or 0)[:keep_n]
+                    )
             tail_ids = {s["snapshot_id"] for s in snaps[-retain_last:]}
             if older_than_ms is not None:
                 tail_ids |= {
@@ -4362,22 +4315,6 @@ class LakeTable:
                     os.remove(full)
                     removed += 1
         return {"orphan_file_count": removed}
-
-
-def _ancestry_of(meta: dict, head: int) -> list[dict]:
-    """Snapshot records along parent pointers from ``head``, newest
-    first; stops at the oldest retained snapshot (expired tails are
-    fine for rollback/ancestors queries)."""
-    by_id = {sn["snapshot_id"]: sn for sn in meta.get("snapshots", [])}
-    out: list[dict] = []
-    cur = head or None
-    while cur is not None:
-        sn = by_id.get(cur)
-        if sn is None:
-            break
-        out.append(sn)
-        cur = sn.get("parent_id")
-    return out
 
 
 def _spark_ddl_of_arrow(t) -> str:

@@ -43,20 +43,23 @@ _SCHEMA_CACHE: dict[tuple[str, int, int], object] = {}
 
 def _schema_cache_key(path: str) -> tuple:
     """Cache key for ``path``'s parquet schema. For a single file:
-    (mtime_ns, size). For a DIRECTORY (ADVICE r15): the dir inode's
-    mtime only moves on entry add/delete/rename, so an in-place
-    rewrite of a part file would serve a stale schema silently — key
-    on the sorted (name, mtime_ns, size) listing digest instead (a
-    scandir of a local dir is microseconds against the 100-230 ms
+    (mtime_ns, size). For a DIRECTORY: a dir inode's mtime only moves
+    on entry add/delete/rename, so an in-place rewrite of a part file
+    — at any depth, e.g. inside a partition subdirectory — would serve
+    a stale schema silently. Key on the sorted (relative path,
+    mtime_ns, size) listing of every file below ``path`` instead (a
+    walk of a local table dir is far cheaper than the 100-230 ms
     footer inference the cache avoids)."""
     st = os.stat(path)
     if not os.path.isdir(path):
         return (path, st.st_mtime_ns, st.st_size)
     entries = []
-    with os.scandir(path) as it:
-        for e in it:
-            es = e.stat()
-            entries.append((e.name, es.st_mtime_ns, es.st_size))
+    for root, _dirs, files in os.walk(path):
+        for name in files:
+            full = os.path.join(root, name)
+            fs = os.stat(full)
+            entries.append(
+                (os.path.relpath(full, path), fs.st_mtime_ns, fs.st_size))
     return (path, tuple(sorted(entries)))
 
 

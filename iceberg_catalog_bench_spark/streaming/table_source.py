@@ -152,6 +152,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from ..catalog import snapshots
+
 _META_REL = os.path.join("_meta", "metadata.json")
 
 _EPOCH_DATE = datetime.date(1970, 1, 1)
@@ -978,70 +980,6 @@ def _read_cow_net(partition: _CowNetPartition) -> Iterator:
         yield from out.to_batches(max_chunksize=1 << 16)
 
 
-def _ref_head(meta: dict, branch: str | None) -> int:
-    """Head snapshot id of a ref — main, or a named branch."""
-    if branch is None:
-        return meta.get("current_snapshot_id") or 0
-    branches = meta.get("branches") or {}
-    if branch not in branches:
-        raise ValueError(f"no branch {branch!r}; branches: {sorted(branches)}")
-    return branches[branch] or 0
-
-
-def _ancestry(meta: dict, from_id: int, back_to: int) -> list[dict]:
-    """Snapshots (back_to, from_id] along parent pointers, NEWEST
-    first.
-
-    ``back_to == 0`` (a FRESH consumer, or a validation walk to the
-    root): an expired tail is tolerated — the walk stops at the oldest
-    RETAINED snapshot, Iceberg's semantics for new consumers of a
-    table whose early history was expired. The oldest chain element
-    then has a parent id that resolves to no record; its "change set"
-    is its cumulative file list (the initial load).
-
-    ``back_to != 0`` (a concrete checkpointed offset): every snapshot
-    in the range AND the boundary record itself must exist — the next
-    commit's changes diff against ``back_to``'s file list, so an
-    expired boundary makes the range unrecoverable (without this check
-    the oldest chain element's missing parent would silently read as
-    'no parent' and redeliver the whole table to an exactly-once
-    consumer). Also raises when ``back_to`` is not on the ancestry at
-    all (a re-pointed branch / rewound ref): walking past it to the
-    root would replay the entire history."""
-    by_id = {sn["snapshot_id"]: sn for sn in meta["snapshots"]}
-    chain: list[dict] = []
-    node = from_id or None
-    while node and node != back_to:
-        sn = by_id.get(node)
-        if sn is None:
-            if not back_to:
-                break  # expired tail under a fresh start: oldest retained
-            raise ValueError(
-                f"snapshot {node} in the offset range ({back_to}, "
-                f"{from_id}] was expired (expire_snapshots) before the "
-                f"stream consumed it; the commits are unrecoverable — "
-                f"restart from a fresh checkpoint"
-            )
-        chain.append(sn)
-        node = sn.get("parent_id")
-    if back_to:
-        if node != back_to:
-            raise ValueError(
-                f"snapshot {back_to} is not on the ref's ancestry (the ref "
-                f"was re-pointed or rewound under a running stream); "
-                f"continuing would replay already-consumed commits — "
-                f"restart from a fresh checkpoint"
-            )
-        if back_to not in by_id:
-            raise ValueError(
-                f"snapshot {back_to} (the consumed offset boundary) was "
-                f"expired (expire_snapshots); the next commit's change set "
-                f"diffs against its file list, so the range is "
-                f"unrecoverable — restart from a fresh checkpoint"
-            )
-    return chain
-
-
 def _stat_comparable(v):
     """Datetime/date literals → the string form footer stats record
     (catalog.table._json_safe: naive-UTC, space separator — chosen
@@ -1117,45 +1055,11 @@ def _pos_key(pos: int | None) -> float:
     return float("inf") if pos is None else float(pos)
 
 
-def _parent_missing(meta: dict, snap: dict) -> bool:
-    """True when the snapshot's parent id resolves to no retained
-    record — it was expired. Distinguishes 'root commit' (parent_id
-    None) from 'parent expired' (parent_id set, record gone)."""
-    pid = snap.get("parent_id")
-    return pid is not None and all(
-        s["snapshot_id"] != pid for s in meta["snapshots"]
-    )
-
-
-def _snapshot_changes(
-    meta: dict, snap: dict, *, initial_load_ok: bool = False
-) -> tuple[list[dict], set, list[dict]]:
-    """(files added, paths removed, delete files added) vs the
-    snapshot's own parent.
-
-    A parent id that resolves to no record means the parent was
-    EXPIRED. That is only interpretable when the caller is planning a
-    fresh (offset-0) start — ``initial_load_ok=True`` — where the
-    snapshot's cumulative file list IS the initial load a new consumer
-    should receive. For any concrete consumed offset it must raise:
-    treating 'parent expired' as 'no parent' would redeliver every
-    file the snapshot carries, not just the ones it added."""
-    by_id = {s["snapshot_id"]: s for s in meta["snapshots"]}
-    parent = by_id.get(snap.get("parent_id"))
-    if snap.get("parent_id") is not None and parent is None and not initial_load_ok:
-        raise ValueError(
-            f"snapshot {snap['snapshot_id']}'s parent "
-            f"{snap['parent_id']} was expired (expire_snapshots); its "
-            f"change set is unrecoverable — restart from a fresh checkpoint"
-        )
-    parent_paths = {f["path"] for f in parent["files"]} if parent else set()
-    added = [f for f in snap["files"] if f["path"] not in parent_paths]
-    removed = parent_paths - {f["path"] for f in snap["files"]}
-    parent_dels = {d["path"] for d in (parent or {}).get("delete_files", [])}
-    new_dels = [
-        d for d in snap.get("delete_files", []) if d["path"] not in parent_dels
-    ]
-    return added, removed, new_dels
+def _initial_load(back_to: int, chain: list[dict], sn: dict) -> bool:
+    """True when ``sn``'s change set is its CUMULATIVE file list: it is
+    the oldest element of a fresh (offset-0) start's ancestry and its
+    parent was expired — a tolerant walk stops exactly there."""
+    return not back_to and sn is chain[-1] and sn.get("parent_id") is not None
 
 
 class LakeTableStreamReader(DataSourceStreamReader):
@@ -1180,9 +1084,6 @@ class LakeTableStreamReader(DataSourceStreamReader):
         # before any latestOffset, seeding the checkpointed position.
         self._last: dict | None = None
 
-    def _head(self, meta: dict) -> int:
-        return _ref_head(meta, self.branch)
-
     def initialOffset(self) -> dict:
         """Where a NEW stream starts. Default: the table root (replay
         every commit). ``starting-snapshot-id`` / ``starting-timestamp``
@@ -1194,25 +1095,21 @@ class LakeTableStreamReader(DataSourceStreamReader):
         off = {"snapshot_id": 0}
         if self.start_snapshot_id is not None or self.start_ts_ms is not None:
             meta = _load_meta(self.path)
-            ancestry = self._chain(meta, self._head(meta), 0)  # newest first
+            head = snapshots.ref_head(meta, self.branch)
             if self.start_snapshot_id is not None:
                 if all(sn["snapshot_id"] != self.start_snapshot_id
-                       for sn in ancestry):
+                       for sn in snapshots.ancestry(meta, head)):
                     raise ValueError(
                         f"starting-snapshot-id {self.start_snapshot_id} is "
                         f"not on the streamed ref's ancestry"
                     )
                 off = {"snapshot_id": self.start_snapshot_id}
             else:
-                covered = [sn for sn in ancestry
-                           if sn.get("timestamp_ms", 0) <= self.start_ts_ms]
-                if covered:  # newest committed at-or-before the cutoff
-                    off = {"snapshot_id": covered[0]["snapshot_id"]}
+                covered = snapshots.as_of(meta, self.start_ts_ms, head)
+                if covered is not None:
+                    off = {"snapshot_id": covered["snapshot_id"]}
         self._last = off
         return off
-
-    def _chain(self, meta: dict, from_id: int, back_to: int) -> list[dict]:
-        return _ancestry(meta, from_id, back_to)
 
     def _atomic(self, added, removed, new_dels) -> bool:
         """Commits the rate limit may not split mid-snapshot: CDC
@@ -1222,7 +1119,7 @@ class LakeTableStreamReader(DataSourceStreamReader):
 
     def latestOffset(self) -> dict:
         meta = _load_meta(self.path)
-        head = self._head(meta)
+        head = snapshots.ref_head(meta, self.branch)
         if not head:
             off = {"snapshot_id": 0}
             self._last = off
@@ -1242,19 +1139,11 @@ class LakeTableStreamReader(DataSourceStreamReader):
         # list (it was the oldest retained snapshot of a fresh start —
         # its parent was already expired at plan time); without the
         # marker a missing parent means the added-list the positions
-        # indexed is gone, and _snapshot_changes raises.
+        # indexed is gone, and snapshots.changes raises.
         if "pos" in last:
-            by_id = {sn["snapshot_id"]: sn for sn in meta["snapshots"]}
-            sn = by_id.get(last_sid)
-            if sn is None:
-                raise ValueError(
-                    f"snapshot {last_sid} expired while partially consumed "
-                    f"(pos={last['pos']}); restart from a fresh checkpoint"
-                )
             init = bool(last.get("init"))
-            total = len(
-                _snapshot_changes(meta, sn, initial_load_ok=init)[0]
-            )
+            total = len(snapshots.changes(
+                meta, snapshots.get(meta, last_sid), initial_load_ok=init)[0])
             take = min(total - last["pos"], budget)
             if last["pos"] + take < total:
                 off = {"snapshot_id": last_sid, "pos": last["pos"] + take}
@@ -1263,12 +1152,12 @@ class LakeTableStreamReader(DataSourceStreamReader):
                 self._last = off
                 return off
             budget -= take
-        fresh = not last_sid  # offset 0: expired history = initial load
-        for sn in reversed(self._chain(meta, head, last_sid)):  # oldest first
+        chain = snapshots.ancestry(meta, head, last_sid)
+        for sn in reversed(chain):  # oldest first
             if budget <= 0:
                 break
-            init_ok = fresh and _parent_missing(meta, sn)
-            added, removed, new_dels = _snapshot_changes(
+            init_ok = _initial_load(last_sid, chain, sn)
+            added, removed, new_dels = snapshots.changes(
                 meta, sn, initial_load_ok=init_ok
             )
             if self._atomic(added, removed, new_dels):
@@ -1330,7 +1219,6 @@ class LakeTableStreamReader(DataSourceStreamReader):
         # so old checkpoints keep working).
         s_pos, e_pos = start.get("pos"), end.get("pos")
         meta = _load_meta(self.path)
-        by_id = {sn["snapshot_id"]: sn for sn in meta["snapshots"]}
         self._last = dict(end)  # seed the rate-limit base on restart replay
         if s == e and s_pos == e_pos:
             return []
@@ -1346,7 +1234,7 @@ class LakeTableStreamReader(DataSourceStreamReader):
                 f"{start} — the table's ancestry was rewound (rollback?) "
                 f"under a running stream; restart from a fresh checkpoint"
             )
-        chain = self._chain(meta, e or 0, s)
+        chain = snapshots.ancestry(meta, e or 0, s)
         # slices: (snapshot, lo, hi, initial_ok) — lo/hi bound the
         # snapshot's added-file list, oldest commit first; initial_ok
         # marks the one legal missing-parent case (oldest retained
@@ -1355,19 +1243,14 @@ class LakeTableStreamReader(DataSourceStreamReader):
         slices: list[tuple[dict, int, int | None, bool]] = []
         for sn in reversed(chain):
             hi = e_pos if sn["snapshot_id"] == e else None
-            slices.append((sn, 0, hi, not s and _parent_missing(meta, sn)))
+            slices.append((sn, 0, hi, _initial_load(s, chain, sn)))
         if s and s_pos is not None:
-            ssn = by_id.get(s)
-            if ssn is None:
-                raise ValueError(
-                    f"snapshot {s} expired while partially consumed "
-                    f"(pos={s_pos}); restart from a fresh checkpoint"
-                )
             hi = e_pos if s == e else None
-            slices.insert(0, (ssn, s_pos, hi, bool(start.get("init"))))
+            slices.insert(0, (snapshots.get(meta, s), s_pos, hi,
+                              bool(start.get("init"))))
         parts: list[InputPartition] = []
         for sn, lo, hi, init_ok in slices:
-            added, removed, new_dels = _snapshot_changes(
+            added, removed, new_dels = snapshots.changes(
                 meta, sn, initial_load_ok=init_ok
             )
             sid = sn["snapshot_id"]
@@ -1419,8 +1302,7 @@ class LakeTableStreamReader(DataSourceStreamReader):
         _CowNetPartition). Pure CoW only: a commit that mixes a file
         rewrite with delete files has no per-commit netting story the
         buckets can express — route it to the batch changelog()."""
-        by_id = {s["snapshot_id"]: s for s in meta["snapshots"]}
-        parent = by_id.get(sn.get("parent_id")) or {}
+        parent = snapshots.get(meta, sn["parent_id"])
         if new_dels or parent.get("delete_files") or sn.get("delete_files"):
             raise ValueError(
                 f"cow-changelog netting supports pure copy-on-write "
@@ -1533,34 +1415,20 @@ class LakeTableBatchReader(DataSourceReader):
         head = (
             self.snapshot_id
             if self.snapshot_id is not None
-            else (_ref_head(meta, self.branch) or None)
+            else (snapshots.ref_head(meta, self.branch) or None)
         )
-        if self.ts_ms is not None:
-            # TIMESTAMP AS OF: newest snapshot committed at or before
-            # the cutoff ON THE REQUESTED REF'S ANCESTRY — resolving
-            # over all snapshots would leak branch-staged (unpublished
-            # WAP) commits into a main read.
-            eligible = [
-                sn for sn in _ancestry(meta, head or 0, 0)
-                if sn.get("timestamp_ms", 0) <= self.ts_ms
-            ]
-            if not eligible:
+        snap = None
+        if self.ts_ms is not None:  # TIMESTAMP AS OF the requested ref
+            snap = snapshots.as_of(meta, self.ts_ms, head)
+            if snap is None:
                 raise ValueError(
                     f"no snapshot committed at or before timestamp "
                     f"{self.ts_ms} ms on the requested ref"
                 )
-            head = eligible[0]["snapshot_id"]  # ancestry is newest-first
-        if head is None:
+        elif head is not None:
+            snap = snapshots.get(meta, head)
+        if snap is None:
             return []
-        try:
-            snap = next(
-                s for s in meta["snapshots"] if s["snapshot_id"] == head
-            )
-        except StopIteration:
-            raise ValueError(
-                f"no snapshot {head} (expired or never existed); "
-                f"available: {[s['snapshot_id'] for s in meta['snapshots']]}"
-            ) from None
         if snap.get("delete_files"):
             raise ValueError(
                 "laketable python batch reader does not apply merge-on-read "

@@ -627,6 +627,20 @@ def test_branch_wap_lifecycle(spark, tmp_path):
         t.append(spark.createDataFrame([(7, 7.0)], "k bigint, v double"), branch="nope")
 
 
+def test_time_travel_by_timestamp_ignores_branch_commits(spark, tmp_path):
+    """TIMESTAMP AS OF resolves on main's ancestry: a later commit
+    staged on a branch must not leak into a main time-travel read."""
+    import time
+
+    t = LakeTable.create(spark, str(tmp_path / "tt"), "k bigint")
+    t.append(spark.createDataFrame([(1,)], "k bigint"))
+    t.create_branch("audit")
+    t.append(spark.createDataFrame([(2,)], "k bigint"), branch="audit")
+    now = int(time.time() * 1000) + 1000
+    assert [r["k"] for r in t.read(as_of_ms=now).collect()] == [1]
+    assert [r["k"] for r in t.scan(as_of_ms=now).collect()] == [1]
+
+
 def test_branch_and_main_commits_do_not_clobber(spark, tmp_path):
     """A main commit through a STALE handle must not lose a branch
     commit that landed in between (commit reloads on-disk metadata

@@ -78,6 +78,27 @@ def test_load_table_schema_cache_hits_and_invalidates(spark, tmp_path):
     assert df3.count() == 3
 
 
+def test_schema_cache_sees_nested_part_file_rewrite(spark, tmp_path):
+    """A part file rewritten in place inside a partition subdirectory
+    changes no directory entry, so only a recursive listing key sees
+    it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iceberg_catalog_bench_spark.sources import tables as tmod
+
+    root = tmp_path / "t"
+    part = root / "p=1" / "part-0.parquet"
+    part.parent.mkdir(parents=True)
+    pq.write_table(pa.table({"a": [1, 2, 3]}), part)
+    tmod._SCHEMA_CACHE.clear()
+    assert set(tmod._read_parquet_cached(spark, str(root)).columns) == {"a", "p"}
+    pq.write_table(pa.table({"a": [1, 2, 3], "b": [4, 5, 6]}), part)
+    df = tmod._read_parquet_cached(spark, str(root))
+    assert set(df.columns) == {"a", "b", "p"}
+    assert df.count() == 3
+
+
 def test_fanout_write_width_not_coalesced(spark, tmp_path):
     """The fanout write must repartition at the session's configured
     shuffle width, not AQE's byte-coalesced 1-3 tasks (which would

@@ -17,7 +17,11 @@ import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import pyarrow as pa
+import pytest
+
 from iceberg_catalog_bench_spark.operators.dedup import (
+    _list_matrix,
     _semdedup_assign_arrow,
     _semdedup_assign_ivf_arrow,
     semdedup_centroids,
@@ -139,3 +143,17 @@ def test_ivf_assign_duplicate_heavy_centroids_no_phantom_cid(spark):
     assert len(out) == 5_000
     assert {r["cid"] for r in out} <= set(range(k)), \
         "phantom cluster id leaked"
+
+
+def test_list_matrix_rejects_ragged_and_null_rows():
+    """A batch whose total length divides its row count must not
+    reshape into a misaligned matrix: rows of d-1 and d+1 values (and
+    a null row) raise instead."""
+    d = 4
+    ok = pa.array([[1.0] * d, [2.0] * d])
+    assert _list_matrix(ok).shape == (2, d)
+    assert _list_matrix(ok.slice(1)).tolist() == [[2.0] * d]
+    with pytest.raises(ValueError, match="not a fixed-width matrix"):
+        _list_matrix(pa.array([[1.0] * (d - 1), [2.0] * (d + 1)]))
+    with pytest.raises(ValueError, match="null row"):
+        _list_matrix(pa.array([[1.0] * d, None, [2.0] * d]))

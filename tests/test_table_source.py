@@ -216,10 +216,12 @@ def test_rate_limit_splits_commits_exactly_once(spark, tmp_path):
     """max-files-per-trigger bounds each micro-batch to N added files,
     splitting commits mid-snapshot via (snapshot_id, pos) offsets; the
     union of all batches covers every file exactly once."""
+    from iceberg_catalog_bench_spark.catalog.snapshots import (
+        changes as _snapshot_changes,
+    )
     from iceberg_catalog_bench_spark.streaming.table_source import (
         LakeTableStreamReader,
         _load_meta,
-        _snapshot_changes,
     )
 
     register_source(spark)
