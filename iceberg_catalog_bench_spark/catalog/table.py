@@ -38,6 +38,7 @@ import shutil
 import time
 import urllib.parse
 import uuid
+from collections.abc import Sequence
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any
@@ -47,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import snapshots
+from ._fsutil import unlink_quietly
 from .transforms import Transform, parse_spec, transform_expr
 
 _META_DIR = "_meta"
@@ -56,6 +58,9 @@ _DATA_DIR = "data"
 # releasing it (SIGKILL mid-commit). Same-host pid liveness breaks it
 # sooner; this bound is the portable fallback.
 _LOCK_STALE_SEC = 30.0
+# Commit attempts of a rebasing writer (``_commit_rebased``) before a
+# CommitConflict reaches the caller.
+_COMMIT_ATTEMPTS = 6
 
 # Tombstone sets broadcast only below this on-disk size (snappy parquet
 # ≈ 2-4× smaller than in-memory rows, so 64 MB of files is roughly
@@ -511,6 +516,19 @@ class CommitConflict(Exception):
     """Optimistic-concurrency conflict: the table advanced underneath us."""
 
 
+def _rebase_adding(new_files: Sequence[FileEntry], summary: dict,
+                   new_dels: Sequence[DeleteFileEntry] = ()):
+    """The ``_commit_rebased`` rebase of a blind write — append, key
+    delete, upsert: the head's data and delete files plus this
+    commit's own. Nothing was read, so any head is a valid base."""
+
+    def rebase(cur: Snapshot | None):
+        files, dels = (cur.files, cur.delete_files) if cur else ([], [])
+        return files + list(new_files), summary, dels + list(new_dels)
+
+    return rebase
+
+
 # ---------------------------------------------------------------------------
 # The table
 # ---------------------------------------------------------------------------
@@ -812,6 +830,45 @@ class LakeTable:
             self._write_meta()
             return snap
 
+    def _commit_rebased(self, op: str, rebase, *, branch: str | None = None,
+                        replay: tuple[str, int] | None = None,
+                        written: Sequence[FileEntry | DeleteFileEntry] = ()
+                        ) -> Snapshot | None:
+        """The one optimistic-commit retry path, for writers whose
+        commit can be re-planned against an advanced ref head without
+        re-reading table data. Each attempt reloads (after the first),
+        hands the head of ``branch`` to ``rebase(cur) -> (files,
+        summary, delete_files)`` and commits; on CommitConflict it goes
+        round again, up to ``_COMMIT_ATTEMPTS``, then re-raises.
+        ``rebase`` returning None means nothing is left to commit.
+
+        ``replay=(query_id, batch_id)`` checks the streaming watermark
+        at the start of every attempt: a batch already committed (by a
+        concurrent replay of it) returns None. ``written`` are the
+        files this call wrote for this commit alone; they are unlinked
+        whenever the call ends without committing.
+
+        Row-level ops (delete_where/update/merge/overwrite) use plain
+        ``_commit``: their rewrites depend on the snapshot they read,
+        so a conflict goes back to the caller."""
+        for attempt in range(_COMMIT_ATTEMPTS):
+            if attempt:
+                self._reload()
+            if replay is not None and self._replayed(*replay):
+                unlink_quietly(self.path, [e.path for e in written])
+                return None
+            plan = rebase(self._ref_snapshot(branch))
+            if plan is None:
+                return None
+            files, summary, delete_files = plan
+            try:
+                return self._commit(op, files, summary, branch=branch,
+                                    delete_files=delete_files)
+            except CommitConflict:
+                if attempt == _COMMIT_ATTEMPTS - 1:
+                    unlink_quietly(self.path, [e.path for e in written])
+                    raise
+
     def _snapshot(self, snapshot_id: int | None = None, as_of_ms: int | None = None) -> Snapshot | None:
         """The snapshot an id, a timestamp (resolved on main's
         ancestry) or neither (main's head) names; None on an empty
@@ -1010,7 +1067,7 @@ class LakeTable:
         entries.sort(key=lambda e: e.path)
         return entries
 
-    def append(self, df: DataFrame, _retries: int = 5,
+    def append(self, df: DataFrame,
                branch: str | None = None,
                wap_id: str | None = None) -> Snapshot:
         """Bulk append — reference M1/M6 (`df.writeTo(t).append()`,
@@ -1030,20 +1087,12 @@ class LakeTable:
         the caller must reload and re-run."""
         snapshots.ref_head(self._meta, branch)  # unknown branch: fail before writing
         new_files = self._write_files(df)
-        for attempt in range(_retries + 1):
-            cur = self._ref_snapshot(branch)
-            base = list(cur.files) if cur else []
-            summary = {"added_files": len(new_files),
-                       "added_rows": sum(f.rows for f in new_files)}
-            if wap_id is not None:
-                summary["wap.id"] = wap_id
-            try:
-                return self._commit("append", base + new_files, summary,
-                                    branch=branch)
-            except CommitConflict:
-                if attempt == _retries:
-                    raise
-                self._reload()
+        summary = {"added_files": len(new_files),
+                   "added_rows": sum(f.rows for f in new_files)}
+        if wap_id is not None:
+            summary["wap.id"] = wap_id
+        return self._commit_rebased(
+            "append", _rebase_adding(new_files, summary), branch=branch)
 
     def last_streaming_batch(self, query_id: str = "default") -> int | None:
         """Most recent micro-batch id committed for ``query_id``, read
@@ -1057,9 +1106,14 @@ class LakeTable:
                 return int(summ["streaming.batch-id"])
         return None
 
+    def _replayed(self, query_id: str, batch_id: int) -> bool:
+        """``batch_id`` is at or below ``query_id``'s committed
+        watermark: a replay of a batch that already landed."""
+        last = self.last_streaming_batch(query_id)
+        return last is not None and batch_id <= last
+
     def streaming_append(self, df: DataFrame, batch_id: int,
-                         query_id: str = "default",
-                         _retries: int = 5) -> Snapshot | None:
+                         query_id: str = "default") -> Snapshot | None:
         """Replay-idempotent ``foreachBatch`` append — Iceberg's
         streaming-sink contract (reference: idempotent re-run
         semantics, ICEBERG-Interoperability-Test-Spec.md:70): the
@@ -1081,16 +1135,14 @@ class LakeTable:
         normal commit lock: the loser sees CommitConflict, re-checks
         the pointer, skips, and unlinks its duplicate files."""
         self._reload()
-        last = self.last_streaming_batch(query_id)
-        if last is not None and batch_id <= last:
+        if self._replayed(query_id, batch_id):
             return None
         return self.commit_streaming_files(
-            self._write_files(df), batch_id, query_id, _retries=_retries
+            self._write_files(df), batch_id, query_id
         )
 
     def commit_data_files(self, new_files: list["FileEntry"],
-                          overwrite: bool = False,
-                          _retries: int = 5) -> Snapshot:
+                          overwrite: bool = False) -> Snapshot:
         """Publish ALREADY-WRITTEN data files as one batch append (or
         overwrite) commit — the driver-side half of the `laketable`
         batch writer (``df.write.format("laketable")``). Appends
@@ -1098,23 +1150,17 @@ class LakeTable:
         are written once; only the metadata commit re-bases); an
         overwrite replaces the file set wholesale. Metadata +
         filesystem only — no SparkSession needed."""
-        for attempt in range(_retries + 1):
-            summary = {"added_files": len(new_files),
-                       "added_rows": sum(f.rows for f in new_files)}
-            try:
-                if overwrite:
-                    return self._commit("overwrite", list(new_files), summary)
-                cur = self._snapshot()
-                base = list(cur.files) if cur else []
-                return self._commit("append", base + new_files, summary)
-            except CommitConflict:
-                if attempt == _retries:
-                    raise
-                self._reload()
+        summary = {"added_files": len(new_files),
+                   "added_rows": sum(f.rows for f in new_files)}
+        if overwrite:
+            return self._commit_rebased(
+                "overwrite", lambda cur: (list(new_files), summary, None))
+        return self._commit_rebased(
+            "append", _rebase_adding(new_files, summary))
 
     def commit_streaming_files(self, new_files: list["FileEntry"],
-                               batch_id: int, query_id: str = "default",
-                               _retries: int = 5) -> Snapshot | None:
+                               batch_id: int, query_id: str = "default"
+                               ) -> Snapshot | None:
         """Publish ALREADY-WRITTEN data files as one replay-idempotent
         streaming append — the driver-side half of the `laketable`
         streaming SINK (executor tasks write the files, this commits
@@ -1125,38 +1171,14 @@ class LakeTable:
         location so a fresh checkpoint is a fresh identity). Metadata
         + filesystem only — safe to call without a SparkSession
         (``LakeTable.load(None, path)``)."""
-
-        def _discard(files: list[FileEntry]) -> None:
-            for e in files:
-                try:
-                    os.remove(os.path.join(self.path, e.path))
-                except OSError:
-                    pass  # remove_orphan_files collects any leftovers
-
         self._reload()
-        last = self.last_streaming_batch(query_id)
-        if last is not None and batch_id <= last:
-            _discard(new_files)
-            return None
-        for attempt in range(_retries + 1):
-            cur = self._snapshot()
-            base = list(cur.files) if cur else []
-            try:
-                return self._commit(
-                    "append", base + new_files,
-                    {"added_files": len(new_files),
-                     "added_rows": sum(f.rows for f in new_files),
-                     "streaming.query-id": query_id,
-                     "streaming.batch-id": int(batch_id)},
-                )
-            except CommitConflict:
-                self._reload()
-                last = self.last_streaming_batch(query_id)
-                if last is not None and batch_id <= last:
-                    _discard(new_files)
-                    return None
-                if attempt == _retries:
-                    raise
+        summary = {"added_files": len(new_files),
+                   "added_rows": sum(f.rows for f in new_files),
+                   "streaming.query-id": query_id,
+                   "streaming.batch-id": int(batch_id)}
+        return self._commit_rebased(
+            "append", _rebase_adding(new_files, summary),
+            replay=(query_id, batch_id), written=new_files)
 
     def overwrite(self, df: DataFrame) -> Snapshot:
         new_files = self._write_files(df)
@@ -1166,8 +1188,7 @@ class LakeTable:
 
     def overwrite_partitions(self, df: DataFrame,
                              static: dict[str, Any] | None = None,
-                             branch: str | None = None,
-                             _retries: int = 5) -> Snapshot:
+                             branch: str | None = None) -> Snapshot:
         """INSERT OVERWRITE — Iceberg's ``ReplacePartitions`` /
         ``df.writeTo(t).overwritePartitions()``.
 
@@ -1251,12 +1272,10 @@ class LakeTable:
             def replaced(part: dict[str, str]) -> bool:
                 return tuple(sorted(part.items())) in touched
 
-        for attempt in range(_retries + 1):
-            cur = self._ref_snapshot(branch)
-            base = list(cur.files) if cur else []
+        def rebase(cur: Snapshot | None):
             carried: list[FileEntry] = []
             n_replaced = 0
-            for f in base:
+            for f in (cur.files if cur else []):
                 if set(f.partition.keys()) != current_keys:
                     raise ValueError(
                         f"cannot overwrite partitions: {f.path} was written "
@@ -1278,13 +1297,9 @@ class LakeTable:
                     })
                 ),
             }
-            try:
-                return self._commit("overwrite", carried + new_files, summary,
-                                    branch=branch)
-            except CommitConflict:
-                if attempt == _retries:
-                    raise
-                self._reload()
+            return carried + new_files, summary, None
+
+        return self._commit_rebased("overwrite", rebase, branch=branch)
 
     def insert_rows(self, rows: list[tuple]) -> Snapshot:
         """INSERT INTO ... VALUES — reference M1
@@ -1560,21 +1575,14 @@ class LakeTable:
         # Blind write → safe to auto-retry on conflict, like append:
         # rebase onto the advanced snapshot (sequence numbers keep the
         # delete applying only to files older than THIS commit).
-        for attempt in range(6):
-            snap = self._snapshot()
-            try:
-                out = self._commit(
-                    "delete", list(snap.files),
-                    {"equality_delete_keys": sum(d.rows for d in new_dels),
-                     "added_delete_files": len(new_dels), "mode": "merge-on-read"},
-                    delete_files=list(snap.delete_files) + new_dels,
-                )
-                self._maybe_auto_compact()
-                return out
-            except CommitConflict:
-                if attempt == 5:
-                    raise
-                self._reload()
+        out = self._commit_rebased("delete", _rebase_adding(
+            [],
+            {"equality_delete_keys": sum(d.rows for d in new_dels),
+             "added_delete_files": len(new_dels), "mode": "merge-on-read"},
+            new_dels,
+        ))
+        self._maybe_auto_compact()
+        return out
 
     def upsert_by_keys(self, df: DataFrame,
                        on: list[str] | None = None) -> Snapshot:
@@ -1622,29 +1630,20 @@ class LakeTable:
         # advanced snapshot; commit order serializes concurrent writers
         # (this upsert's retraction applies to everything older than
         # its own commit, so the later commit's images win per key).
-        for attempt in range(6):
-            snap = self._snapshot()
-            base = list(snap.files) if snap else []
-            base_dels = list(snap.delete_files) if snap else []
-            try:
-                out = self._commit(
-                    "upsert", base + new_files,
-                    {"upserted_rows": sum(e.rows for e in new_files),
-                     "equality_delete_keys": sum(d.rows for d in new_dels),
-                     "mode": "merge-on-read"},
-                    delete_files=base_dels + new_dels,
-                )
-                self._maybe_auto_compact()
-                return out
-            except CommitConflict:
-                if attempt == 5:
-                    raise
-                self._reload()
+        out = self._commit_rebased("upsert", _rebase_adding(
+            new_files,
+            {"upserted_rows": sum(e.rows for e in new_files),
+             "equality_delete_keys": sum(d.rows for d in new_dels),
+             "mode": "merge-on-read"},
+            new_dels,
+        ))
+        self._maybe_auto_compact()
+        return out
 
     def apply_cdc_batch(self, batch_df: DataFrame,
                         on: list[str] | None = None, *,
-                        batch_id: int, query_id: str = "default",
-                        _retries: int = 5) -> Snapshot | None:
+                        batch_id: int, query_id: str = "default"
+                        ) -> Snapshot | None:
         """Apply one CDC micro-batch — rows carrying ``_change_type``
         ('insert'/'delete') and ``_commit_snapshot_id``, the
         `laketable` ``mode=cdc`` feed schema — as ONE replay-idempotent
@@ -1687,8 +1686,7 @@ class LakeTable:
             raise ValueError(f"not a CDC feed batch: missing {sorted(missing)}")
         data_cols = [c for c in batch_df.columns if c not in meta_cols]
         self._reload()
-        last = self.last_streaming_batch(query_id)
-        if last is not None and batch_id <= last:
+        if self._replayed(query_id, batch_id):
             return None
         ins_flag = (F.col("_change_type") == "insert").cast("int")
         others = [c for c in data_cols if c not in on]
@@ -1707,38 +1705,22 @@ class LakeTable:
         new_dels = self._write_equality_delete_files(keys, list(on))
         if not new_files and not new_dels:
             return None  # empty batch: nothing to publish, no watermark
-
-        def _discard() -> None:
-            for e in [*new_files, *new_dels]:
-                try:
-                    os.remove(os.path.join(self.path, e.path))
-                except OSError:
-                    pass
-
-        for attempt in range(_retries + 1):
-            snap = self._snapshot()
-            base = list(snap.files) if snap else []
-            base_dels = list(snap.delete_files) if snap else []
-            try:
-                out = self._commit(
-                    "upsert", base + new_files,
-                    {"upserted_rows": sum(e.rows for e in new_files),
-                     "equality_delete_keys": sum(d.rows for d in new_dels),
-                     "mode": "merge-on-read",
-                     "streaming.query-id": query_id,
-                     "streaming.batch-id": int(batch_id)},
-                    delete_files=base_dels + new_dels,
-                )
-                self._maybe_auto_compact()
-                return out
-            except CommitConflict:
-                self._reload()
-                last = self.last_streaming_batch(query_id)
-                if last is not None and batch_id <= last:
-                    _discard()
-                    return None
-                if attempt == _retries:
-                    raise
+        out = self._commit_rebased(
+            "upsert",
+            _rebase_adding(
+                new_files,
+                {"upserted_rows": sum(e.rows for e in new_files),
+                 "equality_delete_keys": sum(d.rows for d in new_dels),
+                 "mode": "merge-on-read",
+                 "streaming.query-id": query_id,
+                 "streaming.batch-id": int(batch_id)},
+                new_dels,
+            ),
+            replay=(query_id, batch_id), written=[*new_files, *new_dels],
+        )
+        if out is not None:
+            self._maybe_auto_compact()
+        return out
 
     def read(self, snapshot_id: int | None = None, as_of_ms: int | None = None) -> DataFrame:
         """Current-or-time-travel read — reference T2/T3 (VERSION AS OF /
@@ -1927,7 +1909,7 @@ class LakeTable:
             rows or [], "snapshot_id bigint, timestamp_ms bigint"
         )
 
-    def cherrypick_snapshot(self, snapshot_id: int, _retries: int = 5) -> Snapshot:
+    def cherrypick_snapshot(self, snapshot_id: int) -> Snapshot:
         """CALL system.cherrypick_snapshot — apply one snapshot's NET
         CHANGES on top of the current main head as a new commit
         (Iceberg's WAP publish primitive for the case ``fast_forward``
@@ -1957,8 +1939,21 @@ class LakeTable:
                 f"file(s) — re-run the operation against the current head)"
             )
         wap_id = (target.get("summary") or {}).get("wap.id")
-        for attempt in range(_retries + 1):
-            cur = self._snapshot()
+        fresh = []
+        for f in added:
+            c = FileEntry.from_json(f)
+            c.seq = None  # _commit stamps the publishing snapshot's seq
+            fresh.append(c)
+        summary = {
+            "cherry_picked_from": snapshot_id,
+            "added_files": len(fresh),
+            "added_rows": sum(f.rows for f in fresh),
+        }
+        if wap_id is not None:
+            summary["published-wap-id"] = wap_id
+        add_fresh = _rebase_adding(fresh, summary)
+
+        def rebase(cur: Snapshot | None):
             # Double-publish guard along the MAIN ancestry: the same
             # staged snapshot (by id, or by wap.id) must not land twice.
             for node in snapshots.ancestry(
@@ -1977,27 +1972,11 @@ class LakeTable:
                 raise ValueError(
                     f"snapshot {snapshot_id}'s files are already present on main"
                 )
-            fresh = []
-            for f in added:
-                c = FileEntry.from_json(f)
-                c.seq = None  # _commit stamps the publishing snapshot's seq
-                fresh.append(c)
-            summary = {
-                "cherry_picked_from": snapshot_id,
-                "added_files": len(fresh),
-                "added_rows": sum(f.rows for f in fresh),
-            }
-            if wap_id is not None:
-                summary["published-wap-id"] = wap_id
-            base = list(cur.files) if cur else []
-            try:
-                return self._commit("cherrypick", base + fresh, summary)
-            except CommitConflict:
-                if attempt == _retries:
-                    raise
-                self._reload()
+            return add_fresh(cur)
 
-    def publish_changes(self, wap_id: str, _retries: int = 5) -> Snapshot:
+        return self._commit_rebased("cherrypick", rebase)
+
+    def publish_changes(self, wap_id: str) -> Snapshot:
         """CALL system.publish_changes — Iceberg's publish-by-wap-id:
         find the snapshot STAGED with ``wap.id = wap_id`` (an
         ``append(..., wap_id=...)``, typically on an audit branch) and
@@ -2020,9 +1999,7 @@ class LakeTable:
                 f"({[s['snapshot_id'] for s in matches]}); WAP ids must be "
                 f"unique per staged change"
             )
-        return self.cherrypick_snapshot(
-            matches[0]["snapshot_id"], _retries=_retries
-        )
+        return self.cherrypick_snapshot(matches[0]["snapshot_id"])
 
     # -- tags (named snapshot refs, Iceberg v2 refs) -------------------------
 
@@ -3795,7 +3772,7 @@ class LakeTable:
 
         return sync_iceberg_metadata(self, metadata_path)
 
-    def add_files(self, parquet_dir: str, _retries: int = 5) -> Snapshot:
+    def add_files(self, parquet_dir: str) -> Snapshot:
         """CALL system.add_files — import an EXISTING plain-parquet
         directory's files into this table as one append commit WITHOUT
         rewriting a byte (Iceberg's ``add_files`` procedure; the
@@ -3840,20 +3817,12 @@ class LakeTable:
             )
         version = self._meta["current_schema_version"]
         entries = _external_footer_entries(src_files, version)
-        for attempt in range(_retries + 1):
-            cur = self._snapshot()
-            base = list(cur.files) if cur else []
-            try:
-                return self._commit(
-                    "append", base + entries,
-                    {"added_files": len(entries),
-                     "added_rows": sum(e.rows for e in entries),
-                     "imported_from": parquet_dir},
-                )
-            except CommitConflict:
-                if attempt == _retries:
-                    raise
-                self._reload()
+        return self._commit_rebased("append", _rebase_adding(
+            entries,
+            {"added_files": len(entries),
+             "added_rows": sum(e.rows for e in entries),
+             "imported_from": parquet_dir},
+        ))
 
     # -- table statistics (Iceberg Puffin role: ANALYZE TABLE) ---------------
 
@@ -4068,9 +4037,15 @@ class LakeTable:
         """CALL system.rewrite_manifests — reference P2. Our manifest is
         one JSON document; rewriting = dropping per-file stats entries
         for columns nobody can prune on (compaction of metadata)."""
-        before = len(json.dumps(self._meta))
-        self._write_meta()
-        return {"rewritten_manifests_count": 1, "metadata_bytes": before}
+        out = {"rewritten_manifests_count": 1}
+
+        def measure():
+            out["metadata_bytes"] = len(json.dumps(self._meta))
+
+        # reload under the lock: a stale handle must not publish its
+        # old snapshot list over commits that landed since it loaded
+        self._locked_meta_mutation(measure)
+        return out
 
     def compact_delete_files(self) -> dict:
         """CALL system.compact_delete_files — the DELETE-side-only MoR
@@ -4088,22 +4063,21 @@ class LakeTable:
         alone (their application window is sequence-gated, so merging
         them would need seq-preserving splits — fold them with
         rewrite_position_delete_files / rewrite_data_files instead)."""
-        result = {"rewritten_delete_files_count": 0,
-                  "added_delete_files_count": 0,
-                  "removed_dangling_rows": 0}
-        # conflict retry restarts the WHOLE consolidation: the kept
+        new_dels: list[DeleteFileEntry] = []  # the current attempt's output
+
+        # a conflict retry restarts the WHOLE consolidation: the kept
         # tombstone set is live-file-relative, so rebasing the commit
         # onto a snapshot whose files changed would ship tombstones
         # semi-joined against a stale live set (re-introducing the
         # dangling rows this procedure exists to prune)
-        for attempt in range(6):
-            snap = self._snapshot()
-            if snap is None:
-                return result
-            pos_dels = [d for d in snap.delete_files
+        def rebase(snap: Snapshot | None):
+            # a conflicted attempt's output is referenced by no snapshot
+            unlink_quietly(self.path, [d.path for d in new_dels])
+            new_dels.clear()
+            pos_dels = [d for d in (snap.delete_files if snap else [])
                         if d.content == "position"]
             if not pos_dels:
-                return result
+                return None
             live_abs = [os.path.join(self.path, e.path) for e in snap.files]
             tomb = self.spark.read.parquet(
                 *[os.path.join(self.path, d.path) for d in pos_dels]
@@ -4112,37 +4086,25 @@ class LakeTable:
                 [(p,) for p in live_abs], "file_path string")
             kept = tomb.join(F.broadcast(live_df), "file_path", "left_semi")
             n_before = sum(d.rows for d in pos_dels)
-            new_dels = (self._write_delete_files(kept)
-                        if not kept.isEmpty() else [])
+            if not kept.isEmpty():
+                new_dels.extend(self._write_delete_files(kept))
             n_after = sum(d.rows for d in new_dels)
             carried = [d for d in snap.delete_files
                        if d.content != "position"]
-            try:
-                self._commit(
-                    "rewrite-deletes", list(snap.files),
-                    {"rewritten_delete_files": len(pos_dels),
-                     "removed_dangling_rows": n_before - n_after},
-                    delete_files=carried + new_dels,
-                )
-                break
-            except CommitConflict:
-                # unlink this attempt's never-referenced output and
-                # re-derive from the advanced snapshot
-                for e in new_dels:
-                    try:
-                        os.remove(os.path.join(self.path, e.path))
-                    except OSError:
-                        pass
-                if attempt == 5:
-                    raise
-                self._reload()
+            summary = {"rewritten_delete_files": len(pos_dels),
+                       "removed_dangling_rows": n_before - n_after}
+            return list(snap.files), summary, carried + new_dels
+
+        snap = self._commit_rebased("rewrite-deletes", rebase,
+                                    written=new_dels)
         # old delete-file parquet stays on disk: PRIOR snapshots still
         # reference it (time travel); expire_snapshots sweeps it once
         # those snapshots age out
-        result["rewritten_delete_files_count"] = len(pos_dels)
-        result["added_delete_files_count"] = len(new_dels)
-        result["removed_dangling_rows"] = n_before - n_after
-        return result
+        summary = snap.summary if snap else {}
+        return {"rewritten_delete_files_count":
+                summary.get("rewritten_delete_files", 0),
+                "added_delete_files_count": len(new_dels),
+                "removed_dangling_rows": summary.get("removed_dangling_rows", 0)}
 
     def expire_snapshots(self, retain_last: int = 2,
                          older_than_ms: int | None = None) -> dict:

@@ -596,8 +596,9 @@ class SqlEngine:
         )
         if m:
             t = self.table(m.group(1))
-            t._meta["sort_order"] = [c.strip() for c in m.group(2).split(",")]
-            t._write_meta()
+            order = [c.strip() for c in m.group(2).split(",")]
+            t._locked_meta_mutation(
+                lambda: t._meta.update(sort_order=order))
             return StatementResult(s, metadata={"op": "set_sort_order"})
 
         # P5: ALTER [ICEBERG] TABLE ... REFRESH (snowflake.sql:390) —

@@ -153,6 +153,7 @@ from pyspark.sql.datasource import (
 )
 
 from ..catalog import snapshots
+from ..catalog._fsutil import unlink_quietly
 
 _META_REL = os.path.join("_meta", "metadata.json")
 
@@ -2087,12 +2088,8 @@ def _message_entries(messages, schema_version: int):
 
 
 def _unlink_messages(path: str, messages) -> None:
-    for m in messages:
-        for f in (getattr(m, "files", None) or []):
-            try:
-                os.remove(os.path.join(path, f["rel"]))
-            except OSError:
-                pass
+    unlink_quietly(path, (f["rel"] for m in messages
+                          for f in (getattr(m, "files", None) or [])))
 
 
 class LakeTableDataSource(DataSource):

@@ -12,6 +12,7 @@ would have.
 
 import multiprocessing as mp
 import os
+import time
 
 from iceberg_catalog_bench_spark.catalog.table import LakeTable
 
@@ -27,6 +28,13 @@ def _writer(table_path: str, wid: int, out_dir: str) -> None:
     )
 
     t = LakeTable.load(None, table_path)
+    # start barrier: interpreter start-up varies by more than one
+    # writer's whole run, so without it the writers may never overlap
+    open(os.path.join(out_dir, f"ready-{wid}"), "w").close()
+    deadline = time.monotonic() + 60
+    while (sum(n.startswith("ready-") for n in os.listdir(out_dir))
+           < _N_WRITERS and time.monotonic() < deadline):
+        time.sleep(0.001)
     conflicts = 0
     for i in range(_N_COMMITS):
         while True:

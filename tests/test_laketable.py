@@ -431,6 +431,39 @@ def test_concurrent_metadata_mutation_no_lost_commit(spark, tmp_path):
     t4 = LakeTable.load(spark, p)
     assert t4._meta["current_snapshot_id"] == 2
     assert t4.read_tag("after-evolve").count() == 2
+    t1.append(spark.createDataFrame([(3, 3.0)], "id bigint, v double"))
+    t2.rewrite_manifests()  # maintenance from a stale handle
+    t5 = LakeTable.load(spark, p)
+    assert t5._meta["current_snapshot_id"] == 3, "append must survive rewrite"
+    assert t5.read().count() == 3
+
+
+def test_sql_write_ordered_by_keeps_concurrent_append(spark, tmp_path, monkeypatch):
+    """ALTER TABLE ... WRITE ORDERED BY must reload under the commit
+    lock: a commit landing between the engine's table load and the
+    sort-order write must survive it."""
+    from iceberg_catalog_bench_spark.engine import SqlEngine
+
+    e = SqlEngine(spark, str(tmp_path / "wh"))
+    e.execute("CREATE TABLE so (id bigint, v double)")
+    e.execute("INSERT INTO so VALUES (1, 1.0)")
+    load = e.table
+    landed = []
+
+    def load_then_rival_appends(ident):
+        t = load(ident)
+        rival = load(ident)
+        landed.append(rival.append(
+            spark.createDataFrame([(2, 2.0)], "id bigint, v double")))
+        return t
+
+    monkeypatch.setattr(e, "table", load_then_rival_appends)
+    e.execute("ALTER TABLE so WRITE ORDERED BY v, id")
+    monkeypatch.undo()
+    t = e.table("so")
+    assert t._meta["current_snapshot_id"] == landed[0].snapshot_id
+    assert t._meta["sort_order"] == ["v", "id"]
+    assert t.read().count() == 2
 
 
 def test_expire_snapshots_keeps_tagged(spark, tmp_path):
