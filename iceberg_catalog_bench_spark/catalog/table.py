@@ -40,14 +40,14 @@ import urllib.parse
 import uuid
 from collections.abc import Sequence
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import snapshots
+from . import snapshots, spark_xxhash
 from ._fsutil import unlink_quietly
 from .transforms import Transform, parse_spec, transform_expr
 
@@ -321,6 +321,47 @@ def _calendar_floor(transform: str, val: Any) -> str | None:
     return s[:4] + "-01-01 00:00:00"
 
 
+def _tv_key(t: Transform, val: Any) -> tuple:
+    return (t.name, t.column, t.param, repr(val))
+
+
+def _driver_transform_value(t: Transform, col_type: str,
+                            val: Any) -> str | None:
+    """``t`` of the literal ``val`` cast to ``col_type``, computed
+    without Spark, or None where only a Spark eval is exact (a literal
+    whose cast Spark might round, wrap or parse)."""
+    base = col_type.strip().lower().split("(")[0]
+    coerced: Any = None
+    if base in spark_xxhash.INT_BITS and not isinstance(val, bool) and (
+            isinstance(val, int)
+            or isinstance(val, float) and val.is_integer()):
+        coerced = int(val)
+    elif base == "string" and isinstance(val, str):
+        coerced = val
+    elif base == "date" and isinstance(val, str) and t.name == "ibucket":
+        import datetime as _dt
+
+        try:
+            coerced = _dt.date.fromisoformat(val[:10])
+        except ValueError:
+            return None
+    if coerced is None:
+        return None
+    if t.name in ("identity", "bucket"):
+        if not spark_xxhash.fits(coerced, base):
+            return None
+        if t.name == "bucket":
+            return str(spark_xxhash.bucket(coerced, base, t.param))
+        return str(coerced)
+    if t.name == "ibucket":
+        from .iceberg_bucket import iceberg_bucket
+
+        return str(iceberg_bucket(coerced, t.param))
+    if t.name == "itruncate" and isinstance(coerced, int):
+        return str(coerced - coerced % t.param)
+    return None
+
+
 def _map_free(dt: T.DataType) -> bool:
     """True when no MapType appears anywhere in the type tree."""
     if isinstance(dt, T.MapType):
@@ -415,6 +456,38 @@ def _align_read_col(col, inferred: T.DataType | None, target: str):
             F.make_dt_interval(F.lit(0), F.lit(0), F.lit(0), secs),
         ).cast(target)
     return col.cast(target)
+
+
+_SPARK_ROW_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without the schema-inference job.
+
+    Without ``mergeSchema``, Spark infers a parquet read's schema from
+    ONE footer: that of the first file in path-string order
+    (``ParquetUtils.splitFiles`` sorts). It takes the Spark row schema
+    stored under ``org.apache.spark.sql.parquet.row.metadata`` when the
+    footer has one, and converts the parquet types otherwise. Reading
+    that key with pyarrow gives the same schema without a Spark job
+    (about 110 ms a read on 4 cores). Directories, ``mergeSchema`` and
+    files without the key (pyarrow-written or foreign files, whose
+    types need Spark's conversion) keep Spark's inference."""
+    reader = spark.read
+    if (paths and all(os.path.isfile(p) for p in paths)
+            and spark.conf.get("spark.sql.parquet.mergeSchema",
+                               "false").lower() != "true"):
+        import pyarrow.parquet as pq
+
+        kv = pq.read_metadata(min(paths)).metadata or {}
+        row_schema = kv.get(_SPARK_ROW_SCHEMA_KEY)
+        if row_schema is not None:
+            try:
+                reader = reader.schema(
+                    T.StructType.fromJson(json.loads(row_schema)))
+            except (ValueError, KeyError, TypeError):
+                pass  # an unparsable row schema: let Spark decide
+    return reader.parquet(*paths)
 
 
 def _norm_stat(v: Any) -> Any:
@@ -912,9 +985,15 @@ class LakeTable:
 
     # -- write path ----------------------------------------------------------
 
-    def _write_files(self, df: DataFrame, cluster: bool = True) -> list[FileEntry]:
+    def _write_files(self, df: DataFrame, cluster: bool = True,
+                     split_by: Sequence[str] = ()) -> list[FileEntry]:
         """Write a DataFrame as new parquet data files; collect per-file
         stats from the parquet footers (driver-side metadata-only read).
+
+        ``split_by`` (with ``cluster=False``) names extra columns of
+        ``df`` the files are split on as they are written, in the order
+        ``df`` arrives; each file's ``partition`` then holds their
+        values instead of transform values (compaction maps them back).
 
         With a partition spec, rows are physically SPLIT by transform
         value (``write.partitionBy`` on materialized transform columns)
@@ -940,10 +1019,10 @@ class LakeTable:
         out_dir = os.path.join(self.path, _DATA_DIR, sub)
         fields = self._fields()
         cols = [F.col(f.name).cast(f.type).alias(f.name) for f in fields]
-        df = df.select(*cols)
+        df = df.select(*cols, *split_by)
 
         spec = self.partition_spec if cluster else []
-        pcols: list[str] = []
+        pcols: list[str] = list(split_by)
         if spec:
             type_of = {f.name: f.type for f in fields}
             for t in spec:
@@ -1213,9 +1292,11 @@ class LakeTable:
         ADD/DROP PARTITION FIELD, or before the table gained a spec)
         record different partition keys and cannot be value-matched by
         the current spec; silently keeping them could retain rows the
-        caller asked to replace, so finding one raises — run
-        ``rewrite_data_files`` to rewrite old-generation files into the
-        current layout first. Like :meth:`append`, the commit auto-
+        caller asked to replace, so finding one raises — rewrite the
+        table under the current spec first with a full
+        ``t.overwrite(t.read())`` (compaction keeps each file group's
+        recorded keys, so ``rewrite_data_files`` does not migrate
+        them). Like :meth:`append`, the commit auto-
         retries on conflicts: the replacement set is determined by
         partition VALUES, not by a read of table data, so recomputing
         the carried set against the advanced head is safe.
@@ -1281,7 +1362,8 @@ class LakeTable:
                         f"cannot overwrite partitions: {f.path} was written "
                         f"under a different partition-spec generation "
                         f"(keys {sorted(f.partition.keys())} vs current "
-                        f"{sorted(current_keys)}); rewrite_data_files first"
+                        f"{sorted(current_keys)}); rewrite the table under "
+                        f"the current spec first, e.g. t.overwrite(t.read())"
                     )
                 if replaced(f.partition):
                     n_replaced += 1
@@ -1337,7 +1419,7 @@ class LakeTable:
         for v, group in by_version.items():
             old_fields = {f.id: f for f in self._fields(v)}
             paths = [os.path.join(self.path, e.path) for e in group]
-            raw = self.spark.read.parquet(*paths)
+            raw = _read_parquet(self.spark, *paths)
             inferred = {sf.name: sf.dataType for sf in raw.schema.fields}
             sel = []
             for f in target_fields:
@@ -1400,7 +1482,7 @@ class LakeTable:
                 # normalize BOTH sides: a foreign writer may record URI
                 # spellings (file:///...) INSIDE the delete parquet, not
                 # just in manifest metadata
-                tomb = self.spark.read.parquet(*del_paths).select(
+                tomb = _read_parquet(self.spark, *del_paths).select(
                     F.regexp_replace("file_path", "^file:/+", "/").alias("file_path"),
                     "pos",
                 )
@@ -1436,8 +1518,8 @@ class LakeTable:
                 for cols, group in by_cols.items():
                     tombs = None
                     for d in group:
-                        one = self.spark.read.parquet(
-                            os.path.join(self.path, d.path)
+                        one = _read_parquet(
+                            self.spark, os.path.join(self.path, d.path)
                         ).select(
                             *[
                                 F.col(fc).alias(f"_del_{c}")
@@ -1479,7 +1561,16 @@ class LakeTable:
         tombstones.select(
             F.col("file_path").cast("string"), F.col("pos").cast("bigint")
         ).write.mode("overwrite").parquet(out_dir)
-        back = self.spark.read.parquet(out_dir)
+        import pyarrow.parquet as pq
+
+        written = []  # (path, rows) of the non-empty part files
+        for dirpath, _dirs, files in os.walk(out_dir):
+            for fn in sorted(files):
+                if fn.endswith(".parquet"):
+                    full = os.path.join(dirpath, fn)
+                    rows = pq.ParquetFile(full).metadata.num_rows
+                    if rows:
+                        written.append((full, rows))
 
         def _entry_dialect(p: str) -> str:
             # must spell EXACTLY like the FileEntry it tombstones:
@@ -1492,31 +1583,25 @@ class LakeTable:
             return (os.path.relpath(ap, self.path)
                     if ap.startswith(self.path + os.sep) else ap)
 
-        referenced = sorted(
-            _entry_dialect(r["file_path"])
-            for r in back.select("file_path").distinct().collect()
-        )
-        entries: list[DeleteFileEntry] = []
-        import pyarrow.parquet as pq
-
-        for dirpath, _dirs, files in os.walk(out_dir):
-            for fn in sorted(files):
-                if not fn.endswith(".parquet"):
-                    continue
-                full = os.path.join(dirpath, fn)
-                md = pq.ParquetFile(full).metadata
-                if md.num_rows == 0:
-                    continue
-                entries.append(
-                    DeleteFileEntry(
-                        path=os.path.relpath(full, self.path),
-                        rows=md.num_rows,
-                        bytes=os.path.getsize(full),
-                        referenced=referenced,
-                        seq=None,  # assigned at commit
-                    )
-                )
-        return entries
+        # the referenced paths come from the written files' one
+        # dictionary-encoded column, driver-side: a Spark distinct
+        # would cost two jobs for what is a dimension-sized set
+        referenced = sorted({
+            _entry_dialect(p)
+            for full, _ in written
+            for p in pq.read_table(full, columns=["file_path"])
+            .column("file_path").unique().to_pylist()
+        })
+        return [
+            DeleteFileEntry(
+                path=os.path.relpath(full, self.path),
+                rows=rows,
+                bytes=os.path.getsize(full),
+                referenced=referenced,
+                seq=None,  # assigned at commit
+            )
+            for full, rows in written
+        ]
 
     def _write_equality_delete_files(
         self, keys: DataFrame, cols: list[str]
@@ -2192,64 +2277,54 @@ class LakeTable:
     )
 
     def _transform_value(self, t: Transform, val: Any) -> str | None:
-        """Apply a partition transform to a literal, driver-side, via a
-        1-row Spark eval (so bucket hashing etc. match the write path
-        exactly). Memoized — one tiny job per distinct (transform,
-        literal) per table handle."""
-        key = (t.name, t.column, t.param, repr(val))
-        cache = getattr(self, "_tv_cache", None)
-        if cache is None:
-            cache = self._tv_cache = {}
-        if key in cache:
-            return cache[key]
-        fld = next((f for f in self._fields() if f.name == t.column), None)
-        if fld is None:
-            cache[key] = None
-            return None
-        # ibucket/itruncate over the exactly-coercible types compute
-        # driver-side (hash-identical by construction — the pandas-UDF
-        # write path and iceberg_bucket() share the encoder, pinned in
-        # test_iceberg_bucket): an IN-list point lookup on a bucketed
-        # table costs |members| dict lookups, not |members| 1-row
-        # Spark jobs. Anything type-ambiguous (timestamp/decimal
-        # literals) falls through to the Spark eval below.
-        base = fld.type.strip().lower().split("(")[0]
-        if t.name in ("ibucket", "itruncate"):
-            from .iceberg_bucket import iceberg_bucket
+        """The partition value ``t`` gives the literal ``val`` (see
+        :meth:`_transform_values`)."""
+        return self._transform_values([(t, val)])[_tv_key(t, val)]
 
-            coerced = None
-            if base in ("int", "integer", "bigint", "long", "smallint",
-                        "tinyint", "short", "byte") and \
-                    isinstance(val, (int, float)) and \
-                    not isinstance(val, bool) and float(val).is_integer():
-                coerced = int(val)
-            elif base == "string" and isinstance(val, str):
-                coerced = val
-            elif base == "date" and isinstance(val, str):
-                import datetime as _dt
+    def _transform_values(
+        self, pairs: Sequence[tuple[Transform, Any]]
+    ) -> dict[tuple, str | None]:
+        """Partition values of ``(transform, literal)`` pairs, as the
+        write path spells them, keyed by ``_tv_key``. Memoized per
+        table handle.
 
-                try:
-                    coerced = _dt.date.fromisoformat(val[:10])
-                except ValueError:
-                    coerced = None
-            if coerced is not None:
-                if t.name == "ibucket":
-                    out = str(iceberg_bucket(coerced, t.param))
-                elif isinstance(coerced, int):
-                    out = str(coerced - coerced % t.param)
+        Integral and string literals under ``identity`` and ``bucket``
+        (Spark's xxhash64, copied in :mod:`.spark_xxhash`), and the
+        exactly-coercible literals under ``ibucket``/``itruncate``
+        (the write path and :func:`.iceberg_bucket.iceberg_bucket`
+        share the encoder, pinned in ``test_iceberg_bucket``) are
+        computed on the driver. Every other literal (timestamp,
+        decimal, date...) is cast to its column type and transformed
+        by Spark, all of them in ONE 1-row eval with a column each,
+        so hashing and casting match the write path exactly."""
+        cache = self.__dict__.setdefault("_tv_cache", {})
+        types = {f.name: f.type for f in self._fields()}
+        out: dict[tuple, str | None] = {}
+        need: dict[tuple, tuple[Transform, str, Any]] = {}
+        for t, val in pairs:
+            key = _tv_key(t, val)
+            if key in cache:
+                out[key] = cache[key]
+            elif t.column not in types:
+                out[key] = cache[key] = None
+            else:
+                tv = _driver_transform_value(t, types[t.column], val)
+                if tv is None:
+                    need[key] = (t, types[t.column], val)
                 else:
-                    out = None  # itruncate is numeric-only
-                if out is not None:
-                    cache[key] = out
-                    return out
-        row = (
-            self.spark.range(1)
-            .select(F.lit(val).cast(fld.type).alias(t.column))
-            .select(transform_expr(t, fld.type).cast("string").alias("v"))
-            .collect()
-        )
-        cache[key] = row[0]["v"]
-        return cache[key]
+                    out[key] = cache[key] = tv
+        if need:
+            lits = [F.lit(val).cast(typ).alias(f"_v{i}")
+                    for i, (_t, typ, val) in enumerate(need.values())]
+            vals = [
+                transform_expr(replace(t, column=f"_v{i}"), typ)
+                .cast("string").alias(f"_v{i}")
+                for i, (t, typ, _val) in enumerate(need.values())
+            ]
+            row = self.spark.range(1).select(*lits).select(*vals).collect()[0]
+            for i, key in enumerate(need):
+                out[key] = cache[key] = row[i]
+        return out
 
     def _prune_files(self, entries: list[FileEntry], where: str) -> list[FileEntry]:
         """Manifest-level pruning for conjunctions of simple comparisons,
@@ -2262,9 +2337,9 @@ class LakeTable:
            (`_calendar_floor` — no Spark jobs, and ranges prune even
            on files with NO footer stats, e.g. adopted stat-less
            chains); identity/bucket/truncate support equality and IN
-           (driver fast paths where exact, else the transform of the
-           literal is computed with a memoized 1-row Spark eval so
-           hashing matches the write path);
+           (the literals' transform values come from one
+           ``_transform_values`` call: driver-side where exact, else
+           one 1-row Spark eval for all of them);
         2. footer min/max stats of the data columns.
 
         Anything unparseable keeps all files (correctness preserved;
@@ -2298,6 +2373,24 @@ class LakeTable:
 
         spec = self.partition_spec
         pkeys = {t.column: (f"_p_{t.name}_{t.column}", t) for t in spec}
+        # literals whose partition values the pass below may compare
+        # against, transformed together on first use
+        wanted: list[tuple[Transform, Any]] = []
+        for col, op, val in preds:
+            t = pkeys.get(col, (None, None))[1]
+            if t is None:
+                continue
+            if op == "in" and not all(
+                    _calendar_floor(t.name, v) is not None for v in val):
+                wanted += [(t, v) for v in val]
+            elif op in ("=", "==") and _calendar_floor(t.name, val) is None:
+                wanted.append((t, val))
+        tvals: dict[tuple, str | None] = {}
+
+        def tvalue(t: Transform, v: Any) -> str | None:
+            if not tvals:
+                tvals.update(self._transform_values(wanted))
+            return tvals[_tv_key(t, v)]
 
         def partition_may_match(e: FileEntry) -> bool:
             for col, op, val in preds:
@@ -2319,7 +2412,7 @@ class LakeTable:
                         if pval not in set(floors):
                             return False
                     else:
-                        tvs = {self._transform_value(t, v) for v in val}
+                        tvs = {tvalue(t, v) for v in val}
                         tvs.discard(None)
                         if tvs and pval not in tvs:
                             return False
@@ -2340,7 +2433,7 @@ class LakeTable:
                     if op in ("<", "<=") and pval > floor:
                         return False
                 elif op in ("=", "=="):
-                    tv = self._transform_value(t, val)
+                    tv = tvalue(t, val)
                     if tv is not None and pval != tv:
                         return False
             return True
@@ -3259,7 +3352,7 @@ class LakeTable:
         ])
         own = F.element_at(F.split(F.input_file_name(), "/"), -1)
         rel = F.element_at(rel_map, own)
-        return self.spark.read.parquet(*abs_to_rel).select(
+        return _read_parquet(self.spark, *abs_to_rel).select(
             # same URI normalization as the MoR read path — a foreign
             # writer may record file:///… spellings
             F.regexp_replace("file_path", "^file:/+", "/")
@@ -3730,7 +3823,7 @@ class LakeTable:
         )
         if not src_files:
             raise ValueError(f"no parquet files under {parquet_dir}")
-        sample = spark.read.parquet(parquet_dir)
+        sample = _read_parquet(spark, parquet_dir)
         ddl = ", ".join(
             f"{f.name} {f.dataType.simpleString()}" for f in sample.schema.fields
         )
@@ -3909,7 +4002,8 @@ class LakeTable:
     ) -> dict:
         """CALL system.rewrite_data_files — reference P1
         (`blob-dfs_bench.py:140-143`). Bin-packs small files up to the
-        target size and rewrites each bin as one clustered write.
+        target size within each partition group; all groups are
+        rewritten by one read and one write (``_compact_groups``).
 
         ``where`` scopes the candidate set (Iceberg's ``where =>``
         argument) via the same manifest-level partition/stats pruning
@@ -3950,28 +4044,14 @@ class LakeTable:
         groups: dict[tuple, list[FileEntry]] = {}
         for e in small:
             groups.setdefault(tuple(sorted(e.partition.items())), []).append(e)
-
-        rewritten_inputs: list[FileEntry] = []
-        compacted: list[FileEntry] = []
-        version = self._meta["current_schema_version"]
-        for key, grp in groups.items():
-            if len(grp) < min_input_files and not any(e.path in dirty for e in grp):
-                continue
-            df = self._read_with_deletes(snap, version, entries=grp)
-            n_out = max(1, sum(e.bytes for e in grp) // target_file_size_bytes)
-            df = df.coalesce(int(n_out))
-            order = self._meta.get("sort_order") or []
-            if order:
-                # preserve WRITE ORDERED BY through compaction
-                df = df.sortWithinPartitions(*order)
-            new_entries = self._write_files(df, cluster=False)
-            for e in new_entries:
-                e.partition = dict(key)
-            rewritten_inputs.extend(grp)
-            compacted.extend(new_entries)
-
-        if not rewritten_inputs:
+        groups = {
+            key: grp for key, grp in groups.items()
+            if len(grp) >= min_input_files or any(e.path in dirty for e in grp)
+        }
+        if not groups:
             return {"rewritten_data_files_count": 0, "added_data_files_count": 0}
+        compacted = self._compact_groups(snap, groups, target_file_size_bytes)
+        rewritten_inputs = [e for grp in groups.values() for e in grp]
         keep = [e for e in snap.files if e not in rewritten_inputs]
         self._commit(
             "replace", keep + compacted,
@@ -4011,18 +4091,11 @@ class LakeTable:
             self._commit("replace", list(snap.files), {"noop": True})
             return {"rewritten_data_files_count": 0,
                     "removed_delete_files_count": len(snap.delete_files)}
-        version = self._meta["current_schema_version"]
         keep = [e for e in snap.files if e not in dirty]
         groups: dict[tuple, list[FileEntry]] = {}
         for e in dirty:
             groups.setdefault(tuple(sorted(e.partition.items())), []).append(e)
-        rewritten: list[FileEntry] = []
-        for key, grp in groups.items():
-            df = self._read_with_deletes(snap, version, entries=grp)
-            new_entries = self._write_files(df, cluster=False)
-            for e in new_entries:
-                e.partition = dict(key)
-            rewritten.extend(new_entries)
+        rewritten = self._compact_groups(snap, groups)
         self._commit(
             "replace", keep + rewritten,
             {"rewritten_files": len(dirty),
@@ -4032,6 +4105,56 @@ class LakeTable:
             "rewritten_data_files_count": len(dirty),
             "removed_delete_files_count": len(snap.delete_files),
         }
+
+    def _compact_groups(
+        self, snap: Snapshot, groups: dict[tuple, list[FileEntry]],
+        target_file_size_bytes: int = 128 * 1024 * 1024,
+    ) -> list[FileEntry]:
+        """Rewrite groups of ``snap``'s data files, keyed by the sorted
+        partition items every file of the group records, with the
+        snapshot's delete files folded in. Returns the new files; each
+        lies inside one group and records that group's partition
+        values, so a group written under an older spec generation
+        keeps its keys.
+
+        One read of all groups and one write, whatever the group count:
+        rows are tagged with their group and output slot through a
+        broadcast (file → group) relation, hash-repartitioned on
+        (group, slot) and written split on both, so each group becomes
+        ``max(1, bytes // target)`` files. Within a file rows follow
+        the table's WRITE ORDERED BY order."""
+        keys = list(groups)
+        n_out = [max(1, sum(e.bytes for e in grp) // target_file_size_bytes)
+                 for grp in groups.values()]
+        tags = self.spark.createDataFrame(
+            [(os.path.join(self.path, e.path), g, n_out[g])
+             for g, grp in enumerate(groups.values()) for e in grp],
+            "_tag_path string, _g int, _n long",
+        )
+        df = self._read_with_deletes(
+            snap, self._meta["current_schema_version"],
+            entries=[e for grp in groups.values() for e in grp],
+            with_file_path=True, with_pos=True,
+        )
+        stripped = F.regexp_replace(F.col("_lake_file"), "^file:/+", "/")
+        df = df.join(F.broadcast(tags), stripped == tags["_tag_path"], "left")
+        # a row whose file path matched no group must fail the write,
+        # never be dropped from the compacted files
+        group = F.coalesce(F.col("_g"), F.raise_error(F.concat(
+            F.lit("compaction: no group for data file "), F.col("_lake_file"))))
+        df = df.select(
+            *[F.col(f.name) for f in self._fields()],
+            group.cast("int").alias("_g"),
+            F.pmod(F.xxhash64("_lake_file", "_lake_pos"), F.col("_n"))
+            .cast("int").alias("_s"),
+        )
+        order = self._meta.get("sort_order") or []
+        df = (df.repartition(int(sum(n_out)), "_g", "_s")
+              .sortWithinPartitions("_g", "_s", *order))
+        written = self._write_files(df, cluster=False, split_by=("_g", "_s"))
+        for e in written:
+            e.partition = dict(keys[int(e.partition["_g"])])
+        return written
 
     def rewrite_manifests(self) -> dict:
         """CALL system.rewrite_manifests — reference P2. Our manifest is
@@ -4079,8 +4202,9 @@ class LakeTable:
             if not pos_dels:
                 return None
             live_abs = [os.path.join(self.path, e.path) for e in snap.files]
-            tomb = self.spark.read.parquet(
-                *[os.path.join(self.path, d.path) for d in pos_dels]
+            tomb = _read_parquet(
+                self.spark,
+                *[os.path.join(self.path, d.path) for d in pos_dels],
             ).select("file_path", "pos")
             live_df = self.spark.createDataFrame(
                 [(p,) for p in live_abs], "file_path string")

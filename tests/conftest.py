@@ -29,3 +29,35 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def oracle_sf_dir():
     return SF_DIR_ORACLE
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """Count the Spark jobs started inside a block::
+
+        with spark_jobs() as jobs:
+            ...
+        assert jobs.count == 0
+
+    Compares the newest ``statusTracker`` job id (outside any job
+    group) before and after the block, once the listener bus has
+    drained, so it sees every job the block started, including
+    broadcast and shuffle-map jobs."""
+    from contextlib import contextmanager
+    from types import SimpleNamespace
+
+    tracker = spark.sparkContext.statusTracker()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def last_id() -> int:
+        bus.waitUntilEmpty()  # job starts reach the tracker asynchronously
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    @contextmanager
+    def counting():
+        jobs = SimpleNamespace(count=None)
+        before = last_id()
+        yield jobs
+        jobs.count = last_id() - before
+
+    return counting

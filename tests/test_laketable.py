@@ -1262,3 +1262,26 @@ def test_sql_frontend_create_changelog_view(spark, tmp_path):
     # the frontend's own SELECT path also resolves the view
     n = e.execute("SELECT COUNT(*) AS c FROM clv_changes")[0].rows[0]["c"]
     assert n == 3
+
+
+def test_overwrite_partitions_spec_generation_error_names_a_working_remedy(
+        spark, tmp_path):
+    """Files of an older spec generation block a dynamic partition
+    overwrite. Compaction keeps each file group's recorded keys, so
+    ``rewrite_data_files`` does not clear the block; the error names a
+    full overwrite instead, and following it lets the overwrite run."""
+    t = LakeTable.create(spark, str(tmp_path / "gen"),
+                         "id bigint, cat string, v int")
+    t.append(spark.createDataFrame(
+        [(i, f"c{i % 2}", i) for i in range(10)], "id bigint, cat string, v int"))
+    t.add_partition_field("identity(cat)")
+    t.rewrite_data_files(min_input_files=1)
+    assert [e.partition for e in t._snapshot().files] == [{}]
+    repl = spark.createDataFrame([(100, "c1", -1)], "id bigint, cat string, v int")
+    with pytest.raises(ValueError, match=r"t\.overwrite\(t\.read\(\)\)"):
+        t.overwrite_partitions(repl)
+    t.overwrite(t.read())
+    t.overwrite_partitions(repl)
+    rows = sorted((r.id, r.cat, r.v) for r in t.read().collect())
+    assert rows == sorted([(i, "c0", i) for i in range(0, 10, 2)]
+                          + [(100, "c1", -1)])

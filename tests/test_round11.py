@@ -542,7 +542,7 @@ def test_foreign_decimal_truncate_numeric_value_never_prunes(spark, tmp_path):
 def test_calendar_partition_range_pruning_no_spark_jobs(spark, tmp_path):
     """hours/months/years partitions now prune equality, range AND IN
     predicates via pure string flooring (`_calendar_floor`) — zero
-    Spark jobs (pinned by poisoning _transform_value), and ranges
+    Spark jobs (pinned by poisoning _transform_values), and ranges
     prune even on files with NO footer stats (the adopted stat-less
     chain case)."""
     import pytest as _pytest
@@ -560,8 +560,8 @@ def test_calendar_partition_range_pruning_no_spark_jobs(spark, tmp_path):
         F.concat(F.lit("v"), "id").alias("v")))
     snap = t._snapshot(t._meta["current_snapshot_id"])
     # poison the Spark-eval path: calendar pruning must never call it
-    orig = t._transform_value
-    t._transform_value = lambda *a, **k: (_ for _ in ()).throw(
+    orig = t._transform_values
+    t._transform_values = lambda *a, **k: (_ for _ in ()).throw(
         AssertionError("calendar pruning must not Spark-eval literals"))
     try:
         kept = t._prune_files(snap.files, "ts >= '2024-03-01 20:00:00'")
@@ -577,7 +577,7 @@ def test_calendar_partition_range_pruning_no_spark_jobs(spark, tmp_path):
         assert {f.partition["_p_hours_ts"] for f in kept_in} == \
             {"2024-03-01 03:00:00", "2024-03-01 07:00:00"}
     finally:
-        t._transform_value = orig
+        t._transform_values = orig
     assert sorted(r.k for r in t.read()
                   .where("ts = '2024-03-01 05:30:00'").collect()) == [11]
 
@@ -600,7 +600,7 @@ def test_calendar_partition_range_pruning_no_spark_jobs(spark, tmp_path):
         "k bigint, ts string").select(
             "k", F.to_timestamp("ts").alias("ts")))
     s2 = t2._snapshot(t2._meta["current_snapshot_id"])
-    t2._transform_value = lambda *a, **k: (_ for _ in ()).throw(
+    t2._transform_values = lambda *a, **k: (_ for _ in ()).throw(
         AssertionError("calendar pruning must not Spark-eval literals"))
     kept3 = t2._prune_files(s2.files, "ts >= '2024-02-01 00:00:00'")
     assert sorted(f.partition["_p_months_ts"] for f in kept3) == \
