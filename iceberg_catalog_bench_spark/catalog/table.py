@@ -7,7 +7,8 @@ Iceberg runtime jar:
 - versioned snapshots + time travel by snapshot-id / timestamp
   (reference T1-T6: ``time_travel_validate.sql:6-12``,
   ``bulk_insert_sales_events.sql:14-17``)
-- copy-on-write UPDATE / DELETE / MERGE row-level ops
+- UPDATE / DELETE / MERGE row-level ops, copy-on-write or
+  merge-on-read, through one write (``_row_level_write``)
   (reference M3-M5: ``update_sales_events.sql``,
   ``delete_sales_events.sql``, ``merge_sales_events.sql``)
 - schema evolution: add / rename / widen / drop with field-id mapping
@@ -38,12 +39,12 @@ import shutil
 import time
 import urllib.parse
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from contextlib import contextmanager
 from dataclasses import dataclass, field, replace
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -321,8 +322,8 @@ def _calendar_floor(transform: str, val: Any) -> str | None:
     return s[:4] + "-01-01 00:00:00"
 
 
-def _tv_key(t: Transform, val: Any) -> tuple:
-    return (t.name, t.column, t.param, repr(val))
+def _tv_key(t: Transform, col_type: str | None, val: Any) -> tuple:
+    return (t.name, t.column, t.param, col_type, repr(val))
 
 
 def _driver_transform_value(t: Transform, col_type: str,
@@ -605,6 +606,15 @@ def _rebase_adding(new_files: Sequence[FileEntry], summary: dict,
 # ---------------------------------------------------------------------------
 # The table
 # ---------------------------------------------------------------------------
+
+
+def _key_match(tgt: DataFrame, src: DataFrame, on: Sequence[str]) -> Column:
+    """``tgt``'s ``on`` columns equal ``src``'s ``src_``-prefixed ones
+    (a MERGE source is read under that prefix)."""
+    cond = tgt[on[0]] == src[f"src_{on[0]}"]
+    for k in on[1:]:
+        cond = cond & (tgt[k] == src[f"src_{k}"])
+    return cond
 
 
 class LakeTable:
@@ -1432,8 +1442,11 @@ class LakeTable:
                 else:
                     sel.append(F.lit(f.default).cast(f.type).alias(f.name))
             if with_file_path:
-                sel.append(_decode_path_uri(F.col("_metadata.file_path"))
-                           .alias("_lake_file"))
+                # the raw absolute path, with no file: scheme: the
+                # domain of entry paths and of the tombstones we write
+                sel.append(F.regexp_replace(
+                    _decode_path_uri(F.col("_metadata.file_path")),
+                    "^file:/+", "/").alias("_lake_file"))
             if with_pos:
                 sel.append(F.col("_metadata.row_index").alias("_lake_pos"))
             parts.append(raw.select(*sel))
@@ -1476,7 +1489,6 @@ class LakeTable:
         parts: list[DataFrame] = []
         if dirty:
             df = self._read_entries(dirty, schema_version, True, True)
-            stripped = F.regexp_replace(F.col("_lake_file"), "^file:/+", "/")
             if pos_dels and any(e.path in referenced for e in dirty):
                 del_paths = [os.path.join(self.path, d.path) for d in pos_dels]
                 # normalize BOTH sides: a foreign writer may record URI
@@ -1490,7 +1502,8 @@ class LakeTable:
                     tomb = F.broadcast(tomb)
                 df = df.join(
                     tomb,
-                    (stripped == tomb["file_path"]) & (df["_lake_pos"] == tomb["pos"]),
+                    (df["_lake_file"] == tomb["file_path"])
+                    & (df["_lake_pos"] == tomb["pos"]),
                     "left_anti",
                 )
             if eq_dels:
@@ -1502,7 +1515,8 @@ class LakeTable:
                     "_seq_path string, _file_seq bigint",
                 )
                 df = df.join(
-                    F.broadcast(seq_map), stripped == seq_map["_seq_path"], "left"
+                    F.broadcast(seq_map), df["_lake_file"] == seq_map["_seq_path"],
+                    "left",
                 ).drop("_seq_path")
                 by_cols: dict[tuple, list[DeleteFileEntry]] = {}
                 for d in eq_dels:
@@ -1687,16 +1701,7 @@ class LakeTable:
         ``on`` defaults to the declared identifier fields (Flink's
         equality-field rule: the upsert key IS the schema's declared
         row identity unless overridden)."""
-        if on is None:
-            on = self.identifier_fields
-            if not on:
-                raise ValueError(
-                    "upsert_by_keys needs key columns: pass on=[...] "
-                    "or declare them with SET IDENTIFIER FIELDS"
-                )
-        for c in on:
-            if c not in {f.name for f in self._fields()}:
-                raise KeyError(f"unknown key column {c!r}")
+        on = self._key_columns(on, "upsert_by_keys")
         others = [c for c in df.columns if c not in on]
         if others:
             # max_by keeps the partial-aggregate (map-side combine)
@@ -1709,21 +1714,7 @@ class LakeTable:
             )
         else:
             df = df.distinct()
-        new_files = self._write_files(df)
-        new_dels = self._write_equality_delete_files(df.select(*on), on)
-        # Reads nothing → append-style auto-retry: rebase onto the
-        # advanced snapshot; commit order serializes concurrent writers
-        # (this upsert's retraction applies to everything older than
-        # its own commit, so the later commit's images win per key).
-        out = self._commit_rebased("upsert", _rebase_adding(
-            new_files,
-            {"upserted_rows": sum(e.rows for e in new_files),
-             "equality_delete_keys": sum(d.rows for d in new_dels),
-             "mode": "merge-on-read"},
-            new_dels,
-        ))
-        self._maybe_auto_compact()
-        return out
+        return self._commit_upsert(df, df.select(*on), on)
 
     def apply_cdc_batch(self, batch_df: DataFrame,
                         on: list[str] | None = None, *,
@@ -1755,16 +1746,7 @@ class LakeTable:
         ``on`` defaults to the declared identifier fields (SET
         IDENTIFIER FIELDS) — the replica inherits the source's row
         identity instead of every caller restating it."""
-        if on is None:
-            on = self.identifier_fields
-            if not on:
-                raise ValueError(
-                    "apply_cdc_batch needs key columns: pass on=[...] "
-                    "or declare them with SET IDENTIFIER FIELDS"
-                )
-        for c in on:
-            if c not in {f.name for f in self._fields()}:
-                raise KeyError(f"unknown key column {c!r}")
+        on = self._key_columns(on, "apply_cdc_batch")
         meta_cols = {"_change_type", "_commit_snapshot_id"}
         missing = meta_cols - set(batch_df.columns)
         if missing:
@@ -1785,23 +1767,51 @@ class LakeTable:
             *[F.col(c) if c in on else F.col(f"_last.{c}").alias(c)
               for c in data_cols]
         )
-        keys = last_act.select(*on)
+        return self._commit_upsert(images, last_act.select(*on), on,
+                                   replay=(query_id, batch_id))
+
+    def _key_columns(self, on: Sequence[str] | None, caller: str) -> list[str]:
+        """The key columns of an upsert: ``on``, or else the declared
+        identifier fields (Flink's equality-field rule)."""
+        if on is None:
+            on = self.identifier_fields
+            if not on:
+                raise ValueError(
+                    f"{caller} needs key columns: pass on=[...] "
+                    "or declare them with SET IDENTIFIER FIELDS"
+                )
+        names = {f.name for f in self._fields()}
+        for c in on:
+            if c not in names:
+                raise KeyError(f"unknown key column {c!r}")
+        return list(on)
+
+    def _commit_upsert(self, images: DataFrame, keys: DataFrame,
+                       on: list[str],
+                       replay: tuple[str, int] | None = None
+                       ) -> Snapshot | None:
+        """Write ``images`` and an equality delete of ``keys`` on ``on``
+        and publish both in one commit. They share its sequence number,
+        so the images survive their own retraction.
+
+        Reads nothing, so the commit auto-retries like an append: it
+        rebases onto an advanced snapshot, and commit order serializes
+        concurrent writers (the later commit's images win per key).
+        ``replay=(query_id, batch_id)`` records the streaming watermark
+        with the commit and skips a batch that already committed."""
         new_files = self._write_files(images)
-        new_dels = self._write_equality_delete_files(keys, list(on))
-        if not new_files and not new_dels:
-            return None  # empty batch: nothing to publish, no watermark
+        new_dels = self._write_equality_delete_files(keys, on)
+        summary = {"upserted_rows": sum(e.rows for e in new_files),
+                   "equality_delete_keys": sum(d.rows for d in new_dels),
+                   "mode": "merge-on-read"}
+        if replay is not None:
+            if not new_files and not new_dels:
+                return None  # empty batch: nothing to publish, no watermark
+            summary["streaming.query-id"] = replay[0]
+            summary["streaming.batch-id"] = int(replay[1])
         out = self._commit_rebased(
-            "upsert",
-            _rebase_adding(
-                new_files,
-                {"upserted_rows": sum(e.rows for e in new_files),
-                 "equality_delete_keys": sum(d.rows for d in new_dels),
-                 "mode": "merge-on-read",
-                 "streaming.query-id": query_id,
-                 "streaming.batch-id": int(batch_id)},
-                new_dels,
-            ),
-            replay=(query_id, batch_id), written=[*new_files, *new_dels],
+            "upsert", _rebase_adding(new_files, summary, new_dels),
+            replay=replay, written=[*new_files, *new_dels],
         )
         if out is not None:
             self._maybe_auto_compact()
@@ -2277,15 +2287,18 @@ class LakeTable:
     )
 
     def _transform_value(self, t: Transform, val: Any) -> str | None:
-        """The partition value ``t`` gives the literal ``val`` (see
-        :meth:`_transform_values`)."""
-        return self._transform_values([(t, val)])[_tv_key(t, val)]
+        """The partition value ``t`` gives the literal ``val`` at the
+        column's current type (see :meth:`_transform_values`)."""
+        return next(iter(self._transform_values([(t, val, None)]).values()))
 
     def _transform_values(
-        self, pairs: Sequence[tuple[Transform, Any]]
+        self, items: Sequence[tuple[Transform, Any, str | None]]
     ) -> dict[tuple, str | None]:
-        """Partition values of ``(transform, literal)`` pairs, as the
-        write path spells them, keyed by ``_tv_key``. Memoized per
+        """Partition values of ``(transform, literal, column type)``
+        items, as the write path spells them, keyed by ``_tv_key``. A
+        None type means the column's current type; files written
+        before a widening recorded their values at the older type
+        (Spark hashes ``int`` and ``bigint`` differently). Memoized per
         table handle.
 
         Integral and string literals under ``identity`` and ``bucket``
@@ -2301,16 +2314,17 @@ class LakeTable:
         types = {f.name: f.type for f in self._fields()}
         out: dict[tuple, str | None] = {}
         need: dict[tuple, tuple[Transform, str, Any]] = {}
-        for t, val in pairs:
-            key = _tv_key(t, val)
+        for t, val, typ in items:
+            typ = typ or types.get(t.column)
+            key = _tv_key(t, typ, val)
             if key in cache:
                 out[key] = cache[key]
-            elif t.column not in types:
+            elif typ is None:
                 out[key] = cache[key] = None
             else:
-                tv = _driver_transform_value(t, types[t.column], val)
+                tv = _driver_transform_value(t, typ, val)
                 if tv is None:
-                    need[key] = (t, types[t.column], val)
+                    need[key] = (t, typ, val)
                 else:
                     out[key] = cache[key] = tv
         if need:
@@ -2373,24 +2387,38 @@ class LakeTable:
 
         spec = self.partition_spec
         pkeys = {t.column: (f"_p_{t.name}_{t.column}", t) for t in spec}
+        # a file's partition values were computed at the column types
+        # of its own schema version (bound by field id)
+        cur = {f.name: f for f in self._fields()}
+        types_at = {v: {f.id: f.type for f in self._fields(v)}
+                    for v in {e.schema_version for e in entries}}
+
+        def col_type(version: int, col: str) -> str | None:
+            f = cur.get(col)
+            return f and types_at[version].get(f.id, f.type)
+
         # literals whose partition values the pass below may compare
-        # against, transformed together on first use
-        wanted: list[tuple[Transform, Any]] = []
+        # against, at every column type the files hold, transformed
+        # together on first use
+        wanted: list[tuple[Transform, Any, str | None]] = []
         for col, op, val in preds:
             t = pkeys.get(col, (None, None))[1]
             if t is None:
                 continue
+            lits = []
             if op == "in" and not all(
                     _calendar_floor(t.name, v) is not None for v in val):
-                wanted += [(t, v) for v in val]
+                lits = val
             elif op in ("=", "==") and _calendar_floor(t.name, val) is None:
-                wanted.append((t, val))
+                lits = [val]
+            typs = {col_type(ver, col) for ver in types_at}
+            wanted += [(t, v, typ) for v in lits for typ in typs]
         tvals: dict[tuple, str | None] = {}
 
-        def tvalue(t: Transform, v: Any) -> str | None:
+        def tvalue(t: Transform, typ: str | None, v: Any) -> str | None:
             if not tvals:
                 tvals.update(self._transform_values(wanted))
-            return tvals[_tv_key(t, v)]
+            return tvals[_tv_key(t, typ, v)]
 
         def partition_may_match(e: FileEntry) -> bool:
             for col, op, val in preds:
@@ -2398,6 +2426,7 @@ class LakeTable:
                 if hit is None:
                     continue
                 pkey, t = hit
+                typ = col_type(e.schema_version, col)
                 pval = e.partition.get(pkey)
                 if pval is None:
                     continue  # file predates this spec field — keep
@@ -2412,7 +2441,7 @@ class LakeTable:
                         if pval not in set(floors):
                             return False
                     else:
-                        tvs = {tvalue(t, v) for v in val}
+                        tvs = {tvalue(t, typ, v) for v in val}
                         tvs.discard(None)
                         if tvs and pval not in tvs:
                             return False
@@ -2433,7 +2462,7 @@ class LakeTable:
                     if op in ("<", "<=") and pval > floor:
                         return False
                 elif op in ("=", "=="):
-                    tv = tvalue(t, val)
+                    tv = tvalue(t, typ, val)
                     if tv is not None and pval != tv:
                         return False
             return True
@@ -2471,32 +2500,7 @@ class LakeTable:
 
         return [e for e in entries if partition_may_match(e) and stats_may_match(e)]
 
-    def _affected_files(self, snap: Snapshot, where: str) -> tuple[list[FileEntry], int]:
-        """(files containing rows matching ``where``, total matching
-        rows): stats-prune first (no I/O), then probe survivors with a
-        pushed filter + `_metadata.file_path` projection. The per-file
-        match counts ride along in the same probe job, so callers never
-        need a second read to report affected-row stats."""
-        candidates = self._prune_files(snap.files, where)
-        if not candidates:
-            return [], 0
-        # delete-aware probe: rows already tombstoned by merge-on-read
-        # delete files must not count as (or resurrect into) matches
-        probe = self._read_with_deletes(
-            snap, self._meta["current_schema_version"],
-            entries=candidates, with_file_path=True,
-        )
-        per_file = (
-            probe.filter(F.expr(where)).groupBy("_lake_file").count().collect()
-        )
-        norm_hits = {_strip_scheme(r["_lake_file"]): r["count"] for r in per_file}
-        affected = [
-            e for e in candidates
-            if os.path.join(self.path, e.path) in norm_hits
-        ]
-        return affected, sum(norm_hits.values())
-
-    # -- row-level ops (copy-on-write) ---------------------------------------
+    # -- row-level ops -------------------------------------------------------
 
     def _ref_snapshot(self, branch: str | None) -> "Snapshot | None":
         """The snapshot a write against ``branch`` (None = main) plans
@@ -2515,6 +2519,111 @@ class LakeTable:
             raise ValueError(f"write.{op}.mode must be copy-on-write or merge-on-read, got {mode!r}")
         return mode
 
+    def _row_level_write(
+        self, op: str, snap: Snapshot, mode: str, branch: str | None,
+        candidates: list[FileEntry], touched: Column,
+        deleted: Column | bool, images: dict[str, Column],
+        summary: Callable[[int, int], dict], *,
+        join: Callable[[DataFrame], DataFrame] | None = None,
+        tally: Column | None = None, added: Sequence[FileEntry] = (),
+        bare_noop: bool = False,
+    ) -> Snapshot:
+        """The one write behind DELETE, UPDATE and MERGE, Spark's
+        ReplaceData / WriteDelta split.
+
+        The rows are ``candidates`` read with deletes applied, plus
+        ``_lake_file`` (and ``_lake_pos``), passed through ``join``
+        (MERGE joins its source there). ``touched`` marks the rows the
+        op changes; of those, ``deleted`` (True: all, False: none)
+        marks the ones left with no new image, and the others take
+        ``images`` {column: expression}. A NULL condition is false,
+        as in SQL.
+
+        - copy-on-write: one probe finds the files holding touched
+          rows and counts those rows; the files are rewritten with
+          untouched rows as they were, deleted rows dropped and the
+          other touched rows replaced by their images.
+        - merge-on-read: the touched rows' positions are written as a
+          position-delete file (Iceberg v2 content=1), and the images
+          of the rows not deleted are appended as new files; no data
+          file is rewritten.
+
+        The commit also adds ``added``. Its summary is ``summary(n,
+        m)`` for ``n`` touched rows of which ``m`` match ``tally``
+        (all of them if None), plus ``rewritten_files`` or
+        ``added_delete_files`` and ``mode``; with ``bare_noop``, an op
+        that touched nothing records ``summary(0, 0)`` alone."""
+        mor = mode == "merge-on-read"
+        fields = self._fields()
+        drop = F.coalesce(F.lit(deleted), F.lit(False))
+
+        def rows(entries: list[FileEntry]) -> DataFrame:
+            df = self._read_with_deletes(
+                snap, self._meta["current_schema_version"], entries=entries,
+                with_file_path=True, with_pos=mor,
+            )
+            return join(df) if join else df
+
+        def image(f: Field) -> Column:
+            return images[f.name].cast(f.type) if f.name in images else F.col(f.name)
+
+        new_dels: list[DeleteFileEntry] = []
+        written: list[FileEntry] = []
+        n = n_tally = 0
+        if mor:
+            if candidates:
+                hit = rows(candidates).filter(touched)
+                if deleted is not True:
+                    hit = hit.cache()  # feeds the tombstones and the images
+                try:
+                    new_dels = self._write_delete_files(hit.select(
+                        F.col("_lake_file").alias("file_path"),
+                        F.col("_lake_pos").alias("pos"),
+                    ))
+                    n = sum(d.rows for d in new_dels)
+                    if n and tally is not None:
+                        n_tally = hit.filter(tally).count()
+                    if n and deleted is not True:
+                        written = self._write_files(hit.filter(~drop).select(
+                            *[image(f).alias(f.name) for f in fields]))
+                finally:
+                    hit.unpersist()
+            files = [*snap.files, *written]
+            extra: dict = {"added_delete_files": len(new_dels),
+                           "mode": "merge-on-read"}
+        else:
+            hits: dict[str, Any] = {}
+            if candidates:
+                hits = {r["_lake_file"]: r for r in rows(candidates)
+                        .filter(touched).groupBy("_lake_file").agg(
+                            F.count(F.lit(1)).alias("n"),
+                            F.count(F.when(F.lit(True) if tally is None
+                                           else tally, 1)).alias("m"),
+                        ).collect()}
+            affected = [e for e in candidates
+                        if os.path.join(self.path, e.path) in hits]
+            n = sum(r["n"] for r in hits.values())
+            n_tally = sum(r["m"] for r in hits.values())
+            if affected:
+                kept = rows(affected).filter(
+                    ~(F.coalesce(touched, F.lit(False)) & drop))
+                written = self._write_files(kept.select(*[
+                    F.when(touched, image(f)).otherwise(F.col(f.name))
+                    .alias(f.name) if f.name in images else F.col(f.name)
+                    for f in fields
+                ]))
+            files = [e for e in snap.files if e not in affected] + written
+            extra = {"rewritten_files": len(affected)}
+        counts = summary(n, n if tally is None else n_tally)
+        out = self._commit(
+            op, files + list(added),
+            counts if bare_noop and not n else {**counts, **extra},
+            branch=branch, delete_files=list(snap.delete_files) + new_dels,
+        )
+        if mor:
+            self._maybe_auto_compact(branch)
+        return out
+
     def delete_where(self, where: str, branch: str | None = None,
                      mode: str | None = None) -> Snapshot:
         """DELETE FROM t WHERE ... — reference M4
@@ -2532,52 +2641,11 @@ class LakeTable:
         snap = self._ref_snapshot(branch)
         if snap is None:
             raise ValueError("delete on empty table")
-        if self._row_op_mode("delete", mode) == "merge-on-read":
-            out = self._delete_where_mor(snap, where, branch)
-            self._maybe_auto_compact(branch)
-            return out
-        # n_matched comes from the delete-aware probe, so it counts LIVE
-        # matching rows exactly — correct whatever mix of position and
-        # equality tombstones already applies to the affected files.
-        affected, n_matched = self._affected_files(snap, where)
-        if not affected:
-            return self._commit("delete", snap.files, {"deleted_rows": 0},
-                                branch=branch)
-        keep = [e for e in snap.files if e not in affected]
-        remaining = self._read_with_deletes(
-            snap, self._meta["current_schema_version"], entries=affected
-        ).filter(~F.expr(where))
-        rewritten = self._write_files(remaining)
-        return self._commit(
-            "delete", keep + rewritten,
-            {"rewritten_files": len(affected), "deleted_rows": n_matched},
-            branch=branch,
-        )
-
-    def _delete_where_mor(self, snap: Snapshot, where: str,
-                          branch: str | None) -> Snapshot:
-        """Merge-on-read DELETE: write position tombstones for matching
-        live rows; data files are never rewritten."""
-        candidates = self._prune_files(snap.files, where)
-        deleted = 0
-        new_dels: list[DeleteFileEntry] = []
-        if candidates:
-            probe = self._read_with_deletes(
-                snap, self._meta["current_schema_version"],
-                entries=candidates, with_file_path=True, with_pos=True,
-            )
-            tomb = probe.filter(F.expr(where)).select(
-                F.regexp_replace(F.col("_lake_file"), "^file:/+", "/").alias("file_path"),
-                F.col("_lake_pos").alias("pos"),
-            )
-            new_dels = self._write_delete_files(tomb)
-            deleted = sum(d.rows for d in new_dels)
-        return self._commit(
-            "delete", list(snap.files),
-            {"deleted_rows": deleted, "added_delete_files": len(new_dels),
-             "mode": "merge-on-read"},
-            branch=branch,
-            delete_files=list(snap.delete_files) + new_dels,
+        mode = self._row_op_mode("delete", mode)
+        return self._row_level_write(
+            "delete", snap, mode, branch, self._prune_files(snap.files, where),
+            F.expr(where), True, {}, lambda n, _m: {"deleted_rows": n},
+            bare_noop=mode == "copy-on-write",
         )
 
     def update(self, set_exprs: dict[str, str], where: str,
@@ -2593,78 +2661,12 @@ class LakeTable:
         snap = self._ref_snapshot(branch)
         if snap is None:
             raise ValueError("update on empty table")
-        if self._row_op_mode("update", mode) == "merge-on-read":
-            out = self._update_mor(snap, set_exprs, where, branch)
-            self._maybe_auto_compact(branch)
-            return out
-        affected, n_updated = self._affected_files(snap, where)
-        if not affected:
-            return self._commit("update", snap.files, {"updated_rows": 0},
-                                branch=branch)
-        keep = [e for e in snap.files if e not in affected]
-        df = self._read_with_deletes(
-            snap, self._meta["current_schema_version"], entries=affected
+        return self._row_level_write(
+            "update", snap, self._row_op_mode("update", mode), branch,
+            self._prune_files(snap.files, where), F.expr(where), False,
+            {c: F.expr(e) for c, e in set_exprs.items()},
+            lambda n, _m: {"updated_rows": n}, bare_noop=True,
         )
-        cond = F.expr(where)
-        out_cols = []
-        for f in self._fields():
-            if f.name in set_exprs:
-                out_cols.append(
-                    F.when(cond, F.expr(set_exprs[f.name]).cast(f.type))
-                    .otherwise(F.col(f.name))
-                    .alias(f.name)
-                )
-            else:
-                out_cols.append(F.col(f.name))
-        # updated_rows came from the _affected_files probe — no second
-        # read of the affected files just for the stat.
-        rewritten = self._write_files(df.select(*out_cols))
-        return self._commit(
-            "update", keep + rewritten,
-            {"rewritten_files": len(affected), "updated_rows": n_updated},
-            branch=branch,
-        )
-
-    def _update_mor(self, snap: Snapshot, set_exprs: dict[str, str],
-                    where: str, branch: str | None) -> Snapshot:
-        """Merge-on-read UPDATE = position-delete the matched rows +
-        append their updated images as new clustered files. One pass
-        computes both outputs from the same matched-row scan."""
-        candidates = self._prune_files(snap.files, where)
-        if not candidates:
-            return self._commit("update", snap.files, {"updated_rows": 0},
-                                branch=branch)
-        # cache: the matched-row scan feeds BOTH the tombstone write and
-        # the updated-image write — one pruned read, two small outputs
-        matched = self._read_with_deletes(
-            snap, self._meta["current_schema_version"],
-            entries=candidates, with_file_path=True, with_pos=True,
-        ).filter(F.expr(where)).cache()
-        try:
-            new_dels = self._write_delete_files(
-                matched.select(
-                    F.regexp_replace(F.col("_lake_file"), "^file:/+", "/").alias("file_path"),
-                    F.col("_lake_pos").alias("pos"),
-                )
-            )
-            if not new_dels:  # nothing actually matched
-                return self._commit("update", snap.files, {"updated_rows": 0},
-                                    branch=branch)
-            out_cols = [
-                F.expr(set_exprs[f.name]).cast(f.type).alias(f.name)
-                if f.name in set_exprs else F.col(f.name)
-                for f in self._fields()
-            ]
-            new_files = self._write_files(matched.select(*out_cols))
-            return self._commit(
-                "update", list(snap.files) + new_files,
-                {"updated_rows": sum(d.rows for d in new_dels),
-                 "added_delete_files": len(new_dels), "mode": "merge-on-read"},
-                branch=branch,
-                delete_files=list(snap.delete_files) + new_dels,
-            )
-        finally:
-            matched.unpersist()
 
     def merge(
         self,
@@ -2759,12 +2761,10 @@ class LakeTable:
                 tgt_keys = self._read_with_deletes(
                     snap, self._meta["current_schema_version"]
                 ).select(*on)
-                dup_cond = None
-                for k in on:
-                    c = tgt_keys[k] == dup_keys[f"src_{k}"]
-                    dup_cond = c if dup_cond is None else (dup_cond & c)
                 dup_matched = (
-                    tgt_keys.join(F.broadcast(dup_keys), dup_cond, "left_semi")
+                    tgt_keys.join(F.broadcast(dup_keys),
+                                  _key_match(tgt_keys, dup_keys, on),
+                                  "left_semi")
                     .limit(1).count()
                 )
                 if dup_matched:
@@ -2778,202 +2778,28 @@ class LakeTable:
             # OOMs the executors. (Iceberg's MERGE makes the same choice via
             # Spark's join planning.)
             src_for_join = F.broadcast(src) if src_rows <= 1_000_000 else src
+            mode = self._row_op_mode("merge", mode)
 
             # Schema evolution is applied only AFTER every validation
             # that can reject the merge (empty-table ref check above,
-            # duplicate-key check) — a refused merge must not leave the
-            # target schema half-evolved (ADVICE r10). add_column is
-            # metadata-only, so `snap` stays valid.
+            # duplicate-key check, write mode) — a refused merge must
+            # not leave the target schema half-evolved (ADVICE r10).
+            # add_column is metadata-only, so `snap` stays valid.
             if schema_evolution:
                 existing = {f.name for f in self._fields()}
                 for sf in source.schema.fields:
                     if sf.name not in existing:
                         self.add_column(sf.name, sf.dataType.simpleString())
             fields = self._fields()
-            fnames = [f.name for f in fields]
 
-            # 1. which target files contain matched keys — and how many
-            # matching rows each holds (same probe job, no re-read later)
-            keys_probe = self._read_with_deletes(
-                snap, self._meta["current_schema_version"], with_file_path=True
-            )
-            join_cond = None
-            for k in on:
-                c = keys_probe[k] == src[f"src_{k}"]
-                join_cond = c if join_cond is None else (join_cond & c)
-            per_file = (
-                keys_probe.join(src_for_join, join_cond, "inner")
-                .groupBy("_lake_file").count().collect()
-            )
-            norm = {_strip_scheme(r["_lake_file"]) for r in per_file}
-            matched_rows = sum(r["count"] for r in per_file)
-            bys_upd = when_not_matched_by_source_update
-            bys_del = when_not_matched_by_source_delete
-            bys_norm: set[str] = set()
-            bys_rows = 0
-            if bys_upd or bys_del is not None:
-                # files holding anti-matched rows the by-source clauses
-                # touch: with an update clause every anti row is touched;
-                # delete-only with a condition prunes to qualifying files
-                anti_probe = keys_probe.join(src_for_join, join_cond, "left_anti")
-                if not bys_upd and isinstance(bys_del, str):
-                    anti_probe = anti_probe.filter(F.expr(bys_del))
-                per_file_bys = anti_probe.groupBy("_lake_file").count().collect()
-                bys_norm = {_strip_scheme(r["_lake_file"]) for r in per_file_bys}
-                bys_rows = sum(r["count"] for r in per_file_bys)
-            affected = [e for e in snap.files if os.path.join(self.path, e.path) in norm]
-            cow_affected = [
-                e for e in snap.files
-                if os.path.join(self.path, e.path) in (norm | bys_norm)
-            ]
-            keep = [e for e in snap.files if e not in cow_affected]
-
-            mor = self._row_op_mode("merge", mode) == "merge-on-read"
-            upd = when_matched_update
-            if upd == "*":
-                upd = {c: f"src_{c}" for c in fnames if c not in on and f"src_{c}" in src.columns}
-
-            # 2. apply matched actions — copy-on-write rewrites the
-            # affected files; merge-on-read position-tombstones the
-            # matched rows and appends their post-action images, leaving
-            # every original file in place (write.merge.mode, the
-            # Iceberg MoR MERGE).
-            rewritten: list[FileEntry] = []
-            new_dels: list[DeleteFileEntry] = []
-            if affected and mor:
-                tgt = self._read_with_deletes(
-                    snap, self._meta["current_schema_version"],
-                    entries=affected, with_file_path=True, with_pos=True,
-                )
-                cond = None
-                for k in on:
-                    c = tgt[k] == src[f"src_{k}"]
-                    cond = c if cond is None else (cond & c)
-                # matched rows feed BOTH the tombstone write and the
-                # image write — cache the (small) matched set once
-                joined = tgt.join(src, cond, "inner").cache()
-                try:
-                    new_dels = self._write_delete_files(
-                        joined.select(
-                            F.regexp_replace(F.col("_lake_file"), "^file:/+", "/").alias("file_path"),
-                            F.col("_lake_pos").alias("pos"),
-                        )
-                    )
-                    images = joined
-                    if when_matched_delete is not None:
-                        del_cond = (
-                            F.lit(True) if when_matched_delete is True
-                            else F.expr(str(when_matched_delete))
-                        )
-                        images = images.filter(~del_cond)
-                    # WHEN MATCHED [AND cond] THEN UPDATE: rows failing
-                    # the condition re-append unchanged (they were
-                    # tombstoned with the rest of the matched set)
-                    upd_gate = (
-                        F.expr(when_matched_update_condition)
-                        if when_matched_update_condition else F.lit(True)
-                    )
-                    out_cols = [
-                        F.when(upd_gate, F.expr(upd[f.name]).cast(f.type))
-                        .otherwise(F.col(f.name)).alias(f.name)
-                        if upd and f.name in upd else F.col(f.name)
-                        for f in fields
-                    ]
-                    rewritten = self._write_files(images.select(*out_cols))
-                finally:
-                    joined.unpersist()
-            elif cow_affected and not mor:
-                tgt = self._read_with_deletes(
-                    snap, self._meta["current_schema_version"], entries=cow_affected
-                )
-                cond = None
-                for k in on:
-                    c = tgt[k] == src[f"src_{k}"]
-                    cond = c if cond is None else (cond & c)
-                joined = tgt.join(src, cond, "left")
-                matched = F.coalesce(F.col("_src_match"), F.lit(False))
-                if when_matched_delete is not None:
-                    del_cond = matched if when_matched_delete is True else (
-                        matched & F.expr(str(when_matched_delete))
-                    )
-                    joined = joined.filter(~del_cond)
-                if bys_del is not None:
-                    bdc = F.lit(True) if bys_del is True else F.expr(str(bys_del))
-                    joined = joined.filter(~(~matched & bdc))
-                upd_gate = matched if when_matched_update_condition is None \
-                    else (matched & F.expr(when_matched_update_condition))
-                out_cols = []
-                for f in fields:
-                    e = F.col(f.name)
-                    if bys_upd and f.name in bys_upd:
-                        # by-source update: anti rows the delete clause
-                        # left alive take the target-only expression
-                        e = F.when(
-                            ~matched, F.expr(bys_upd[f.name]).cast(f.type)
-                        ).otherwise(e)
-                    if upd and f.name in upd:
-                        e = F.when(
-                            upd_gate, F.expr(upd[f.name]).cast(f.type)
-                        ).otherwise(e)
-                    out_cols.append(e.alias(f.name))
-                rewritten = self._write_files(joined.select(*out_cols))
-
-            # 2b. by-source actions under merge-on-read: tombstone the
-            # touched anti rows; re-append updated images (deleted rows
-            # get no image). O(anti rows in qualifying files).
-            if mor and (bys_upd or bys_del is not None) and bys_norm:
-                bys_entries = [
-                    e for e in snap.files
-                    if os.path.join(self.path, e.path) in bys_norm
-                ]
-                tgt2 = self._read_with_deletes(
-                    snap, self._meta["current_schema_version"],
-                    entries=bys_entries, with_file_path=True, with_pos=True,
-                )
-                acond = None
-                for k in on:
-                    c = tgt2[k] == src[f"src_{k}"]
-                    acond = c if acond is None else (acond & c)
-                anti = tgt2.join(src_for_join, acond, "left_anti").cache()
-                try:
-                    bdc = (
-                        F.lit(True) if bys_del is True
-                        else F.expr(str(bys_del)) if bys_del is not None
-                        else F.lit(False)
-                    )
-                    touched = anti if bys_upd else anti.filter(bdc)
-                    new_dels += self._write_delete_files(
-                        touched.select(
-                            F.regexp_replace(
-                                F.col("_lake_file"), "^file:/+", "/"
-                            ).alias("file_path"),
-                            F.col("_lake_pos").alias("pos"),
-                        )
-                    )
-                    if bys_upd:
-                        upd_rows = (
-                            anti.filter(~bdc) if bys_del is not None else anti
-                        )
-                        out2 = [
-                            F.expr(bys_upd[f.name]).cast(f.type).alias(f.name)
-                            if f.name in bys_upd else F.col(f.name)
-                            for f in fields
-                        ]
-                        rewritten += self._write_files(upd_rows.select(*out2))
-                finally:
-                    anti.unpersist()
-
-            # 3. not-matched inserts: source anti-join target keys
+            # not-matched inserts: source anti-join target keys
             inserted: list[FileEntry] = []
             if when_not_matched_insert:
                 tgt_keys = self._read_with_deletes(
                     snap, self._meta["current_schema_version"]
                 ).select(*on).distinct()
-                anti_cond = None
-                for k in on:
-                    c = src[f"src_{k}"] == tgt_keys[k]
-                    anti_cond = c if anti_cond is None else (anti_cond & c)
-                anti = src.join(tgt_keys, anti_cond, "left_anti")
+                anti = src.join(tgt_keys, _key_match(tgt_keys, src, on),
+                                "left_anti")
                 if isinstance(when_not_matched_insert, str):
                     # WHEN NOT MATCHED AND <cond> THEN INSERT — the
                     # condition scopes over SOURCE columns (bare
@@ -3002,28 +2828,48 @@ class LakeTable:
                 if new_rows.columns:
                     inserted = self._write_files(new_rows)
 
-            if mor:
-                snap_out = self._commit(
-                    "merge", list(snap.files) + rewritten + inserted,
-                    {"matched_rows": matched_rows,
-                     "by_source_rows": bys_rows,
-                     "inserted_rows": sum(e.rows for e in inserted),
-                     "added_delete_files": len(new_dels),
-                     "mode": "merge-on-read"},
-                    branch=branch,
-                    delete_files=list(snap.delete_files) + new_dels,
-                )
-                self._maybe_auto_compact(branch)
-            else:
-                snap_out = self._commit(
-                    "merge", keep + rewritten + inserted,
-                    {"matched_rows": matched_rows,
-                     "by_source_rows": bys_rows,
-                     "inserted_rows": sum(e.rows for e in inserted),
-                     "rewritten_files": len(cow_affected)},
-                    branch=branch,
-                )
-            return snap_out
+            # matched and by-source clauses, evaluated on the target
+            # rows left-joined with the source: delete first, then
+            # update (Spark's order); None never holds, True always
+            def holds(clause: str | bool | None) -> Column:
+                return (F.lit(bool(clause)) if clause is None or isinstance(clause, bool)
+                        else F.expr(clause))
+
+            upd = when_matched_update
+            if upd == "*":
+                upd = {c: f"src_{c}" for c in (f.name for f in fields)
+                       if c not in on and f"src_{c}" in src.columns}
+            upd = upd or {}
+            bys_upd = when_not_matched_by_source_update or {}
+            bys_del = when_not_matched_by_source_delete
+            by_source = bool(bys_upd) or bys_del is not None
+            matched = F.col("_src_match").isNotNull()
+            gate = holds(when_matched_update_condition or True)
+
+            def set_to(exprs: dict[str, str], f: Field) -> Column:
+                return (F.expr(exprs[f.name]).cast(f.type) if f.name in exprs
+                        else F.col(f.name))
+
+            images = {
+                f.name: F.when(matched, F.when(gate, set_to(upd, f))
+                               .otherwise(F.col(f.name)))
+                .otherwise(set_to(bys_upd, f))
+                for f in fields if f.name in upd or f.name in bys_upd
+            }
+            return self._row_level_write(
+                "merge", snap, mode, branch, list(snap.files),
+                # with a by-source update clause every unmatched row is
+                # touched; delete-only, just the rows its condition holds
+                matched | holds(True if bys_upd else bys_del),
+                F.when(matched, holds(when_matched_delete))
+                .otherwise(holds(bys_del)),
+                images,
+                lambda n, m: {"matched_rows": m, "by_source_rows": n - m,
+                              "inserted_rows": sum(e.rows for e in inserted)},
+                join=lambda tgt: tgt.join(
+                    src_for_join, _key_match(tgt, src, on), "left"),
+                tally=matched if by_source else None, added=inserted,
+            )
         finally:
             src.unpersist()
 
@@ -4136,8 +3982,8 @@ class LakeTable:
             entries=[e for grp in groups.values() for e in grp],
             with_file_path=True, with_pos=True,
         )
-        stripped = F.regexp_replace(F.col("_lake_file"), "^file:/+", "/")
-        df = df.join(F.broadcast(tags), stripped == tags["_tag_path"], "left")
+        df = df.join(F.broadcast(tags), df["_lake_file"] == tags["_tag_path"],
+                     "left")
         # a row whose file path matched no group must fail the write,
         # never be dropped from the compacted files
         group = F.coalesce(F.col("_g"), F.raise_error(F.concat(

@@ -42,7 +42,10 @@ def spark_jobs(spark):
     Compares the newest ``statusTracker`` job id (outside any job
     group) before and after the block, once the listener bus has
     drained, so it sees every job the block started, including
-    broadcast and shuffle-map jobs."""
+    broadcast and shuffle-map jobs. ``jobs.sites`` names each counted
+    job by its call site (its final stage's name, e.g. ``collect at
+    .../table.py:2490``), so a failed pin can say which call started
+    the extra job: ``assert jobs.count <= 4, jobs.sites``."""
     from contextlib import contextmanager
     from types import SimpleNamespace
 
@@ -53,11 +56,19 @@ def spark_jobs(spark):
         bus.waitUntilEmpty()  # job starts reach the tracker asynchronously
         return max(tracker.getJobIdsForGroup(None), default=-1)
 
+    def site(job_id: int) -> str:
+        info = tracker.getJobInfo(job_id)
+        stage = info and tracker.getStageInfo(max(info.stageIds))
+        return stage.name if stage else "?"
+
     @contextmanager
     def counting():
-        jobs = SimpleNamespace(count=None)
+        jobs = SimpleNamespace(count=None, sites=None)
         before = last_id()
         yield jobs
-        jobs.count = last_id() - before
+        after = last_id()
+        jobs.count = after - before
+        jobs.sites = [site(j) for j in sorted(tracker.getJobIdsForGroup(None))
+                      if before < j <= after]
 
     return counting

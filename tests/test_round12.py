@@ -64,7 +64,7 @@ def test_position_deletes_url_encoded_table_path(spark, tmp_path):
         assert r["sequence_number"] is not None
     # and the MoR read still applies the tombstones
     assert t.read().count() == 93
-    # copy-on-write under the same path: _affected_files' per-file
+    # copy-on-write under the same path: the row-level write's per-file
     # probe matches decoded paths against raw entry paths
     t2 = LakeTable.create(
         spark, str(tmp_path / "odd dir" / "t2"), "id bigint, v double")
