@@ -3,7 +3,7 @@ __all__ = ["LakeTable", "transform_expr"]
 
 def __getattr__(name: str):
     # Resolved on first use so that the Spark-free modules of this
-    # package (``snapshots``) import without pulling in pyspark.
+    # package (``snapshots``, ``pruning``) import without pulling in pyspark.
     if name == "LakeTable":
         from .table import LakeTable
         return LakeTable

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import avro_ocf
 from ._fsutil import atomic_write
+from .pruning import split_top
 from .table import (
     _DATA_DIR,
     _HIVE_NULL,
@@ -81,18 +82,9 @@ def _iceberg_type(ddl: str) -> str:
 
 def _split_top(s: str) -> list[str]:
     """Split a DDL type-argument list on commas at bracket depth 0
-    (``a:int,b:array<double>,c:decimal(18,2)`` → three parts)."""
-    parts, depth, start = [], 0, 0
-    for i, ch in enumerate(s):
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(s[start:i])
-            start = i + 1
-    parts.append(s[start:])
-    return [p for p in parts if p.strip()]
+    (``a:int,b:array<double>,c:decimal(18,2)`` → three parts; an
+    empty list, as in ``struct<>``, has none)."""
+    return [p for p in split_top(s, ",") if p.strip()]
 
 
 def _iceberg_type_full(ddl: str, alloc, path: str = ""):

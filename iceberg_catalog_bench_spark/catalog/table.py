@@ -48,8 +48,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import snapshots, spark_xxhash
+from . import pruning, snapshots
 from ._fsutil import unlink_quietly
+from .pruning import HIVE_NULL as _HIVE_NULL
+from .pruning import driver_transform_value as _driver_transform_value
 from .transforms import Transform, parse_spec, transform_expr
 
 _META_DIR = "_meta"
@@ -68,7 +70,6 @@ _COMMIT_ATTEMPTS = 6
 # 128-256 MB per executor — autoBroadcastJoinThreshold territory). A
 # row-count gate alone let multi-hundred-MB (path, pos) sets through.
 _BROADCAST_DELETE_BYTES = 64 * 1024 * 1024
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
 # ---------------------------------------------------------------------------
@@ -205,6 +206,15 @@ class Snapshot:
             out["delete_files"] = [d.to_json() for d in self.delete_files]
         return out
 
+    def delete_affected(self) -> set[str]:
+        """Paths of the data files a delete file applies to: referenced
+        by a position delete, or older than an equality delete."""
+        hit = {p for d in self.delete_files if d.content == "position"
+               for p in d.referenced}
+        max_eq_seq = max((d.seq or 0 for d in self.delete_files
+                          if d.content == "equality"), default=0)
+        return hit | {e.path for e in self.files if (e.seq or 0) < max_eq_seq}
+
     @staticmethod
     def from_json(d: dict) -> "Snapshot":
         return Snapshot(
@@ -271,96 +281,22 @@ def footer_min_max(md) -> dict[str, list]:
 def _json_safe(v: Any) -> Any:
     """Make a parquet-footer stat value JSON-serializable but comparable.
 
-    Timestamps serialize with a SPACE separator ('2024-01-05 12:00:00')
-    — the form SQL literals use — so string comparison against predicate
-    literals orders correctly. The ISO default 'T' separator sorts AFTER
-    ' ', which made same-day range predicates wrongly prune files (a
-    file containing the exact matching row looked out-of-range)."""
+    Timestamps serialize as naive UTC with a SPACE separator
+    ('2024-01-05 12:00:00') — the form SQL literals use — so string
+    comparison against predicate literals orders correctly. The ISO
+    default 'T' separator sorts AFTER ' ', which made same-day range
+    predicates wrongly prune files (a file containing the exact
+    matching row looked out-of-range)."""
     import datetime
     import decimal
 
-    if isinstance(v, datetime.datetime):
-        # tz-aware (parquet isAdjustedToUTC) → naive UTC, so the string
-        # carries no '+00:00' suffix that would break ordering against
-        # a plain literal
-        if v.tzinfo is not None:
-            v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-        return v.isoformat(sep=" ")
     if isinstance(v, datetime.date):
-        return v.isoformat()
+        return pruning.norm_stat(v)
     if isinstance(v, decimal.Decimal):
         return str(v)
     if isinstance(v, bytes):
         return None
     return v
-
-
-_ISO_TS = re.compile(r"^\d{4}-\d{2}-\d{2}[T ]\d{2}:\d{2}")
-_ISO_PREFIX = re.compile(r"^\d{4}-\d{2}-\d{2}([T ]\d{2}:\d{2}:\d{2})?")
-
-
-def _calendar_floor(transform: str, val: Any) -> str | None:
-    """Floor an ISO-shaped predicate literal to a calendar transform's
-    partition-value SPELLING — pure string arithmetic, so equality and
-    range pruning on days/hours/months/years partitions never run a
-    Spark job. None when the transform is not calendar or the literal
-    is not ISO-shaped (callers fall back to the Spark-eval path)."""
-    if transform not in ("days", "hours", "months", "years"):
-        return None
-    s = str(val)
-    if not _ISO_PREFIX.match(s):
-        return None
-    if len(s) == 10:  # bare date literal
-        s = s + " 00:00:00"
-    s = s.replace("T", " ", 1)
-    if transform == "days":
-        return s[:10]
-    if transform == "hours":
-        return s[:13] + ":00:00"
-    if transform == "months":
-        return s[:7] + "-01 00:00:00"
-    return s[:4] + "-01-01 00:00:00"
-
-
-def _tv_key(t: Transform, col_type: str | None, val: Any) -> tuple:
-    return (t.name, t.column, t.param, col_type, repr(val))
-
-
-def _driver_transform_value(t: Transform, col_type: str,
-                            val: Any) -> str | None:
-    """``t`` of the literal ``val`` cast to ``col_type``, computed
-    without Spark, or None where only a Spark eval is exact (a literal
-    whose cast Spark might round, wrap or parse)."""
-    base = col_type.strip().lower().split("(")[0]
-    coerced: Any = None
-    if base in spark_xxhash.INT_BITS and not isinstance(val, bool) and (
-            isinstance(val, int)
-            or isinstance(val, float) and val.is_integer()):
-        coerced = int(val)
-    elif base == "string" and isinstance(val, str):
-        coerced = val
-    elif base == "date" and isinstance(val, str) and t.name == "ibucket":
-        import datetime as _dt
-
-        try:
-            coerced = _dt.date.fromisoformat(val[:10])
-        except ValueError:
-            return None
-    if coerced is None:
-        return None
-    if t.name in ("identity", "bucket"):
-        if not spark_xxhash.fits(coerced, base):
-            return None
-        if t.name == "bucket":
-            return str(spark_xxhash.bucket(coerced, base, t.param))
-        return str(coerced)
-    if t.name == "ibucket":
-        from .iceberg_bucket import iceberg_bucket
-
-        return str(iceberg_bucket(coerced, t.param))
-    if t.name == "itruncate" and isinstance(coerced, int):
-        return str(coerced - coerced % t.param)
-    return None
 
 
 def _map_free(dt: T.DataType) -> bool:
@@ -489,23 +425,6 @@ def _read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
             except (ValueError, KeyError, TypeError):
                 pass  # an unparsable row schema: let Spark decide
     return reader.parquet(*paths)
-
-
-def _norm_stat(v: Any) -> Any:
-    """Normalize ISO timestamp strings — 'T' separator, tz offsets —
-    to the naive-UTC SQL-literal space form so stats written by older
-    metadata (or 'T'-form predicate literals) still compare correctly."""
-    import datetime
-
-    if isinstance(v, str) and _ISO_TS.match(v):
-        try:
-            d = datetime.datetime.fromisoformat(v)
-        except ValueError:
-            return v
-        if d.tzinfo is not None:
-            d = d.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-        return d.isoformat(sep=" ")
-    return v
 
 
 def encode_meta(meta: dict) -> dict:
@@ -993,6 +912,16 @@ class LakeTable:
     def partition_spec(self) -> list[Transform]:
         return parse_spec(self._meta["partition_spec"])
 
+    def _spec_sources(self, version: int) -> tuple:
+        """(name, type) each current partition field's source column had
+        at ``version``, bound by field id. Partition values recorded
+        under other sources (before a rename or a widening: Spark hashes
+        ``int`` and ``bigint`` differently) are a different spec
+        generation."""
+        ids = {f.name: f.id for f in self._fields()}
+        at = {f.id: (f.name, f.type) for f in self._fields(version)}
+        return tuple(at.get(ids.get(t.column)) for t in self.partition_spec)
+
     # -- write path ----------------------------------------------------------
 
     def _write_files(self, df: DataFrame, cluster: bool = True,
@@ -1366,13 +1295,19 @@ class LakeTable:
         def rebase(cur: Snapshot | None):
             carried: list[FileEntry] = []
             n_replaced = 0
-            for f in (cur.files if cur else []):
-                if set(f.partition.keys()) != current_keys:
+            files = cur.files if cur else []
+            current = self._spec_sources(self._meta["current_schema_version"])
+            stale = {v for v in {f.schema_version for f in files}
+                     if self._spec_sources(v) != current}
+            for f in files:
+                if (set(f.partition.keys()) != current_keys
+                        or f.schema_version in stale):
                     raise ValueError(
                         f"cannot overwrite partitions: {f.path} was written "
                         f"under a different partition-spec generation "
                         f"(keys {sorted(f.partition.keys())} vs current "
-                        f"{sorted(current_keys)}); rewrite the table under "
+                        f"{sorted(current_keys)}, or a source column since "
+                        f"renamed or widened); rewrite the table under "
                         f"the current spec first, e.g. t.overwrite(t.read())"
                     )
                 if replaced(f.partition):
@@ -1476,20 +1411,13 @@ class LakeTable:
         eq_dels = [d for d in snap.delete_files if d.content == "equality"]
         if not pos_dels and not eq_dels:
             return self._read_entries(entries, schema_version, with_file_path, with_pos)
-        referenced: set[str] = set()
-        for d in pos_dels:
-            referenced.update(d.referenced)
-        max_eq_seq = max((d.seq for d in eq_dels), default=0)
-
-        def is_dirty(e: FileEntry) -> bool:
-            return e.path in referenced or (e.seq or 0) < max_eq_seq
-
-        plain = [e for e in entries if not is_dirty(e)]
-        dirty = [e for e in entries if is_dirty(e)]
+        affected = snap.delete_affected()
+        plain = [e for e in entries if e.path not in affected]
+        dirty = [e for e in entries if e.path in affected]
         parts: list[DataFrame] = []
         if dirty:
             df = self._read_entries(dirty, schema_version, True, True)
-            if pos_dels and any(e.path in referenced for e in dirty):
+            if pos_dels:
                 del_paths = [os.path.join(self.path, d.path) for d in pos_dels]
                 # normalize BOTH sides: a foreign writer may record URI
                 # spellings (file:///...) INSIDE the delete parquet, not
@@ -2267,24 +2195,14 @@ class LakeTable:
         if snap is None:
             return self._read_entries([], version)
         entries = snap.files
-        if where:
-            entries = self._prune_files(entries, where)
+        if where:  # ``where`` names the columns of the schema read
+            entries = pruning.prune(entries, pruning.conjuncts(where),
+                                    self._meta, self._transform_values,
+                                    version)
         df = self._read_with_deletes(snap, version, entries=entries)
         return df.filter(F.expr(where)) if where else df
 
     # -- file pruning --------------------------------------------------------
-
-    # column refs admit dotted STRUCT-leaf paths (meta.n): leaf stats
-    # are recorded under the dotted spelling (footer_min_max), so an
-    # embedding-store scan like meta.n >= 5 manifests-prunes too
-    _SIMPLE_PRED = re.compile(
-        r"^\s*(\w+(?:\.\w+)*)\s*(=|==|<=|>=|<|>)\s*('[^']*'|[-\d.]+)\s*$"
-    )
-    _IN_PRED = re.compile(
-        r"^\s*(\w+(?:\.\w+)*)\s+in\s*\(\s*('[^']*'|[-\d.]+)"
-        r"(?:\s*,\s*(?:'[^']*'|[-\d.]+))*\s*\)\s*$",
-        re.IGNORECASE,
-    )
 
     def _transform_value(self, t: Transform, val: Any) -> str | None:
         """The partition value ``t`` gives the literal ``val`` at the
@@ -2295,7 +2213,7 @@ class LakeTable:
         self, items: Sequence[tuple[Transform, Any, str | None]]
     ) -> dict[tuple, str | None]:
         """Partition values of ``(transform, literal, column type)``
-        items, as the write path spells them, keyed by ``_tv_key``. A
+        items, as the write path spells them, keyed by ``pruning.tv_key``. A
         None type means the column's current type; files written
         before a widening recorded their values at the older type
         (Spark hashes ``int`` and ``bigint`` differently). Memoized per
@@ -2316,7 +2234,7 @@ class LakeTable:
         need: dict[tuple, tuple[Transform, str, Any]] = {}
         for t, val, typ in items:
             typ = typ or types.get(t.column)
-            key = _tv_key(t, typ, val)
+            key = pruning.tv_key(t, typ, val)
             if key in cache:
                 out[key] = cache[key]
             elif typ is None:
@@ -2341,164 +2259,12 @@ class LakeTable:
         return out
 
     def _prune_files(self, entries: list[FileEntry], where: str) -> list[FileEntry]:
-        """Manifest-level pruning for conjunctions of simple comparisons,
-        in two passes (both zero-I/O, driver-side):
-
-        1. partition values: each file records its transform values
-           (directory components); the calendar family
-           (`days/hours/months/years`) supports equality, range AND
-           IN predicates via pure string flooring of ISO literals
-           (`_calendar_floor` — no Spark jobs, and ranges prune even
-           on files with NO footer stats, e.g. adopted stat-less
-           chains); identity/bucket/truncate support equality and IN
-           (the literals' transform values come from one
-           ``_transform_values`` call: driver-side where exact, else
-           one 1-row Spark eval for all of them);
-        2. footer min/max stats of the data columns.
-
-        Anything unparseable keeps all files (correctness preserved;
-        the exact `_metadata.file_path` probe narrows further)."""
-        conjuncts = [c.strip() for c in re.split(r"(?i)\s+and\s+", where)]
-        preds = []
-
-        def _lit(lit: str) -> Any:
-            return lit[1:-1] if lit.startswith("'") else (
-                float(lit) if "." in lit else int(lit))
-
-        for c in conjuncts:
-            m = self._SIMPLE_PRED.match(c)
-            if m:
-                col, op, lit = m.groups()
-                preds.append((col, op, _lit(lit)))
-                continue
-            m = self._IN_PRED.match(c)
-            if m:
-                # col IN (v1, v2, ...) — a disjunction of equalities:
-                # prunable on partition values (file survives if its
-                # transform value matches ANY member) and on stats
-                # (file survives if ANY member is inside [min, max])
-                col = m.group(1)
-                vals = [_lit(x) for x in re.findall(
-                    r"'[^']*'|[-\d.]+", c.split("(", 1)[1].rsplit(")", 1)[0])]
-                if vals:
-                    preds.append((col, "in", vals))
-        if not preds:
-            return entries
-
-        spec = self.partition_spec
-        pkeys = {t.column: (f"_p_{t.name}_{t.column}", t) for t in spec}
-        # a file's partition values were computed at the column types
-        # of its own schema version (bound by field id)
-        cur = {f.name: f for f in self._fields()}
-        types_at = {v: {f.id: f.type for f in self._fields(v)}
-                    for v in {e.schema_version for e in entries}}
-
-        def col_type(version: int, col: str) -> str | None:
-            f = cur.get(col)
-            return f and types_at[version].get(f.id, f.type)
-
-        # literals whose partition values the pass below may compare
-        # against, at every column type the files hold, transformed
-        # together on first use
-        wanted: list[tuple[Transform, Any, str | None]] = []
-        for col, op, val in preds:
-            t = pkeys.get(col, (None, None))[1]
-            if t is None:
-                continue
-            lits = []
-            if op == "in" and not all(
-                    _calendar_floor(t.name, v) is not None for v in val):
-                lits = val
-            elif op in ("=", "==") and _calendar_floor(t.name, val) is None:
-                lits = [val]
-            typs = {col_type(ver, col) for ver in types_at}
-            wanted += [(t, v, typ) for v in lits for typ in typs]
-        tvals: dict[tuple, str | None] = {}
-
-        def tvalue(t: Transform, typ: str | None, v: Any) -> str | None:
-            if not tvals:
-                tvals.update(self._transform_values(wanted))
-            return tvals[_tv_key(t, typ, v)]
-
-        def partition_may_match(e: FileEntry) -> bool:
-            for col, op, val in preds:
-                hit = pkeys.get(col)
-                if hit is None:
-                    continue
-                pkey, t = hit
-                typ = col_type(e.schema_version, col)
-                pval = e.partition.get(pkey)
-                if pval is None:
-                    continue  # file predates this spec field — keep
-                if pval == _HIVE_NULL:
-                    # file holds only rows whose transform source is
-                    # NULL; a simple comparison on that column can never
-                    # be true for NULL → drop the file
-                    return False
-                if op == "in":
-                    floors = [_calendar_floor(t.name, v) for v in val]
-                    if floors and all(f is not None for f in floors):
-                        if pval not in set(floors):
-                            return False
-                    else:
-                        tvs = {tvalue(t, typ, v) for v in val}
-                        tvs.discard(None)
-                        if tvs and pval not in tvs:
-                            return False
-                    continue
-                floor = _calendar_floor(t.name, val)
-                if floor is not None:
-                    # calendar transform, ISO-shaped literal: the
-                    # partition value IS the floored literal spelling,
-                    # so equality and ranges compare lexicographically
-                    # — zero Spark jobs, and range predicates prune
-                    # even on files with no footer stats (adopted
-                    # stat-less chains). Conservative at the floor
-                    # boundary: pval == floor is always kept.
-                    if op in ("=", "==") and pval != floor:
-                        return False
-                    if op in (">", ">=") and pval < floor:
-                        return False
-                    if op in ("<", "<=") and pval > floor:
-                        return False
-                elif op in ("=", "=="):
-                    tv = tvalue(t, typ, val)
-                    if tv is not None and pval != tv:
-                        return False
-            return True
-
-        def stats_may_match(e: FileEntry) -> bool:
-            for col, op, raw_val in preds:
-                rng = e.stats.get(col)
-                if not rng:
-                    continue
-                lo, hi = _norm_stat(rng[0]), _norm_stat(rng[1])
-                if op == "in":
-                    try:
-                        if not any(lo <= _norm_stat(v) <= hi
-                                   for v in raw_val):
-                            return False
-                    except TypeError:
-                        pass
-                    continue
-                val = _norm_stat(raw_val)
-                try:
-                    if op in ("=", "=="):
-                        if val < lo or val > hi:
-                            return False
-                    elif op == "<" and not (lo < val):
-                        return False
-                    elif op == "<=" and not (lo <= val):
-                        return False
-                    elif op == ">" and not (hi > val):
-                        return False
-                    elif op == ">=" and not (hi >= val):
-                        return False
-                except TypeError:
-                    continue
-            return True
-
-        return [e for e in entries if partition_may_match(e) and stats_may_match(e)]
+        """The entries that may hold a row matching ``where``, decided
+        without I/O by :func:`.pruning.prune` on the conjunctions of
+        simple comparisons it parses; literals that need a Spark eval
+        share one 1-row eval (``_transform_values``)."""
+        return pruning.prune(entries, pruning.conjuncts(where), self._meta,
+                             self._transform_values)
 
     # -- row-level ops -------------------------------------------------------
 
@@ -3302,22 +3068,21 @@ class LakeTable:
         files = list(snap.files) if snap else []
         dels = list(snap.delete_files) if snap else []
         total_bytes = sum(e.bytes for e in files)
-        affected_paths: set[str] = set()
+        affected = snap.delete_affected() if snap else set()
         extra_bytes = 0
         for d in dels:
-            if d.content == "position":
-                hit = [e for e in files if e.path in set(d.referenced)]
-            else:
-                hit = [e for e in files if (e.seq or 0) < (d.seq or 0)]
-            affected_paths.update(e.path for e in hit)
-            extra_bytes += sum(e.bytes for e in hit)
+            refs = set(d.referenced)
+            extra_bytes += sum(
+                e.bytes for e in files
+                if (e.path in refs if d.content == "position"
+                    else (e.seq or 0) < (d.seq or 0)))
         amp = 1.0 + (extra_bytes / total_bytes if total_bytes else 0.0)
         return (
             len(dels),
             sum(1 for d in dels if d.content == "position"),
             sum(1 for d in dels if d.content == "equality"),
             sum(d.rows for d in dels),
-            len(affected_paths),
+            sum(1 for e in files if e.path in affected),
             len(files),
             round(amp, 3),
             "compact" if len(dels) >= threshold else "ok",
@@ -3394,9 +3159,7 @@ class LakeTable:
         stats: no data files are read."""
         snap = self._snapshot(snapshot_id)
         files = snap.files if snap else []
-        dels = snap.delete_files if snap else []
-        pos_ref = {p for d in dels if d.content == "position" for p in d.referenced}
-        max_eq_seq = max((d.seq for d in dels if d.content == "equality"), default=0)
+        affected = snap.delete_affected() if snap else set()
         agg: dict[str, list[int]] = {}
         for e in files:
             key = json.dumps(e.partition, sort_keys=True)
@@ -3408,7 +3171,7 @@ class LakeTable:
             # table reports delete counts alongside data record counts:
             # record_count here is the DATA rows; tombstoned rows are
             # netted out at read time)
-            if e.path in pos_ref or (e.seq or 0) < max_eq_seq:
+            if e.path in affected:
                 tot[3] += 1
         rows = [
             (k, v[0], v[1], v[2], v[3]) for k, v in sorted(agg.items())
@@ -3866,15 +3629,7 @@ class LakeTable:
         # compaction is what folds merge-on-read tombstones back into
         # clean data files, after which _commit drops the delete files
         # automatically (nothing references them anymore).
-        dirty = {
-            p for d in snap.delete_files
-            if d.content == "position" for p in d.referenced
-        }
-        max_eq_seq = max(
-            (d.seq for d in snap.delete_files if d.content == "equality"),
-            default=0,
-        )
-        dirty |= {e.path for e in snap.files if (e.seq or 0) < max_eq_seq}
+        dirty = snap.delete_affected()
         candidates = (
             self._prune_files(snap.files, where) if where else snap.files
         )
@@ -3887,11 +3642,8 @@ class LakeTable:
         # partition values would destroy the one-value-per-file layout
         # (and with it, pruning). Iceberg's rewrite_data_files makes the
         # same per-partition grouping.
-        groups: dict[tuple, list[FileEntry]] = {}
-        for e in small:
-            groups.setdefault(tuple(sorted(e.partition.items())), []).append(e)
         groups = {
-            key: grp for key, grp in groups.items()
+            key: grp for key, grp in self._partition_groups(small).items()
             if len(grp) >= min_input_files or any(e.path in dirty for e in grp)
         }
         if not groups:
@@ -3919,29 +3671,16 @@ class LakeTable:
         if snap is None or not snap.delete_files:
             return {"rewritten_data_files_count": 0,
                     "removed_delete_files_count": 0}
-        referenced = {
-            p for d in snap.delete_files
-            if d.content == "position" for p in d.referenced
-        }
-        max_eq_seq = max(
-            (d.seq for d in snap.delete_files if d.content == "equality"),
-            default=0,
-        )
-        dirty = [
-            e for e in snap.files
-            if e.path in referenced or (e.seq or 0) < max_eq_seq
-        ]
+        affected = snap.delete_affected()
+        dirty = [e for e in snap.files if e.path in affected]
         if not dirty:
             # delete files exist but apply to nothing live — commit a
             # no-op so the auto-prune clears them
             self._commit("replace", list(snap.files), {"noop": True})
             return {"rewritten_data_files_count": 0,
                     "removed_delete_files_count": len(snap.delete_files)}
-        keep = [e for e in snap.files if e not in dirty]
-        groups: dict[tuple, list[FileEntry]] = {}
-        for e in dirty:
-            groups.setdefault(tuple(sorted(e.partition.items())), []).append(e)
-        rewritten = self._compact_groups(snap, groups)
+        keep = [e for e in snap.files if e.path not in affected]
+        rewritten = self._compact_groups(snap, self._partition_groups(dirty))
         self._commit(
             "replace", keep + rewritten,
             {"rewritten_files": len(dirty),
@@ -3952,16 +3691,32 @@ class LakeTable:
             "removed_delete_files_count": len(snap.delete_files),
         }
 
+    def _partition_groups(
+        self, entries: list[FileEntry]
+    ) -> dict[tuple, list[FileEntry]]:
+        """``entries`` grouped for compaction: by the sorted partition
+        items each file records and the spec sources at its schema
+        version (``_spec_sources``)."""
+        sources = {v: self._spec_sources(v)
+                   for v in {e.schema_version for e in entries}}
+        groups: dict[tuple, list[FileEntry]] = {}
+        for e in entries:
+            groups.setdefault((tuple(sorted(e.partition.items())),
+                               sources[e.schema_version]), []).append(e)
+        return groups
+
     def _compact_groups(
         self, snap: Snapshot, groups: dict[tuple, list[FileEntry]],
         target_file_size_bytes: int = 128 * 1024 * 1024,
     ) -> list[FileEntry]:
-        """Rewrite groups of ``snap``'s data files, keyed by the sorted
-        partition items every file of the group records, with the
-        snapshot's delete files folded in. Returns the new files; each
-        lies inside one group and records that group's partition
-        values, so a group written under an older spec generation
-        keeps its keys.
+        """Rewrite groups of ``snap``'s data files, keyed as
+        ``_partition_groups`` keys them, with the snapshot's delete
+        files folded in. Returns the new files, stamped with the
+        current schema version; each lies inside one group and records
+        that group's partition values, so a group written under an
+        older spec generation keeps its keys. A group whose values were
+        recorded under other spec sources records none (pruning then
+        keeps its files).
 
         One read of all groups and one write, whatever the group count:
         rows are tagged with their group and output slot through a
@@ -3998,8 +3753,10 @@ class LakeTable:
         df = (df.repartition(int(sum(n_out)), "_g", "_s")
               .sortWithinPartitions("_g", "_s", *order))
         written = self._write_files(df, cluster=False, split_by=("_g", "_s"))
+        current = self._spec_sources(self._meta["current_schema_version"])
         for e in written:
-            e.partition = dict(keys[int(e.partition["_g"])])
+            items, sources = keys[int(e.partition["_g"])]
+            e.partition = dict(items) if sources == current else {}
         return written
 
     def rewrite_manifests(self) -> dict:

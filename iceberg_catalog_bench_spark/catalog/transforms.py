@@ -17,9 +17,10 @@ a catalog jar.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import TYPE_CHECKING
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+if TYPE_CHECKING:  # the spec model below imports without pyspark
+    from pyspark.sql import Column
 
 SUPPORTED = ("identity", "days", "hours", "months", "years", "bucket",
              "ibucket", "truncate", "itruncate")
@@ -51,6 +52,8 @@ def transform_expr(t: Transform, input_type: str | None = None) -> Column:
     source column's type) lets ``ibucket`` pre-convert the
     hashed-as-a-long family JVM-side so the pandas UDF sees exact
     int64 lanes; other transforms ignore it."""
+    from pyspark.sql import functions as F
+
     c = F.col(t.column)
     if t.name == "identity":
         return c

@@ -121,9 +121,10 @@ can match for throughput. It does, however, implement FILE-LEVEL
 filter pushdown (``option("filter-pushdown", "true")`` together with
 ``spark.sql.python.filterPushdown.enabled=true`` — Spark refuses a
 reader that defines ``pushFilters`` while that conf is off, hence the
-opt-in): manifest stats prune whole files driver-side and the Arrow
-scan filters rows worker-side, so selective reads ship only matching
-data.
+opt-in): the table's own pruner (``catalog/pruning.py``, the one
+``LakeTable.scan`` uses) drops whole files driver-side by partition
+values and footer stats bound by field id, and the Arrow scan filters
+rows worker-side, so selective reads ship only matching data.
 """
 
 from __future__ import annotations
@@ -152,8 +153,10 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from ..catalog import snapshots
+from ..catalog import pruning, snapshots
 from ..catalog._fsutil import unlink_quietly
+from ..catalog.pruning import leaf_type as _nested_leaf_ddl
+from ..catalog.pruning import split_top as _split_top
 
 _META_REL = os.path.join("_meta", "metadata.json")
 
@@ -205,33 +208,6 @@ _DDL_ARROW = {
 }
 
 
-def _split_top(s: str, sep: str) -> list[str]:
-    """Split ``s`` on ``sep`` at bracket depth 0 — the nested-DDL
-    tokenizer. Tracks BOTH angle brackets and parentheses: commas
-    inside ``struct<...>``/``map<...>`` AND inside ``decimal(p,s)``
-    never split (review-caught: ``struct<a:decimal(10,2)>`` split on
-    the decimal's comma). Unbalanced brackets raise — a malformed DDL
-    like ``struct<a:int>>`` must fail at parse time, not misparse into
-    a skewed nested type (ADVICE r13)."""
-    parts, depth, cur = [], 0, []
-    for ch in s:
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-            if depth < 0:
-                raise ValueError(f"unbalanced brackets in DDL fragment: {s!r}")
-        if ch == sep and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if depth != 0:
-        raise ValueError(f"unbalanced brackets in DDL fragment: {s!r}")
-    parts.append("".join(cur))
-    return parts
-
-
 def _erase_char_types(ddl: str) -> str:
     """Rewrite ``varchar(n)``/``char(n)`` to ``string`` at every
     nesting level — the type Spark itself ships through DataFrames."""
@@ -254,26 +230,6 @@ def _erase_char_types(ddl: str) -> str:
             items.append(f"{name}:{_erase_char_types(sub)}" if sep else item)
         return f"struct<{','.join(items)}>"
     return t
-
-
-def _nested_leaf_ddl(top_ddl: str, path: tuple) -> str | None:
-    """DDL of the struct LEAF at ``path`` inside ``top_ddl``, walking
-    only struct nesting (None when any step crosses a map/array or
-    names a missing field) — the resolver behind struct-leaf predicate
-    pruning (field names match case-insensitively, like Spark)."""
-    cur = top_ddl
-    for name in path:
-        key = cur.strip().lower()
-        if not (key.startswith("struct<") and key.endswith(">")):
-            return None
-        for item in _split_top(cur.strip()[7:-1], ","):
-            fname, sep, sub = item.partition(":")
-            if sep and fname.strip().strip("`").lower() == name.lower():
-                cur = sub.strip()
-                break
-        else:
-            return None
-    return cur
 
 
 def _arrow_type(ddl: str):
@@ -981,21 +937,9 @@ def _read_cow_net(partition: _CowNetPartition) -> Iterator:
         yield from out.to_batches(max_chunksize=1 << 16)
 
 
-def _stat_comparable(v):
-    """Datetime/date literals → the string form footer stats record
-    (catalog.table._json_safe: naive-UTC, space separator — chosen
-    there so LEXICAL order is chronological order), so a pushed
-    temporal predicate can compare directly against file stats.
-    Non-temporal values pass through."""
-    import datetime
-
-    if isinstance(v, datetime.datetime):
-        if v.tzinfo is not None:
-            v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-        return v.isoformat(sep=" ")
-    if isinstance(v, datetime.date):
-        return v.isoformat()
-    return v
+# pushed filter class → the pruner's conjunct op
+_PUSHED_OPS = {EqualTo: "=", In: "in", GreaterThan: ">",
+               GreaterThanOrEqual: ">=", LessThan: "<", LessThanOrEqual: "<="}
 
 
 def _utc_everywhere() -> bool:
@@ -1022,31 +966,6 @@ def _utc_everywhere() -> bool:
             return tz in ("UTC", "Etc/UTC", "GMT", "Z", "+00:00")
     except Exception:  # planning subprocess without a session
         pass
-    return True
-
-
-def _value_matches(value, f) -> bool:
-    """Evaluate a pushed predicate against one scalar (the declared
-    default a missing column reads as). Conservative: keep on any
-    type mismatch."""
-    if value is None:
-        return False  # comparisons with NULL never match
-    value = _stat_comparable(value)
-    try:
-        if isinstance(f, EqualTo):
-            return value == _stat_comparable(f.value)
-        if isinstance(f, In):
-            return value in [_stat_comparable(v) for v in f.value]
-        if isinstance(f, GreaterThan):
-            return value > _stat_comparable(f.value)
-        if isinstance(f, GreaterThanOrEqual):
-            return value >= _stat_comparable(f.value)
-        if isinstance(f, LessThan):
-            return value < _stat_comparable(f.value)
-        if isinstance(f, LessThanOrEqual):
-            return value <= _stat_comparable(f.value)
-    except TypeError:
-        return True
     return True
 
 
@@ -1374,43 +1293,6 @@ class LakeTableBatchReader(DataSourceReader):
         self.branch = branch
         self.preds: list = []
 
-    @staticmethod
-    def _stats_may_match(stats: dict, phys: str, f) -> bool:
-        """Conservative footer-stats check: False only when NO row of
-        the file can satisfy the predicate. Same contract as the JVM
-        path's stats pruning (catalog/table.py stats_may_match),
-        re-expressed over the pushFilters classes; safe without that
-        path's stat normalization because pushFilters only admits
-        int/str literals on int/string columns."""
-        if phys not in stats:
-            # the pushdown gate resolves leaf names case-insensitively
-            # (like Spark); a dotted stats key cased differently from
-            # the pushed attribute must still prune when it matches
-            # exactly one recorded key (ADVICE r14 follow-through)
-            hits = [k for k in stats if k.lower() == phys.lower()]
-            if len(hits) != 1:
-                return True
-            phys = hits[0]
-        lo, hi = stats[phys]
-        if lo != lo or hi != hi:  # NaN-poisoned stats prove nothing
-            return True
-        try:
-            if isinstance(f, EqualTo):
-                return lo <= _stat_comparable(f.value) <= hi
-            if isinstance(f, In):
-                return any(lo <= _stat_comparable(v) <= hi for v in f.value)
-            if isinstance(f, GreaterThan):
-                return hi > _stat_comparable(f.value)
-            if isinstance(f, GreaterThanOrEqual):
-                return hi >= _stat_comparable(f.value)
-            if isinstance(f, LessThan):
-                return lo < _stat_comparable(f.value)
-            if isinstance(f, LessThanOrEqual):
-                return lo <= _stat_comparable(f.value)
-        except TypeError:
-            return True  # incomparable literal/stat types — keep
-        return True
-
     def partitions(self) -> Sequence[InputPartition]:
         meta = _load_meta(self.path)
         head = (
@@ -1435,98 +1317,28 @@ class LakeTableBatchReader(DataSourceReader):
                 "laketable python batch reader does not apply merge-on-read "
                 "deletes; use LakeTable.read() for tables with delete files"
             )
-        parts: list[_FilePartition] = []
+        from ..catalog.table import FileEntry
+
+        preds = [(tuple(p.attribute), _PUSHED_OPS[type(p)],
+                  list(p.value) if isinstance(p, In) else p.value)
+                 for p in self.preds]
+        entries = pruning.prune(
+            [FileEntry.from_json(f) for f in snap["files"]], preds, meta)
         temporal = getattr(self, "_PUSH_DDL_TEMPORAL", set())
-        for f in snap["files"]:
-            proj = _projection(meta, f["schema_version"])
-            by_cur = {
-                name: (phys, default, ddl.strip().lower())
-                for name, ddl, phys, default in proj
-            }
-            stats = f.get("stats", {}) or {}
-            keep = True
-            arrow_filters: list[tuple] = []
-            for p in self.preds:
-                col = p.attribute[0]
-                if col not in by_cur:
-                    continue  # not a table column (shouldn't happen)
-                phys, default, ddl = by_cur[col]
-                if len(p.attribute) > 1:
-                    # struct-leaf predicate: stats key is the file's
-                    # dotted leaf path (top-level renames follow the
-                    # field-id projection; leaf names never rename).
-                    # PRUNE-ONLY — never an Arrow row filter.
-                    if phys is None:
-                        # struct column added after this file: every
-                        # row reads the declared default. A NULL (or
-                        # absent-leaf) default can never satisfy a
-                        # comparison predicate → skip the whole file;
-                        # any non-null default keeps it (conservative).
-                        # Resolve each step CASE-INSENSITIVELY, like
-                        # the pushdown gate (_nested_leaf_ddl) that
-                        # admitted this predicate — a casing divergence
-                        # between the pushed attribute and the stored
-                        # default keys must not prune a file whose
-                        # non-null default could match (ADVICE r13).
-                        leaf_default = default
-                        ambiguous = False
-                        for step in p.attribute[1:]:
-                            if not isinstance(leaf_default, dict):
-                                leaf_default = None
-                                break
-                            if step in leaf_default:
-                                leaf_default = leaf_default[step]
-                                continue
-                            hits = [
-                                v for k, v in leaf_default.items()
-                                if k.lower() == step.lower()
-                            ]
-                            if len(hits) == 1:
-                                leaf_default = hits[0]
-                            else:
-                                # >1: keys differing only by case —
-                                # can't tell which default applies;
-                                # keep the file (conservative).
-                                ambiguous = len(hits) > 1
-                                leaf_default = None
-                                break
-                        if not ambiguous and not _value_matches(leaf_default, p):
-                            keep = False
-                            break
-                        continue
-                    dotted = ".".join((phys,) + tuple(p.attribute[1:]))
-                    if not self._stats_may_match(stats, dotted, p):
-                        keep = False
-                        break
-                    continue
-                if phys is None:
-                    # column added after this file was written → every
-                    # row reads as the declared default (or NULL): the
-                    # whole file matches iff the default does. No Arrow
-                    # filter either way — the column isn't in the file.
-                    if not _value_matches(default, p):
-                        keep = False
-                        break
-                    continue
-                if not self._stats_may_match(stats, phys, p):
-                    keep = False
-                    break
-                if ddl in temporal:
-                    continue  # prune-only: no Arrow row filter (see above)
-                if isinstance(p, In):
-                    arrow_filters.append((phys, "in", list(p.value)))
-                elif isinstance(p, EqualTo):
-                    arrow_filters.append((phys, "=", p.value))
-                else:
-                    op = {"GreaterThan": ">", "GreaterThanOrEqual": ">=",
-                          "LessThan": "<", "LessThanOrEqual": "<="}[
-                              type(p).__name__]
-                    arrow_filters.append((phys, op, p.value))
-            if not keep:
-                continue
+        parts: list[_FilePartition] = []
+        for e in entries:
+            proj = _projection(meta, e.schema_version)
+            # Arrow row filters: top-level columns the file holds, not
+            # temporal ones (prune-only, see the pushdown reader)
+            phys = {name: (p, ddl.strip().lower())
+                    for name, ddl, p, _default in proj if p is not None}
+            filters = [
+                (phys[path[0]][0], op, lit) for path, op, lit in preds
+                if len(path) == 1 and path[0] in phys
+                and phys[path[0]][1] not in temporal
+            ]
             parts.append(_FilePartition(
-                os.path.join(self.path, f["path"]), proj,
-                filters=arrow_filters or None,
+                os.path.join(self.path, e.path), proj, filters=filters or None,
             ))
         return parts
 
@@ -1539,9 +1351,10 @@ class LakeTablePushdownBatchReader(LakeTableBatchReader):
     "true")`` + ``spark.sql.python.filterPushdown.enabled=true``):
     Spark hands the scan's predicates to :meth:`pushFilters`;
     ``partitions()`` then prunes whole files from the snapshot's
-    manifest by footer min/max stats BEFORE any task launches (and
-    skips files written before a filtered column existed — all-null
-    can never match), and workers pass the same predicates to the
+    manifest with :func:`..catalog.pruning.prune` BEFORE any task
+    launches (partition values and footer stats bound by field id; a
+    file written before a filtered column existed is judged by the
+    column's default), and workers pass the same predicates to the
     Arrow read so matching files ship only matching rows. Every
     filter is still returned to Spark for re-evaluation, so pruning
     can only skip files, never change results."""
@@ -1558,7 +1371,7 @@ class LakeTablePushdownBatchReader(LakeTableBatchReader):
     # them after a full read of the surviving files — correctness over
     # pruning, per the NaN-ordering contract.
     # Temporal columns push PRUNE-ONLY: file-level stats comparison is
-    # string-vs-string in the footer's canonical form (_stat_comparable
+    # string-vs-string in the footer's canonical form (pruning.norm_stat
     # — lexical order IS chronological there), but the Arrow ROW filter
     # is skipped for them: a datetime scalar against a file's native
     # tz-aware/ns-unit column would drag timezone/unit coercion
@@ -1584,37 +1397,25 @@ class LakeTablePushdownBatchReader(LakeTableBatchReader):
         for f in filters:
             if not isinstance(f, pushable):
                 continue
-            if len(f.attribute) > 1:
-                # STRUCT-LEAF predicates (r13): Spark delivers nested
-                # column paths (("meta","n")), and the writers record
-                # dotted footer stats ("meta.n") — so struct-leaf
-                # predicates prune whole files, PRUNE-ONLY (no Arrow
-                # row filter — pq.read_table filters address flat
-                # columns only; Spark re-applies the predicate). Gated
-                # to int/string leaves, the two types whose stats
-                # comparisons are exact (the float/temporal caveats
-                # above apply unchanged, so those leaves never push).
-                top = ddl_of.get(f.attribute[0])
-                leaf = _nested_leaf_ddl(top, f.attribute[1:]) if top else None
-                leaf = leaf.strip().lower() if leaf else None
-                vals = list(f.value) if isinstance(f, In) else [f.value]
-                if bool(vals) and (
-                    (leaf in self._PUSH_DDL_INT and all(
-                        isinstance(v, int) and not isinstance(v, bool)
-                        for v in vals))
-                    or (leaf == "string"
-                        and all(isinstance(v, str) for v in vals))
-                ):
-                    self.preds.append(f)
-                continue
-            ddl = ddl_of.get(f.attribute[0])
+            # STRUCT-LEAF predicates (r13): Spark delivers nested column
+            # paths (("meta","n")), and the writers record dotted footer
+            # stats ("meta.n") — so struct-leaf predicates prune whole
+            # files, PRUNE-ONLY (no Arrow row filter — pq.read_table
+            # filters address flat columns only; Spark re-applies the
+            # predicate). Gated to int/string leaves, the two types
+            # whose stats comparisons are exact (the float/temporal
+            # caveats above apply unchanged, so those leaves never push).
+            top = ddl_of.get(f.attribute[0])
+            ddl = _nested_leaf_ddl(top, f.attribute[1:]) if top else None
+            ddl = ddl.strip().lower() if ddl else None
+            flat = len(f.attribute) == 1
             vals = list(f.value) if isinstance(f, In) else [f.value]
             ok = bool(vals) and (
                 (ddl in self._PUSH_DDL_INT and all(
                     isinstance(v, int) and not isinstance(v, bool) for v in vals
                 ))
                 or (ddl == "string" and all(isinstance(v, str) for v in vals))
-                or (ddl in self._PUSH_DDL_FLOAT
+                or (flat and ddl in self._PUSH_DDL_FLOAT
                     and isinstance(f, self._FLOAT_SAFE_OPS)
                     and all(
                         isinstance(v, (int, float))
@@ -1622,16 +1423,16 @@ class LakeTablePushdownBatchReader(LakeTableBatchReader):
                         and v == v  # a NaN literal inverts under Spark
                         for v in vals
                     ))
-                or (ddl == "date" and all(
+                or (flat and ddl == "date" and all(
                     isinstance(v, datetime.date)
                     and not isinstance(v, datetime.datetime) for v in vals
                 ))
-                or (ddl == "timestamp_ntz" and all(
+                or (flat and ddl == "timestamp_ntz" and all(
                     isinstance(v, datetime.datetime) for v in vals
                 ))
                 # instant timestamps: only when every zone in play is
                 # UTC — see _utc_everywhere for the row-loss hazard
-                or (ddl == "timestamp" and _utc_everywhere() and all(
+                or (flat and ddl == "timestamp" and _utc_everywhere() and all(
                     isinstance(v, datetime.datetime) for v in vals
                 ))
             )
@@ -1905,8 +1706,6 @@ def _python_partition_fn(spec_json: list, columns: list[tuple[str, str]]):
         """One partition dict per row of the Arrow table."""
         import pyarrow as pa
 
-        from ..catalog.table import _HIVE_NULL
-
         per_field = []
         for key, t, kind in plan:
             col = tbl.column(t.column)
@@ -1922,7 +1721,7 @@ def _python_partition_fn(spec_json: list, columns: list[tuple[str, str]]):
             out = []
             for v in vals:
                 if v is None:
-                    out.append(_HIVE_NULL)
+                    out.append(pruning.HIVE_NULL)
                 elif kind == "identity":
                     out.append(v.isoformat()
                                if hasattr(v, "isoformat") else str(v))
