@@ -39,11 +39,11 @@ from ._fsutil import atomic_write
 from .pruning import split_top
 from .table import (
     _DATA_DIR,
+    _DECODED_FILE_PATH_SQL,
     _HIVE_NULL,
     _META_DIR,
     _META_FILE,
     LakeTable,
-    _decode_path_uri,
     _strip_scheme,
 )
 from .transforms import Transform
@@ -2584,8 +2584,7 @@ def read_via_iceberg_metadata(
             # percent-decode (shared helper — ONE path-matching
             # domain): tombstone file_path values are raw location
             # strings (spec), the URI spelling is encoded
-            sel.append(_decode_path_uri(F.col("_metadata.file_path"))
-                       .alias("_ice_file"))
+            sel.append(F.expr(_DECODED_FILE_PATH_SQL).alias("_ice_file"))
             sel.append(F.col("_metadata.row_index").alias("_ice_pos"))
         parts.append(raw.select(*sel))
     out = parts[0]

@@ -11,6 +11,23 @@ os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 
 from iceberg_catalog_bench_spark.session import get_spark
 
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "spark_free: starts no SparkSession; `pytest -m spark_free` runs "
+        "the Spark-free tier alone")
+
+
+def pytest_collection_modifyitems(config, items):
+    for item in items:
+        if (item.get_closest_marker("spark_free")
+                and "spark" in getattr(item, "fixturenames", ())):
+            raise pytest.UsageError(
+                f"{item.nodeid} is marked spark_free but uses the spark "
+                "fixture")
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_DIR_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 

@@ -16,6 +16,8 @@ from iceberg_catalog_bench_spark.catalog.avro_ocf import (
     _Reader, _read_long, _write_long, decode, encode, read_ocf, write_ocf,
 )
 
+pytestmark = pytest.mark.spark_free
+
 SCHEMA = {
     "type": "record", "name": "row",
     "fields": [

@@ -1285,3 +1285,29 @@ def test_overwrite_partitions_spec_generation_error_names_a_working_remedy(
     rows = sorted((r.id, r.cat, r.v) for r in t.read().collect())
     assert rows == sorted([(i, "c0", i) for i in range(0, 10, 2)]
                           + [(100, "c1", -1)])
+
+
+def test_metadata_file_bytes_match_json_dump(spark, tmp_path):
+    """``_write_meta`` serializes with ``json.dumps`` (the C encoder);
+    the file holds exactly the bytes ``json.dump`` writes."""
+    import io
+    import json
+    import os
+
+    from iceberg_catalog_bench_spark.catalog.table import _json_safe, encode_meta
+
+    t = LakeTable.create(spark, str(tmp_path / "m"),
+                         "id bigint, ts timestamp, d decimal(10,2), s string")
+    for lo in (0, 3):
+        t.append(spark.range(lo, lo + 3).selectExpr(
+            "id", "timestamp_seconds(id * 86400) AS ts",
+            "CAST(id / 3 AS decimal(10,2)) AS d", "concat('é', id) AS s"))
+    t.delete_where("id = 4")
+    # a value only the ``default`` hook can serialize
+    t._meta["properties"]["checked_at"] = dt.datetime(2024, 1, 2, 3, 4, 5)
+    t._meta["properties"]["ratio"] = Decimal("1.50")
+    t._write_meta()
+    want = io.StringIO()
+    json.dump(encode_meta(t._meta), want, default=_json_safe)
+    with open(os.path.join(t.path, "_meta", "metadata.json"), "rb") as fh:
+        assert fh.read() == want.getvalue().encode()

@@ -5,9 +5,11 @@ batch reader's pushdown share one pruner (``catalog/pruning.py``). It
 binds stats, partition values and defaults by field id, judges a
 column added after a file by its declared default, and never prunes a
 float ``>``/``>=`` on stats (Spark orders NaN above every value). The
-last two tests pin the partition-source type rule of
-``overwrite_partitions`` and compaction: partition values recorded at
-an older type are a different spec generation.
+partition-source type tests pin the rule of ``overwrite_partitions``
+and compaction: partition values recorded at an older type are a
+different spec generation. A partition key (``_p_<transform>_<column>``)
+does not spell the transform's parameter, so spec evolution refuses to
+reuse a key that live files carry under other parameters.
 """
 
 import math
@@ -189,3 +191,48 @@ def test_scan_and_pushdown_reader_keep_the_same_files(spark, tmp_path):
         assert t.scan(where).count() == t.read().filter(where).count(), where
         pruned_somewhere |= len(kept) < n
     assert pruned_somewhere
+
+
+def _bucket4_table(spark, path):
+    """20 ``k int`` rows partitioned by ``bucket(4, k)``."""
+    t = LakeTable.create(spark, path, "k int", partition_by=["bucket(4, k)"])
+    t.append(spark.range(20).selectExpr("CAST(id AS INT) AS k"))
+    return t
+
+
+def _every_key_scans(spark, t, n):
+    assert [k for k in range(n) if t.scan(f"k = {k}").count() != 1] == []
+
+
+@pytest.mark.parametrize("route", ["replace", "drop_then_add"])
+def test_partition_key_reuse_with_other_parameters_is_refused(
+        spark, tmp_path, route):
+    """``bucket(4, k)`` → ``bucket(8, k)`` would record mod-8 values
+    under the key the mod-4 files carry; a scan then dropped 8 of 24
+    keys. Both routes are refused, and the table keeps pruning right."""
+    t = _bucket4_table(spark, str(tmp_path / route))
+    with pytest.raises(ValueError, match="rewrite_data_files.*expire_snapshots"):
+        if route == "replace":
+            t.replace_partition_field("bucket(4, k)", "bucket(8, k)")
+        else:
+            t.drop_partition_field("bucket(4, k)")
+            t.add_partition_field("bucket(8, k)")
+    t.append(spark.range(20, 24).selectExpr("CAST(id AS INT) AS k"))
+    _every_key_scans(spark, t, 24)
+
+
+def test_partition_key_reuse_after_the_remedy(spark, tmp_path):
+    """The remedy the refusal names: once no retained snapshot holds a
+    file carrying the key, the new field takes it."""
+    t = _bucket4_table(spark, str(tmp_path / "t"))
+    t.drop_partition_field("bucket(4, k)")
+    t.add_partition_field("bucket(4, k)")  # the same parameters: allowed
+    t.drop_partition_field("bucket(4, k)")
+    t.rewrite_data_files(min_input_files=1)
+    assert [e.partition for e in t._snapshot().files if e.partition] == []
+    t.expire_snapshots(retain_last=1)
+    t.add_partition_field("bucket(8, k)")
+    t.append(spark.range(20, 24).selectExpr("CAST(id AS INT) AS k"))
+    assert {v for e in t._snapshot().files
+            for v in e.partition.values()} <= {str(b) for b in range(8)}
+    _every_key_scans(spark, t, 24)

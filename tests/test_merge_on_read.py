@@ -299,24 +299,34 @@ def test_unknown_equality_column_raises(eq_table, spark):
         )
 
 
-def test_mor_scan_plan_shape(spark, tmp_path):
-    """The MoR read tax must be exactly a broadcast hash anti-join:
-    predicates still push to the parquet scan, the tombstone side
-    broadcasts, and nothing sort-merge-joins."""
+def test_mor_scan_plan_shape(spark, tmp_path, monkeypatch):
+    """The MoR read tax is a scan filter below the tombstone bound and
+    a broadcast hash anti-join above it: predicates still push to the
+    parquet scan either way, and nothing sort-merge-joins."""
+    from iceberg_catalog_bench_spark.catalog import table as table_mod
+
     t = LakeTable.create(
         spark, str(tmp_path / "plan"), "id bigint, v double",
         properties={"write.delete.mode": "merge-on-read"},
     )
     t.append(spark.range(100000).selectExpr("id", "cast(id as double) v"))
     t.delete_where("id % 1000 = 7")
-    plan = (
-        t.scan("id >= 500 and id < 600")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "LeftAnti" in plan
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "(id#" in plan and ">= 500" in plan  # pushed range filter
+
+    def plan():
+        return (t.scan("id >= 500 and id < 600")
+                ._jdf.queryExecution().executedPlan().toString())
+
+    probed = plan()
+    assert "Join" not in probed
+    assert "SortMergeJoin" not in probed
+    assert "(id#" in probed and ">= 500" in probed  # pushed range filter
+
+    monkeypatch.setattr(table_mod, "_DELETE_FILTER_ROWS", 0)
+    joined = plan()
+    assert "LeftAnti" in joined
+    assert "BroadcastHashJoin" in joined
+    assert "SortMergeJoin" not in joined
+    assert "(id#" in joined and ">= 500" in joined
 
 
 def test_rewrite_position_delete_files_procedure(mor_table, spark):

@@ -16,12 +16,15 @@ import subprocess
 import sys
 from dataclasses import dataclass, field
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from iceberg_catalog_bench_spark.catalog import pruning, spark_xxhash
 from iceberg_catalog_bench_spark.catalog.iceberg_bucket import iceberg_bucket
 from iceberg_catalog_bench_spark.catalog.transforms import Transform
+
+pytestmark = pytest.mark.spark_free
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 NAN = float("nan")

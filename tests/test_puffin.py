@@ -29,6 +29,7 @@ from iceberg_catalog_bench_spark.catalog.puffin import (
 )
 
 
+@pytest.mark.spark_free
 def test_murmur3_x64_128_canonical_vectors():
     """The hash DataSketches seeds with, pinned to the canonical
     public test vectors (little-endian longs)."""
@@ -40,6 +41,7 @@ def test_murmur3_x64_128_canonical_vectors():
         0xE34BBC7BBC071B6C, 0x7A433CA9C49A9347)
 
 
+@pytest.mark.spark_free
 @pytest.mark.parametrize("ndv", [0, 1, 7, 4096, 4097, 50_000, 12_345_678])
 def test_theta_sketch_estimate_roundtrip(ndv):
     """Synthesized compact sketches are self-consistent: estimate ==
@@ -49,6 +51,7 @@ def test_theta_sketch_estimate_roundtrip(ndv):
     assert abs(est - ndv) <= max(1e-9, 1e-6 * ndv)
 
 
+@pytest.mark.spark_free
 def test_theta_sketch_binary_layout():
     """Serial version 3, COMPACT family, ordered/read-only flags, and
     sorted sub-theta entries — the invariants a conforming
@@ -68,6 +71,7 @@ def test_theta_sketch_binary_layout():
     assert entries[-1] < theta
 
 
+@pytest.mark.spark_free
 def test_puffin_container_roundtrip(tmp_path):
     p = str(tmp_path / "s.puffin")
     blobs = [
@@ -140,6 +144,7 @@ def test_walker_tolerates_missing_statistics(spark, tmp_path):
     assert t2.read().count() == 5000
 
 
+@pytest.mark.spark_free
 @pytest.mark.parametrize("ndv", [141_000_000_000, 1_000_000_000_000,
                                  200_000_000_000_000])
 def test_theta_sketch_huge_ndv(ndv):

@@ -17,6 +17,8 @@ import pytest
 
 from iceberg_catalog_bench_spark.catalog import snapshots
 
+pytestmark = pytest.mark.spark_free
+
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SEEDS = range(150)
 

@@ -56,6 +56,7 @@ def test_strings_cover_every_tail_branch(spark):
     assert got == _spark_hashes(spark, "string", values)
 
 
+@pytest.mark.spark_free
 @pytest.mark.parametrize("val,typ", [
     (128, "tinyint"), (-32769, "smallint"), (1 << 31, "int"),
     (1 << 63, "bigint"), (True, "int"), ("5", "int"), (5, "string"),
