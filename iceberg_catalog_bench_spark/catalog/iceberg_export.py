@@ -34,13 +34,12 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from . import avro_ocf
+from . import avro_ocf, transforms
 from ._fsutil import atomic_write
 from .pruning import split_top
 from .table import (
     _DATA_DIR,
     _DECODED_FILE_PATH_SQL,
-    _HIVE_NULL,
     _META_DIR,
     _META_FILE,
     LakeTable,
@@ -377,16 +376,8 @@ _AVRO_OF_ICEBERG = {
 }
 
 _EPOCH_DATE = datetime.date(1970, 1, 1)
-_EPOCH_DT = datetime.datetime(1970, 1, 1)
-
-
-def _sql_to_micros(sval: str) -> int:
-    """'2024-01-03 05:00:00[.ffffff]' (the native stat / partition
-    rendering) → epoch micros."""
-    dt = datetime.datetime.fromisoformat(str(sval))
-    if dt.tzinfo is not None:
-        dt = dt.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-    return (dt - _EPOCH_DT) // datetime.timedelta(microseconds=1)
+# a timestamp stat is spelled as an identity partition value of it
+_TS_STAT = Transform("identity", "")
 
 
 def _encode_bound(v, ice_type) -> bytes | None:
@@ -413,7 +404,8 @@ def _encode_bound(v, ice_type) -> bytes | None:
             d = datetime.date.fromisoformat(str(v)[:10])
             return _struct.pack("<i", (d - _EPOCH_DATE).days)
         if ice_type in ("timestamp", "timestamptz"):
-            return _struct.pack("<q", _sql_to_micros(v))
+            return _struct.pack(
+                "<q", transforms.unspell(_TS_STAT, "timestamp", str(v)))
         if ice_type == "string":
             return str(v).encode("utf-8")
         m = re.match(r"^decimal\((\d+),\s*(\d+)\)$", ice_type)
@@ -454,61 +446,20 @@ _MANIFEST_FILE_AVRO_SCHEMA = {
 
 
 def _avro_partition_value(t: Transform, sval, ice_type):
-    """Native ``_p_*`` hive string → typed Iceberg partition value
-    (inverse of :func:`_adopt_partition`'s conversions): day →
-    epoch-days, hour → epoch-hours, month/year → months/years since
-    1970, identity typed by source. ``ibucket`` exports its murmur3
-    value verbatim (it IS the spec hash, table spec Appendix B); the
-    legacy xxhash64 ``bucket`` exports as ``void`` — always null —
-    because its values live in a different hash space and a conforming
-    reader binding a predicate through ``bucket[N]`` would murmur3 the
-    literal and silently wrong-prune; truncate exports the native
-    string rendering."""
-    if t.name == "bucket":
-        return None  # void: legacy hash space, see _iceberg_transform
-    if sval is None or sval == _HIVE_NULL:
+    """Native ``_p_*`` value → typed Iceberg partition value: the
+    transform result, with decimals as Avro's unscaled two's-complement
+    bytes. Fields exported as ``void`` (see :func:`_iceberg_transform`)
+    carry None, and string-typed fields the native spelling."""
+    if sval is None or _iceberg_transform(t, ice_type) == "void":
         return None
-    if t.name == "identity":
-        if ice_type in ("long", "int"):
-            return int(sval)
-        if ice_type in ("double", "float"):
-            return float(sval)
-        if ice_type == "boolean":
-            return str(sval).lower() == "true"
-        if ice_type == "date":
-            return (datetime.date.fromisoformat(str(sval)[:10])
-                    - _EPOCH_DATE).days
-        if ice_type in ("timestamp", "timestamptz"):
-            return _sql_to_micros(sval)
-        return str(sval)
-    if t.name == "days":
-        return (datetime.date.fromisoformat(str(sval)[:10])
-                - _EPOCH_DATE).days
-    if t.name == "hours":
-        return _sql_to_micros(sval) // 3_600_000_000
-    if t.name == "months":
-        s = str(sval)
-        return (int(s[:4]) - 1970) * 12 + int(s[5:7]) - 1
-    if t.name == "years":
-        return int(str(sval)[:4]) - 1970
-    if t.name == "ibucket":
-        return int(sval)
-    if t.name == "itruncate":
-        st = str(ice_type or "")
-        if st.startswith("decimal"):
-            # native spelling "12.30" → Avro decimal logical value:
-            # minimum-length two's-complement big-endian of the
-            # unscaled int (same rule as the Appendix-B hash encoding)
-            sc = int(st.rstrip(" )").split(",")[1]) if "," in st else 0
-            u = int(decimal.Decimal(str(sval)).scaleb(sc))
-            mag = u if u >= 0 else ~u
-            return u.to_bytes(mag.bit_length() // 8 + 1, "big", signed=True)
-        if st == "binary":
-            return bytes.fromhex(str(sval))
-        return int(sval)
-    # truncate: spec-true for string sources (first W code points both
-    # sides); non-string sources export as void (always null)
-    return str(sval) if ice_type == "string" else None
+    if _avro_part_field_type(t, ice_type) == "string":
+        return None if sval == transforms.HIVE_NULL else str(sval)
+    r = transforms.unspell(t, _spark_ddl_type(ice_type), sval)
+    if isinstance(r, decimal.Decimal):
+        u = transforms.unscaled(r, ice_type)
+        mag = u if u >= 0 else ~u
+        return u.to_bytes(mag.bit_length() // 8 + 1, "big", signed=True)
+    return r
 
 
 def _avro_part_field_type(t: Transform, ice_type) -> object:
@@ -702,10 +653,7 @@ def to_iceberg_metadata(table: LakeTable, *,
     # the LATEST spec whose key-set matches (a re-added identical
     # field should resolve to the newest id)
     keyset_by_spec = [
-        frozenset(
-            f"_p_{Transform.from_json(tj).name}_{Transform.from_json(tj).column}"
-            for tj in sp
-        )
+        frozenset(transforms.key(Transform.from_json(tj)) for tj in sp)
         for sp in spec_list
     ]
     _PARAM_FREE = {"identity", "days", "hours", "months", "years", "day",
@@ -725,15 +673,15 @@ def to_iceberg_metadata(table: LakeTable, *,
         # else fail loudly.
         synthesized = []
         for k in sorted(fkeys):
-            name, _, column = k.removeprefix("_p_").partition("_")
-            if name not in _PARAM_FREE or not column:
+            t = transforms.parse_key(k)
+            if t is None or t.name not in _PARAM_FREE:
                 raise ValueError(
                     f"data file {file_entry.get('path')!r} carries partition "
                     f"keys {sorted(fkeys)} matching no recorded partition "
                     "spec and not synthesizable (parameterized transform); "
                     "cannot attribute a partition-spec-id"
                 )
-            synthesized.append(Transform(name, column).to_json())
+            synthesized.append(t.to_json())
         spec_list.append(synthesized)
         spec_keys.append(json.dumps(synthesized, sort_keys=True))
         keyset_by_spec.append(fkeys)
@@ -760,7 +708,7 @@ def to_iceberg_metadata(table: LakeTable, *,
         part = {}
         for tj, pfname in zip(spec_json, _spec_pf_names(spec_json)):
             t = Transform.from_json(tj)
-            sval = (d.get("partition") or {}).get(f"_p_{t.name}_{t.column}")
+            sval = (d.get("partition") or {}).get(transforms.key(t))
             part[pfname] = _avro_partition_value(
                 t, sval, types_by_name.get(t.column))
         bm = bounds_map.get(str(d.get("schema-id")), {})
@@ -1183,6 +1131,44 @@ _ICEBERG_TO_NATIVE_TRANSFORM = {
 }
 
 
+def _native_transform(tr: str, col: str, src_type) -> Transform | None:
+    """The native transform of the Iceberg transform ``tr`` over the
+    column ``col`` of Iceberg type ``src_type``, or None for a field
+    that carries no value to adopt."""
+    m = re.match(r"^(bucket|truncate)\[(\d+)\]$", tr)
+    if m:
+        if m.group(1) == "bucket":
+            # Foreign bucket[N] is Iceberg-spec murmur3 → the native
+            # `ibucket` transform is hash-identical (Appendix B):
+            # adopted values prune exactly and continued DML clusters
+            # into the same bucket layout
+            name = "ibucket"
+        elif src_type == "string":
+            # string truncate: both sides keep the first W code points
+            name = "truncate"
+        elif src_type in ("int", "long") \
+                or str(src_type).startswith("decimal") \
+                or src_type == "binary":
+            # the native `itruncate` computes the spec's exact
+            # semantics for all four (v - (v mod W) on the value /
+            # unscaled value; first-W-bytes for binary)
+            name = "itruncate"
+        else:
+            # truncate over a type the spec does not define it on
+            # (float/double/…): no portable value space — the field
+            # adopts as clustering-free (values dropped)
+            return None
+        return Transform(name, col, int(m.group(2)))
+    if tr == "void":
+        # always-null transform (also what this repo's exports use for
+        # legacy xxhash64 bucket fields): carries no pruning or
+        # clustering information
+        return None
+    if tr in _ICEBERG_TO_NATIVE_TRANSFORM:
+        return Transform(_ICEBERG_TO_NATIVE_TRANSFORM[tr], col)
+    raise ValueError(f"unsupported Iceberg transform {tr!r}")
+
+
 def _native_spec_json(
     spec_fields: list, names_by_id: dict[int, str], strict: bool = True,
     types_by_id: dict[int, object] | None = None,
@@ -1203,169 +1189,98 @@ def _native_spec_json(
                 f"partition spec field {f.get('name')!r} references "
                 f"unknown source-id {f.get('source-id')}"
             )
-        tr = f["transform"]
-        m = re.match(r"^(bucket|truncate)\[(\d+)\]$", tr)
-        if m:
-            src_type = (types_by_id or {}).get(f["source-id"])
-            if m.group(1) == "bucket":
-                # Foreign bucket[N] is Iceberg-spec murmur3 → the
-                # native `ibucket` transform is hash-identical
-                # (Appendix B): adopted values prune exactly and
-                # continued DML clusters into the same bucket layout
-                name = "ibucket"
-            elif src_type == "string":
-                # string truncate: both sides keep the first W code
-                # points — value-exact
-                name = "truncate"
-            elif src_type in ("int", "long") \
-                    or str(src_type).startswith("decimal") \
-                    or src_type == "binary":
-                # int/long/decimal/binary truncate: the native
-                # `itruncate` computes the spec's exact semantics for
-                # all four (v - (v mod W) on the value / unscaled
-                # value; first-W-bytes for binary) — value-exact
-                name = "itruncate"
-            else:
-                # truncate over a type the spec does not define it on
-                # (float/double/…): no portable value space — the
-                # field adopts as clustering-free (values dropped)
-                continue
-            out.append(Transform(name, col, int(m.group(2))).to_json())
-        elif tr == "void":
-            # always-null transform (also what this repo's exports use
-            # for legacy xxhash64 bucket fields): carries no pruning
-            # or clustering information — skip it
-            continue
-        elif tr in _ICEBERG_TO_NATIVE_TRANSFORM:
-            out.append(Transform(_ICEBERG_TO_NATIVE_TRANSFORM[tr], col).to_json())
-        else:
-            raise ValueError(f"unsupported Iceberg transform {tr!r}")
+        t = _native_transform(f["transform"], col,
+                              (types_by_id or {}).get(f["source-id"]))
+        if t is not None:
+            out.append(t.to_json())
     return out
 
 
 def _adopt_partition(part: dict, spec_fields_by_name: dict,
                      names_by_id: dict[int, str],
-                     types_by_id: dict | None = None) -> dict:
+                     types_by_id: dict) -> dict:
     """Foreign manifest partition struct → native ``_p_*`` hive keys.
 
-    Only conversions whose VALUE SPELLING provably matches the native
-    write path are emitted: identity (``CAST(v AS STRING)``), day
-    (epoch-days int or ISO string → ISO date), and hour/month/year —
-    Iceberg spells those as deterministic epoch-unit ints
-    (hours/months/years since 1970), which convert exactly to the
-    native ``CAST(date_trunc(unit, ts) AS STRING)`` rendering.
-    ``bucket[N]`` values convert to the native ``ibucket`` transform
-    verbatim — both are murmur3_x86_32 over the spec's Appendix B
-    encodings, so a point lookup on an adopted bucket-partitioned
-    table (the reference's flagship shape: ``bucket(tenant_id,16)``,
-    ICEBERG-Interoperability-Test-Spec.md:50) prunes exactly.
-    ``truncate[W]`` converts by SOURCE TYPE to the native value-exact
-    transform: string → ``truncate`` (first W code points both sides),
-    int/long → ``itruncate`` numerals, decimal → ``itruncate`` at the
-    declared scale (Avro carries unscaled two's-complement bytes),
-    binary → ``itruncate`` uppercase hex (r11 — the full spec truncate
-    matrix). A (type, value) combination outside that matrix omits the
-    key: a missing partition key means "never prune this file" (the
-    same conservative degradation streamed files use). ``void`` fields
-    carry nothing and are skipped. Keys already in the native ``_p_*``
-    dialect (this repo's own export) pass through whole.
+    Each field adopts as its native transform (:func:`_native_transform`:
+    ``bucket[N]`` as the hash-identical murmur3 ``ibucket``, so a point
+    lookup on an adopted bucket-partitioned table — the reference's
+    flagship ``bucket(tenant_id,16)``,
+    ICEBERG-Interoperability-Test-Spec.md:50 — prunes exactly;
+    ``truncate[W]`` by source type). Each value decodes to its
+    transform result (:func:`_partition_result`) and is spelled by the
+    partition-value codec as the native write path spells it; NULL is
+    the native null sentinel. A value with no decoding or no exact
+    spelling omits the key: a missing partition key means "never prune
+    this file" (the same conservative degradation streamed files use).
+    Keys already in the native ``_p_*`` dialect (this repo's own
+    export) pass through whole.
     """
     out: dict[str, str] = {}
     for k, v in part.items():
-        if k.startswith("_p_"):
+        if transforms.parse_key(k) is not None:
             out[k] = v
             continue
         f = spec_fields_by_name.get(k)
         col = names_by_id.get(f["source-id"]) if f else None
-        if f is None or col is None:
+        if col is None:
             continue
-        tr = f["transform"]
-        is_int = isinstance(v, int) and not isinstance(v, bool)
-        mb = re.match(r"^bucket\[\d+\]$", tr)
+        ice_type = types_by_id.get(f["source-id"])
+        t = _native_transform(f["transform"], col, ice_type)
+        if t is None:
+            continue
+        typ = _spark_ddl_type(ice_type)
         if v is None:
-            # null transform source → the native null sentinel (NOT
-            # the string "None", which could wrongly equality-prune)
-            if tr in _ICEBERG_TO_NATIVE_TRANSFORM:
-                out[f"_p_{_ICEBERG_TO_NATIVE_TRANSFORM[tr]}_{col}"] = _HIVE_NULL
-            elif mb:
-                out[f"_p_ibucket_{col}"] = _HIVE_NULL
-        elif mb and is_int:
-            # murmur3 bucket ordinal, hash-identical to native ibucket
-            out[f"_p_ibucket_{col}"] = str(v)
-        elif tr == "identity":
-            if isinstance(v, float) and v != 0 and not (
-                    1e-3 <= abs(v) < 1e7):
-                # Spark's CAST(double AS STRING) switches to E notation
-                # outside [1e-3, 1e7) ('1.0E7') while Python's str uses
-                # different thresholds ('10000000.0') — emitting the
-                # Python spelling would make equality pruning WRONGLY
-                # drop the file. Omit the key (never-prune) instead.
-                continue
-            out[f"_p_identity_{col}"] = str(v)
-        elif tr == "day":
-            if is_int:
-                v = (datetime.date(1970, 1, 1)
-                     + datetime.timedelta(days=v)).isoformat()
-            out[f"_p_days_{col}"] = str(v)[:10]
-        elif tr == "hour" and is_int:
-            dt = (datetime.datetime(1970, 1, 1)
-                  + datetime.timedelta(hours=v))
-            out[f"_p_hours_{col}"] = dt.strftime("%Y-%m-%d %H:%M:%S")
-        elif tr == "month" and is_int:
-            y, m = divmod(v, 12)
-            out[f"_p_months_{col}"] = f"{1970 + y:04d}-{m + 1:02d}-01 00:00:00"
-        elif tr == "year" and is_int:
-            out[f"_p_years_{col}"] = f"{1970 + v:04d}-01-01 00:00:00"
-        elif re.match(r"^truncate\[\d+\]$", tr):
-            st = str((types_by_id or {}).get(f["source-id"], ""))
-            if st.startswith("decimal"):
-                # decimal truncate: the value is the truncated decimal
-                # (Avro carries the unscaled two's-complement bytes;
-                # JSON dialects a rendered string). Native spelling =
-                # Spark's CAST(decimal AS STRING) at the declared
-                # scale, which Decimal(u)·10^-s reproduces exactly.
-                sc = int(st.rstrip(" )").split(",")[1]) if "," in st else 0
-                if isinstance(v, (bytes, bytearray)):
-                    # Avro decimal: unscaled two's-complement bytes
-                    u = int.from_bytes(bytes(v), "big", signed=True)
-                elif isinstance(v, str):
-                    # JSON single-value serialization: the rendered
-                    # decimal string ("12.30", Iceberg spec Appendix C)
-                    u = int(decimal.Decimal(v).scaleb(sc))
-                else:
-                    # a bare NUMBER is ambiguous (rendered value vs
-                    # unscaled units) — guessing wrong would WRONGLY
-                    # prune, so omit the key (never-prune) instead
-                    continue
-                out[f"_p_itruncate_{col}"] = str(
-                    decimal.Decimal(u).scaleb(-sc))
-            elif st == "binary":
-                # binary truncate: first W bytes — native spelling is
-                # the uppercase hex the JVM hex() rendering produces.
-                # Avro carries raw bytes; the Iceberg JSON single-value
-                # serialization is a hex STRING (normalize its case and
-                # validate — an unparseable value omits the key).
-                if isinstance(v, (bytes, bytearray)):
-                    out[f"_p_itruncate_{col}"] = bytes(v).hex().upper()
-                elif isinstance(v, str):
-                    try:
-                        out[f"_p_itruncate_{col}"] = \
-                            bytes.fromhex(v).hex().upper()
-                    except ValueError:
-                        pass  # not hex: never-prune on this field
-            elif isinstance(v, str) and st in ("string", ""):
-                # string truncate: both sides keep the first W code
-                # points — value-exact. Gated on the source type so a
-                # non-string value never lands under the wrong key
-                # ("" = legacy caller without a type map: a str value
-                # there can only be a string-truncate value).
-                out[f"_p_truncate_{col}"] = v
-            elif is_int:
-                # numeric truncate → the native spec-true itruncate
-                out[f"_p_itruncate_{col}"] = str(v)
-            # any other (type, value) combination: omit the key (the
-            # file is simply never pruned on it)
+            out[transforms.key(t)] = transforms.HIVE_NULL
+            continue
+        r = _partition_result(t, typ, v)
+        if r is None:
+            continue
+        try:
+            out[transforms.key(t)] = transforms.spell(t, typ, r)
+        except (ValueError, OverflowError):
+            continue  # no exact spelling: never prune on this field
     return out
+
+
+# Python type of an identity or itruncate result, by source type
+_RESULT_TYPE = {"decimal": decimal.Decimal, "binary": bytes, "string": str,
+                "boolean": bool, "float": float, "double": float}
+
+
+def _partition_result(t: Transform, typ: str, v) -> object:
+    """The result of ``t`` over a ``typ`` column that the foreign
+    partition value ``v`` holds, or None when ``v`` has no unambiguous
+    decoding. Avro carries results typed (dates and timestamps as epoch
+    counts, decimals as unscaled two's-complement bytes); Iceberg's
+    JSON single-value serialization spells dates, timestamps, decimals
+    and hex binary as strings. A bare number for a decimal is refused:
+    it could be the value or its unscaled units."""
+    if t.name == "truncate":
+        want = str
+    elif t.name in ("identity", "itruncate"):
+        want = _RESULT_TYPE.get(typ.split("(")[0], int)
+    else:
+        want = int
+    if isinstance(v, str) and want is not str:
+        try:
+            r = transforms.unspell(t, typ, v)
+        except ValueError:
+            return None
+    elif want is decimal.Decimal and isinstance(v, bytes):
+        sc = int(typ.rstrip(" )").split(",")[1]) if "," in typ else 0
+        r = decimal.Decimal(f"{int.from_bytes(v, 'big', signed=True)}e-{sc}")
+    elif want is float and type(v) is int:
+        r = float(v)
+    elif type(v) is want:
+        r = v
+    else:
+        return None
+    if want is float and r != 0 and not 1e-3 <= abs(r) < 1e7:
+        # Spark's CAST(double AS STRING) switches to E notation outside
+        # [1e-3, 1e7) ('1.0E7') where Python's str does not
+        # ('10000000.0'): never prune on such a value
+        return None
+    return r
 
 
 # --- real-Avro manifest decoding ------------------------------------
@@ -1374,17 +1289,6 @@ def _adopt_partition(part: dict, spec_fields_by_name: dict,
 # names; the repo's own exporter historically used a JSON dialect with
 # hyphen names. These readers normalize BOTH to the hyphen dialect the
 # parse loop consumes, so adoption is serialization-agnostic.
-
-
-def _micros_to_sql(us: int) -> str:
-    """Epoch-micros → the naive-UTC SQL-literal space form the native
-    stats / partition layers compare against ('2024-01-05 12:00:00' or
-    '… .123456' with trailing fraction zeros trimmed — the same
-    rendering Spark's CAST(ts AS STRING) produces)."""
-    dt = datetime.datetime(1970, 1, 1) + datetime.timedelta(microseconds=us)
-    s = dt.strftime("%Y-%m-%d %H:%M:%S")
-    frac = f"{dt.microsecond:06d}".rstrip("0")
-    return f"{s}.{frac}" if frac else s
 
 
 def _decode_bound(b: bytes, ice_type) -> object:
@@ -1419,9 +1323,11 @@ def _decode_bound(b: bytes, ice_type) -> object:
             return (datetime.date(1970, 1, 1)
                     + datetime.timedelta(days=days)).isoformat()
         if t in ("timestamp", "timestamptz"):
-            return _micros_to_sql(_struct.unpack("<q", b)[0])
+            return transforms.spell(_TS_STAT, "timestamp",
+                                    _struct.unpack("<q", b)[0])
         if t in ("timestamp_ns", "timestamptz_ns"):
-            return _micros_to_sql(_struct.unpack("<q", b)[0] // 1000)
+            return transforms.spell(_TS_STAT, "timestamp",
+                                    _struct.unpack("<q", b)[0] // 1000)
         if t == "time":
             return _struct.unpack("<q", b)[0]
         if t == "string":
@@ -1452,31 +1358,6 @@ def _bounds_from_avro(bounds, types_by_id: dict) -> dict:
     return out
 
 
-def _partition_from_avro(part: dict, spec_fields_by_name: dict,
-                         types_by_id: dict) -> dict:
-    """Decoded Avro partition record → the JSON-dialect partition dict
-    ``_adopt_partition`` consumes. Identity values over date/timestamp
-    sources become their native string spellings here (Avro carries raw
-    epoch ints); day/hour/month/year stay as Iceberg's epoch-unit ints
-    (``_adopt_partition`` converts those)."""
-    out: dict = {}
-    for k, v in part.items():
-        f = spec_fields_by_name.get(k)
-        if f is None or v is None or not isinstance(v, int) \
-                or isinstance(v, bool):
-            out[k] = v
-            continue
-        if f["transform"] == "identity":
-            st = types_by_id.get(f["source-id"])
-            if st == "date":
-                v = (datetime.date(1970, 1, 1)
-                     + datetime.timedelta(days=v)).isoformat()
-            elif st in ("timestamp", "timestamptz"):
-                v = _micros_to_sql(v)
-        out[k] = v
-    return out
-
-
 def _read_manifest_list(path: str) -> dict:
     """Manifest list → ``{"manifests": [...]}`` in the hyphen dialect,
     whether the file is a real Avro OCF or the repo's JSON."""
@@ -1500,8 +1381,7 @@ def _read_manifest_list(path: str) -> dict:
     return {"manifests": mans}
 
 
-def _read_manifest(path: str, spec_fields_by_name: dict,
-                   types_by_id: dict) -> dict:
+def _read_manifest(path: str, types_by_id: dict) -> dict:
     """One manifest → ``{"entries": [...]}`` in the hyphen dialect.
     Avro entries (underscore names, id-keyed byte bounds, typed
     partition records) are normalized field by field; Java writers
@@ -1520,8 +1400,7 @@ def _read_manifest(path: str, spec_fields_by_name: dict,
             "content": d.get("content") or 0,
             "file-path": d["file_path"],
             "file-format": d.get("file_format", "PARQUET"),
-            "partition": _partition_from_avro(
-                d.get("partition") or {}, spec_fields_by_name, types_by_id),
+            "partition": d.get("partition") or {},
             "record-count": d["record_count"],
             "file-size-in-bytes": d["file_size_in_bytes"],
         }
@@ -1789,7 +1668,7 @@ def _parse_iceberg_v2(metadata_path: str) -> dict:
     # depends on the manifest-list entry's partition-spec-id, so a
     # manifest referenced under two spec ids (pathological but legal)
     # must not reuse the first spec's translation (ADVICE r9)
-    manifest_memo: dict[tuple, dict] = {}
+    manifest_memo: dict[str, dict] = {}
     # (path, inherited-seq, spec-id) → (converted data files, delete files):
     # CONVERSION (bounds rebind, partition translation) is the
     # expensive half, so it too runs once per unique manifest; later
@@ -1823,10 +1702,10 @@ def _parse_iceberg_v2(metadata_path: str) -> dict:
                 continue
             mfiles: list[dict] = []
             mdels: list[dict] = []
-            manifest = manifest_memo.get((mpath, spec_id))
+            manifest = manifest_memo.get(mpath)
             if manifest is None:
-                manifest = manifest_memo[(mpath, spec_id)] = _read_manifest(
-                    mpath, spec_fields_by_id.get(spec_id, {}), types_by_id)
+                manifest = manifest_memo[mpath] = _read_manifest(
+                    mpath, types_by_id)
             for e in manifest["entries"]:
                 if e.get("status") == 2:  # DELETED — not live
                     continue
@@ -2196,7 +2075,7 @@ def validate_iceberg_metadata(metadata_path: str) -> list[dict]:
                 add("warning", "manifest-length-drift", mpath,
                     f"declared {declared}, actual {actual}")
             try:
-                manifest = _read_manifest(mpath, {}, types_by_id)
+                manifest = _read_manifest(mpath, types_by_id)
             except Exception as e:
                 add("error", "unreadable-manifest", mpath, str(e))
                 continue
@@ -2532,7 +2411,7 @@ def read_via_iceberg_metadata(
     eq_deletes: list[dict] = []
     referenced: set[str] = set()
     for m in mlist["manifests"]:
-        manifest = _read_manifest(m["manifest-path"], {}, types_by_id)
+        manifest = _read_manifest(m["manifest-path"], types_by_id)
         for e in manifest["entries"]:
             if e.get("status") == 2:
                 continue
@@ -2762,7 +2641,7 @@ def duckdb_scan_sql(metadata_path: str, snapshot_id: int | None = None) -> str:
     snap_schema = {s["snapshot-id"]: s.get("schema-id", cur_sid)
                    for s in md["snapshots"]}
     for m in mlist["manifests"]:
-        manifest = _read_manifest(m["manifest-path"], {}, types_by_id)
+        manifest = _read_manifest(m["manifest-path"], types_by_id)
         for e in manifest["entries"]:
             if e.get("status") == 2:
                 continue

@@ -15,18 +15,19 @@ from __future__ import annotations
 import datetime
 import re
 from collections.abc import Callable, Sequence
+from dataclasses import replace
 from typing import Any
 
-from . import spark_xxhash
-from .transforms import Transform, parse_spec
-
-HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+from . import spark_xxhash, transforms
+from .transforms import HIVE_NULL, Transform, parse_spec
 
 Conjunct = tuple[tuple[str, ...], str, Any]
 
 _ISO_TS = re.compile(r"^\d{4}-\d{2}-\d{2}[T ]\d{2}:\d{2}")
 _ISO_DATE = re.compile(r"^\d{4}-\d{2}-\d{2}$")
-_ISO_PREFIX = re.compile(r"^\d{4}-\d{2}-\d{2}([T ]\d{2}:\d{2}:\d{2})?")
+# a date, or a date and time of day, with no zone
+_WALL_CLOCK = re.compile(
+    r"^(\d{4})-(\d{2})-(\d{2})(?:[T ](\d{2}):(\d{2})(?::(\d{2})(?:\.\d+)?)?)?$")
 _LIT = r"'[^']*'|[-\d.]+"
 # column refs admit dotted STRUCT-leaf paths (meta.n): leaf stats are
 # recorded under the dotted spelling (footer_min_max)
@@ -81,27 +82,24 @@ def norm_stat(v: Any) -> Any:
     return v
 
 
-def calendar_floor(transform: str, val: Any) -> str | None:
-    """Floor an ISO-shaped predicate literal to a calendar transform's
-    partition-value SPELLING — pure string arithmetic, so equality and
-    range pruning on days/hours/months/years partitions never run a
-    Spark job. None when the transform is not calendar or the literal
-    is not ISO-shaped."""
-    if transform not in ("days", "hours", "months", "years"):
+def calendar_floor(t: Transform, val: Any) -> str | None:
+    """The partition value a calendar transform gives the literal
+    ``val``, computed without Spark: a wall-clock literal floors to the
+    same value in every session zone. None when ``t`` is not calendar
+    or ``val`` is not a wall-clock literal; a literal with a zone names
+    an instant whose wall clock depends on the session zone."""
+    m = _WALL_CLOCK.match(str(val)) if t.name in transforms.CALENDAR \
+        else None
+    if m is None:
         return None
-    s = str(val)
-    if not _ISO_PREFIX.match(s):
+    try:
+        wall = datetime.datetime(*(int(g or 0) for g in m.groups()))
+    except ValueError:
         return None
-    if len(s) == 10:  # bare date literal
-        s = s + " 00:00:00"
-    s = s.replace("T", " ", 1)
-    if transform == "days":
-        return s[:10]
-    if transform == "hours":
-        return s[:13] + ":00:00"
-    if transform == "months":
-        return s[:7] + "-01 00:00:00"
-    return s[:4] + "-01-01 00:00:00"
+    us = (wall - datetime.datetime(1970, 1, 1)) \
+        // datetime.timedelta(microseconds=1)
+    return transforms.spell(t, "timestamp_ntz",
+                            transforms.result(t, "timestamp_ntz", us))
 
 
 def tv_key(t: Transform, col_type: str | None, val: Any) -> tuple:
@@ -123,7 +121,8 @@ def driver_transform_value(t: Transform, col_type: str,
         coerced = val
     elif base == "date" and isinstance(val, str) and t.name == "ibucket":
         try:
-            coerced = datetime.date.fromisoformat(val[:10])
+            coerced = (datetime.date.fromisoformat(val[:10])
+                       - datetime.date(1970, 1, 1)).days
         except ValueError:
             return None
     if coerced is None:
@@ -131,16 +130,11 @@ def driver_transform_value(t: Transform, col_type: str,
     if t.name in ("identity", "bucket"):
         if not spark_xxhash.fits(coerced, base):
             return None
-        if t.name == "bucket":
-            return str(spark_xxhash.bucket(coerced, base, t.param))
-        return str(coerced)
-    if t.name == "ibucket":
-        from .iceberg_bucket import iceberg_bucket
-
-        return str(iceberg_bucket(coerced, t.param))
-    if t.name == "itruncate" and isinstance(coerced, int):
-        return str(coerced - coerced % t.param)
-    return None
+    elif t.name != "ibucket" and not (
+            t.name == "itruncate" and isinstance(coerced, int)):
+        return None
+    return transforms.spell(t, col_type,
+                            transforms.result(t, col_type, coerced))
 
 
 def driver_transform_values(
@@ -306,14 +300,15 @@ def _bind(preds: list[tuple], cur: dict, fields: list[dict],
                 continue
             # a calendar partition value IS the floored literal's
             # spelling; other transforms compare transform values
-            floors = [calendar_floor(t.name, v) for v in lits]
+            floors = [calendar_floor(t, v) for v in lits]
             tkeys = []
             if None in floors:
                 floors = None
                 if op in ("=", "in"):
                     wanted += [(t, v, old["type"]) for v in lits]
                     tkeys = [tv_key(t, old["type"], v) for v in lits]
-            parts.append((f"_p_{t.name}_{old['name']}", floors, tkeys))
+            parts.append((transforms.key(replace(t, column=old["name"])),
+                          floors, tkeys))
         if op in (">", ">=") and (_nan_hides(f["type"], path[1:])
                                   or _nan_hides(old["type"], path[1:])):
             stat_lit = None  # Spark's NaN > every value
@@ -335,7 +330,7 @@ def prune(entries: Sequence, preds: list[Conjunct], meta: dict,
     literals on identity/bucket/truncate partitions are transformed by
     ONE ``transform_values`` call, made on first need, for every
     (literal, column type) pair the entries' versions hold; calendar
-    transforms compare floored ISO literals without it."""
+    transforms compare floored wall-clock literals without it."""
     if not preds:
         return list(entries)
     schemas, now = meta["schemas"], meta["current_schema_version"]

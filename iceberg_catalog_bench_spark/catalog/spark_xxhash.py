@@ -123,9 +123,12 @@ def fits(val: object, base_type: str) -> bool:
     return base_type == "string" and isinstance(val, str)
 
 
-def xxhash64(val: int | str, base_type: str) -> int:
+def xxhash64(val: int | str | None, base_type: str) -> int:
     """Spark's ``xxhash64(CAST(val AS base_type))`` for a ``val`` that
-    :func:`fits` ``base_type``. Raises ``ValueError`` otherwise."""
+    :func:`fits` ``base_type``; NULL hashes to the seed, as in Spark.
+    Raises ``ValueError`` otherwise."""
+    if val is None:
+        return SEED
     if not fits(val, base_type):
         raise ValueError(f"no exact xxhash64 of {val!r} as {base_type}")
     if base_type == "string":
@@ -133,6 +136,6 @@ def xxhash64(val: int | str, base_type: str) -> int:
     return hash_long(val) if INT_BITS[base_type] == 64 else hash_int(val)
 
 
-def bucket(val: int | str, base_type: str, n: int) -> int:
+def bucket(val: int | str | None, base_type: str, n: int) -> int:
     """The legacy ``bucket(n, c)`` value: ``pmod(xxhash64(c), n)``."""
     return xxhash64(val, base_type) % n

@@ -49,10 +49,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from . import deletes, pruning, snapshots
+from . import deletes, pruning, snapshots, transforms
 from ._fsutil import unlink_quietly
-from .pruning import HIVE_NULL as _HIVE_NULL
 from .pruning import driver_transform_value as _driver_transform_value
+from .transforms import HIVE_NULL as _HIVE_NULL
 from .transforms import Transform, parse_spec, transform_expr
 
 _META_DIR = "_meta"
@@ -681,12 +681,6 @@ def _key_match(tgt: DataFrame, src: DataFrame, on: Sequence[str]) -> Column:
     return cond
 
 
-def _partition_key(t: Transform) -> str:
-    """The ``partition`` key of a file entry under ``t``. It does not
-    spell ``t``'s parameter (:func:`_refuse_key_reuse`)."""
-    return f"_p_{t.name}_{t.column}"
-
-
 def _spell(t: Transform) -> str:
     return (f"{t.name}({t.param}, {t.column})" if t.param is not None
             else f"{t.name}({t.column})")
@@ -699,19 +693,19 @@ def _refuse_key_reuse(meta: dict, new: Transform) -> None:
     of ``new``. The field that last wrote the key is the newest spec
     field holding it; files carrying a key no recorded spec holds
     count as written under other parameters."""
-    key = _partition_key(new)
+    new_key = transforms.key(new)
     specs = [*(meta.get("partition_spec_history") or []),
              meta["partition_spec"]]
     prev = next((t for spec in reversed(specs)
                  for t in map(Transform.from_json, spec)
-                 if _partition_key(t) == key), None)
-    if prev == new or not any(key in (f.get("partition") or {})
+                 if transforms.key(t) == new_key), None)
+    if prev == new or not any(new_key in (f.get("partition") or {})
                               for sn in meta["snapshots"]
                               for f in sn["files"]):
         return
     was = _spell(prev) if prev is not None else "an unrecorded field"
     raise ValueError(
-        f"partition field {_spell(new)} would reuse the key {key} that "
+        f"partition field {_spell(new)} would reuse the key {new_key} that "
         f"files of retained snapshots carry with values of {was}, and "
         f"pruning could not tell the two apart. Drop {was} first, then "
         f"run rewrite_data_files(min_input_files=1) so that no live file "
@@ -1151,7 +1145,7 @@ class LakeTable:
             type_of = {f.name: f.type for f in fields}
             for t in spec:
                 # index-free key: stable across partition-spec evolution
-                name = _partition_key(t)
+                name = transforms.key(t)
                 df = df.withColumn(
                     name,
                     transform_expr(t, type_of.get(t.column)).cast("string"))
@@ -1460,10 +1454,10 @@ class LakeTable:
                  "added_rows": sum(f.rows for f in new_files)},
                 branch=branch,
             )
-        current_keys = {_partition_key(t) for t in spec}
+        current_keys = {transforms.key(t) for t in spec}
         if static:
             target = {
-                f"_p_identity_{c}": self._transform_value(by_col[c], v)
+                transforms.key(by_col[c]): self._transform_value(by_col[c], v)
                 for c, v in static.items()
             }
 
@@ -3981,7 +3975,7 @@ class LakeTable:
               .sortWithinPartitions("_g", "_s", *order))
         written = self._write_files(df, cluster=False, split_by=("_g", "_s"))
         current = self._spec_sources(self._meta["current_schema_version"])
-        now = {_partition_key(t) for t in self.partition_spec}
+        now = {transforms.key(t) for t in self.partition_spec}
         for e in written:
             items, sources = keys[int(e.partition["_g"])]
             e.partition = ({k: v for k, v in items if k in now}

@@ -130,7 +130,6 @@ rows worker-side, so selective reads ship only matching data.
 from __future__ import annotations
 
 import datetime
-import decimal
 import json
 import os
 import re
@@ -153,15 +152,12 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from ..catalog import pruning, snapshots
+from ..catalog import pruning, snapshots, transforms
 from ..catalog._fsutil import unlink_quietly
 from ..catalog.pruning import leaf_type as _nested_leaf_ddl
 from ..catalog.pruning import split_top as _split_top
 
 _META_REL = os.path.join("_meta", "metadata.json")
-
-_EPOCH_DATE = datetime.date(1970, 1, 1)
-_EPOCH_DT = datetime.datetime(1970, 1, 1)
 
 # Spark DDL type → pyarrow factory (primitives plus the full nested
 # algebra — array/struct/map, arbitrarily composed — r13: struct/map
@@ -1474,14 +1470,14 @@ class LakeTableStreamWriter(DataSourceStreamArrowWriter):
 
     Partition-transform FANOUT applies when every spec field is
     exactly computable in Python (``_python_partition_fn``: identity
-    over int/string/date, murmur3 ``ibucket``, numeric ``itruncate``,
-    string ``truncate``, and — under a UTC session/host zone —
-    ``days/hours/months/years`` over timestamps, the reference's
-    flagship ``days(event_ts)`` shape) — streamed commits into such
-    tables carry partition values and PRUNE from the first
-    micro-batch. Any non-reproducible field (float renderings,
-    calendar transforms under a non-UTC zone, legacy xxhash64
-    bucket) disables fanout and files are written UNKEYED: pruning
+    over int/string/date, legacy xxhash64 ``bucket`` and murmur3
+    ``ibucket``, numeric ``itruncate``, string ``truncate``, and —
+    under a UTC session zone — ``days/hours/months/years`` over
+    timestamps, the reference's flagship ``days(event_ts)`` shape) —
+    streamed commits into such tables carry partition values and PRUNE
+    from the first micro-batch. Any non-reproducible field (float
+    renderings, calendar transforms under a non-UTC zone) disables
+    fanout and files are written UNKEYED: pruning
     degrades conservatively (missing partition keys keep the file;
     footer stats still prune) until ``rewrite_data_files`` folds them
     into the spec-clustered layout — Iceberg's own streaming-write +
@@ -1600,178 +1596,53 @@ def _python_partition_fn(spec_json: list, columns: list[tuple[str, str]]):
     "Exactly" is the whole contract: a recorded ``_p_*`` value that
     renders differently from the JVM write path would make
     ``_prune_files`` equality-compare different spellings and WRONGLY
-    prune (the r9 E-notation lesson). The exact subset:
+    prune. :func:`..catalog.transforms.exact` lists the (transform,
+    type) pairs whose values the partition-value codec reproduces; any
+    other field disables fanout entirely (PARTIAL keysets would break
+    spec attribution on export), and the task writes one unkeyed file.
 
-    * identity over int/bigint/smallint/tinyint (``str(int)`` ==
-      Spark's CAST), string (verbatim), date (isoformat == CAST);
-      identity over timestamps too (r11): the trailing-zero-trimmed
-      fraction rendering of CAST(ts AS STRING), under the same
-      batch-tz gate as the calendar family for instant sources and
-      unconditionally for ntz;
-    * ``days`` over a DATE source (to_date is identity there);
-    * ``days``/``hours``/``months``/``years`` over INSTANT timestamps
-      — gated on the SESSION timezone being UTC, verified per task
-      from the Arrow batch itself: Spark ships TimestampType columns
-      as ``timestamp[us, tz=<session tz>]``, so the batch schema is
-      the authoritative session-tz signal even though the write runs
-      in a Python worker with no SparkSession (the returned plan
-      carries ``utc_instant_cols``; ``_write_task_file`` checks the
-      first batch and degrades to unkeyed files under any other
-      zone). Under UTC the JVM's ``to_date``/``date_trunc`` renderings
-      are pure integer arithmetic on the epoch micros (floor-div by
-      the unit; month/year via proleptic-Gregorian fields, which
-      Python's datetime shares with Spark). This is the reference's
-      flagship partitioning — ``days(event_ts)``
-      (ICEBERG-Interoperability-Test-Spec.md:50,
-      blob_dfs/blob-dfs_bench.py:72) — so streamed commits into the
-      reference-shaped table prune from the first micro-batch;
-    * the same calendar family over TIMESTAMP_NTZ — unconditionally:
-      measured session-tz-INDEPENDENT (ntz stays in the wall-clock
-      domain through to_date/date_trunc; pinned across four zones in
-      tests). Calendar transforms over DATE sources (other than
-      ``days``) are NOT admitted: the JVM renders them through a
-      midnight timestamp, and a DST gap at the truncated midnight
-      shifts the spelling (measured: America/Santiago renders
-      date_trunc('hour', DATE'2024-09-08') as 01:00:00) — with no tz
-      metadata on date columns the session zone is unknowable here;
-    * ``ibucket`` (murmur3 ordinals — integers, engine-independent);
-    * ``itruncate`` over int/long (``v - (v mod W)``, Python's ``%``
-      is floor-signed like pmod), decimal (the same arithmetic on the
-      exact unscaled int, rendered at the declared scale) and binary
-      (first W bytes as uppercase hex, matching JVM ``hex()``);
-    * ``truncate`` over string (first W code points).
-
-    Float renderings, instant-timestamp calendar transforms under a
-    non-UTC session zone (degraded per task by the batch-tz check),
-    calendar transforms over DATE sources, and the legacy xxhash64
-    bucket are NOT reproducible here — any such field disables fanout
-    entirely (PARTIAL keysets would break spec attribution on export),
-    and the task writes one unkeyed file: the conservative never-prune
-    degradation this path always had."""
-    from ..catalog.iceberg_bucket import iceberg_bucket
-    from ..catalog.transforms import Transform
-
-    types = {n: t.strip().lower().split("(")[0] for n, t in columns}
-    _INTS = ("int", "bigint", "smallint", "tinyint", "integer", "long")
-    _CAL = ("days", "hours", "months", "years")
-    plan: list[tuple[str, Transform, str]] = []
+    Instant timestamps (identity and the calendar family) are exact
+    only under a UTC SESSION zone, which a Python worker cannot read
+    from a SparkSession but can read from the data: Spark ships
+    TimestampType columns as ``timestamp[us, tz=<session tz>]``. The
+    returned plan carries those columns as ``utc_instant_cols``;
+    ``_write_task_file`` checks the first batch and degrades to
+    unkeyed files under any other zone. TIMESTAMP_NTZ stays in the
+    wall-clock domain end to end, so it needs no check."""
+    types = dict(columns)
+    plan: list[tuple[str, transforms.Transform, str]] = []
     utc_instant_cols: set[str] = set()
     for tj in spec_json:
-        t = Transform.from_json(tj)
+        t = transforms.Transform.from_json(tj)
         ty = types.get(t.column, "")
-        key = f"_p_{t.name}_{t.column}"
-        if t.name == "identity" and ty in _INTS + ("string", "date"):
-            plan.append((key, t, "identity"))
-        elif t.name == "identity" and ty in ("timestamp", "timestamp_ltz"):
-            # exact under a UTC session (batch-tz-verified, below):
-            # epoch micros render to the same trailing-zero-trimmed
-            # spelling as Spark's CAST(ts AS STRING)
-            plan.append((key, t, "identity_us"))
-            utc_instant_cols.add(t.column)
-        elif t.name == "identity" and ty == "timestamp_ntz":
-            plan.append((key, t, "identity_us"))  # wall micros, tz-free
-        elif t.name == "days" and ty == "date":
-            plan.append((key, t, "identity"))  # to_date(date) = date
-        elif t.name in _CAL and ty in ("timestamp", "timestamp_ltz"):
-            # exact only for UTC instants; the caller verifies the
-            # batch's Arrow tz (= the session tz) before keying
-            plan.append((key, t, f"{t.name}_us"))
-            utc_instant_cols.add(t.column)
-        elif t.name in _CAL and ty == "timestamp_ntz":
-            # wall-clock domain end to end — session-independent
-            plan.append((key, t, f"{t.name}_us"))
-        elif t.name == "ibucket" and ty in _INTS + ("string",):
-            plan.append((key, t, "ibucket"))
-        elif t.name == "itruncate" and ty in _INTS:
-            plan.append((key, t, "itruncate"))
-        elif t.name == "itruncate" and ty == "decimal":
-            plan.append((key, t, "itruncate_dec"))
-        elif t.name == "itruncate" and ty == "binary":
-            plan.append((key, t, "itruncate_bin"))
-        elif t.name == "truncate" and ty == "string":
-            plan.append((key, t, "truncate"))
-        else:
+        if not transforms.exact(t, ty):
             return None
+        if ty.strip().lower() in ("timestamp", "timestamp_ltz"):
+            utc_instant_cols.add(t.column)
+        plan.append((transforms.key(t), t, ty))
     if not plan:
         return None
-
-    _US_HOUR = 3_600_000_000
-    _US_DAY = 86_400_000_000
-
-    def _render_naive(dt: datetime.datetime) -> str:
-        # JVM timestamp→string of a truncated (zero-micros) value
-        return dt.isoformat(sep=" ")
 
     def compute(tbl) -> list[dict]:
         """One partition dict per row of the Arrow table."""
         import pyarrow as pa
 
         per_field = []
-        for key, t, kind in plan:
+        for key, t, ty in plan:
             col = tbl.column(t.column)
-            if kind.endswith("_us") and pa.types.is_timestamp(col.type):
-                # exact epoch micros (tz-aware instants and ntz
-                # wall-clocks alike — the UTC gate makes them equal);
-                # normalize the storage unit first (the write path
-                # casts batches to µs, but be robust to ns inputs)
-                vals = (col.cast(pa.timestamp("us", col.type.tz))
-                        .cast(pa.int64()).to_pylist())
-            else:
-                vals = col.to_pylist()
-            out = []
-            for v in vals:
-                if v is None:
-                    out.append(pruning.HIVE_NULL)
-                elif kind == "identity":
-                    out.append(v.isoformat()
-                               if hasattr(v, "isoformat") else str(v))
-                elif kind == "identity_us":
-                    # Spark's CAST(ts AS STRING): fraction only when
-                    # nonzero, trailing zeros trimmed (.5 not .500000);
-                    # manual year padding (strftime %Y is unpadded for
-                    # years < 1000 on glibc)
-                    dt = _EPOCH_DT + datetime.timedelta(microseconds=v)
-                    base = (f"{dt.year:04d}-{dt.month:02d}-{dt.day:02d} "
-                            f"{dt.hour:02d}:{dt.minute:02d}:{dt.second:02d}")
-                    frac = f"{dt.microsecond:06d}".rstrip("0")
-                    out.append(f"{base}.{frac}" if frac else base)
-                elif kind == "days_us":
-                    out.append((_EPOCH_DATE + datetime.timedelta(
-                        days=v // _US_DAY)).isoformat())
-                elif kind == "hours_us":
-                    out.append(_render_naive(
-                        _EPOCH_DT + datetime.timedelta(
-                            microseconds=v - v % _US_HOUR)))
-                elif kind == "months_us":
-                    d = _EPOCH_DATE + datetime.timedelta(days=v // _US_DAY)
-                    out.append(_render_naive(
-                        datetime.datetime(d.year, d.month, 1)))
-                elif kind == "years_us":
-                    d = _EPOCH_DATE + datetime.timedelta(days=v // _US_DAY)
-                    out.append(_render_naive(
-                        datetime.datetime(d.year, 1, 1)))
-                elif kind == "ibucket":
-                    out.append(str(iceberg_bucket(v, t.param)))
-                elif kind == "itruncate":
-                    out.append(str(int(v) - int(v) % t.param))
-                elif kind == "itruncate_dec":
-                    # exact unscaled arithmetic; rebuild at the same
-                    # exponent so str() renders the declared scale
-                    # (never E notation: exponent stays ≤ 0)
-                    exp = v.as_tuple().exponent
-                    u = int(v.scaleb(-exp))
-                    out.append(str(decimal.Decimal(
-                        u - u % t.param).scaleb(exp)))
-                elif kind == "itruncate_bin":
-                    out.append(bytes(v)[:t.param].hex().upper())
-                else:  # truncate over string
-                    out.append(v[:t.param])
-            per_field.append((key, out))
+            # the codec takes dates and timestamps as Iceberg stores
+            # them: days and microseconds since the epoch
+            if pa.types.is_timestamp(col.type):
+                col = col.cast(pa.timestamp("us", col.type.tz)) \
+                    .cast(pa.int64())
+            elif pa.types.is_date(col.type):
+                col = col.cast(pa.int32())
+            per_field.append((key, [
+                transforms.spell(t, ty, transforms.result(t, ty, v))
+                for v in col.to_pylist()]))
         n = tbl.num_rows
         return [{k: col[i] for k, col in per_field} for i in range(n)]
 
-    # instant-timestamp calendar sources whose Arrow batch tz (= the
-    # session tz) the task must verify is UTC before keying any file
     compute.utc_instant_cols = frozenset(utc_instant_cols)
     return compute
 

@@ -25,6 +25,7 @@ layout), and a re-export leg DuckDB scans back.
 """
 
 import datetime
+import decimal
 import json
 import os
 import re
@@ -38,6 +39,11 @@ from iceberg_catalog_bench_spark.catalog.iceberg_export import (
     to_iceberg_metadata,
 )
 from iceberg_catalog_bench_spark.catalog.table import LakeTable
+from iceberg_catalog_bench_spark.catalog.transforms import (
+    key,
+    transform_expr,
+)
+from tests.test_round9 import _chain, _data_file, _parquet
 
 EPOCH_DAY = (datetime.date(2024, 1, 1) - datetime.date(1970, 1, 1)).days
 
@@ -258,6 +264,23 @@ _AVRO_OF_ICE = {"long": "long", "int": "int", "double": "double",
                 "date": "int", "timestamptz": "long", "timestamp": "long"}
 
 
+def _avro_of_ice(ice_t: str):
+    m = re.match(r"^decimal\((\d+),\s*(\d+)\)$", ice_t)
+    if m:
+        return {"type": "bytes", "logicalType": "decimal",
+                "precision": int(m.group(1)), "scale": int(m.group(2))}
+    return _AVRO_OF_ICE[ice_t]
+
+
+def _avro_partition_value(v, avro_t):
+    """A JSON-dialect partition value in its Avro form: a decimal
+    string becomes the unscaled two's-complement bytes."""
+    if isinstance(avro_t, dict) and v is not None:
+        u = int(decimal.Decimal(v).scaleb(avro_t["scale"]))
+        return u.to_bytes((u.bit_length() + 8) // 8, "big", signed=True)
+    return v
+
+
 def _pack_bound(v, ice_t: str) -> bytes:
     """Iceberg binary single-value serialization (spec appendix D)."""
     import struct
@@ -310,7 +333,7 @@ def _avroize_chain(mp: str) -> str:
         for pf in spec_by_id[spec_id]["fields"]:
             tr = pf["transform"]
             if tr == "identity":
-                at = _AVRO_OF_ICE[types_by_id[pf["source-id"]]]
+                at = _avro_of_ice(types_by_id[pf["source-id"]])
             else:  # day/hour/month/year/bucket[n] all carry ints
                 at = "int"
             fields.append({"name": pf["name"], "type": ["null", at],
@@ -353,8 +376,10 @@ def _avroize_chain(mp: str) -> str:
             {"name": "data_file", "type": data_file, "field-id": 2},
         ]}
 
-    def conv_entry(e: dict) -> dict:
+    def conv_entry(e: dict, spec_id: int) -> dict:
         d = e["data-file"]
+        avro_types = {f["name"]: f["type"][1]
+                      for f in part_schema(spec_id)["fields"]}
 
         def kvs(bounds):
             out = [{"key": int(k),
@@ -372,7 +397,9 @@ def _avroize_chain(mp: str) -> str:
                 "content": d.get("content", 0),
                 "file_path": d["file-path"],
                 "file_format": d.get("file-format", "PARQUET"),
-                "partition": d.get("partition") or {},
+                "partition": {
+                    k: _avro_partition_value(v, avro_types.get(k))
+                    for k, v in (d.get("partition") or {}).items()},
                 "record_count": d["record-count"],
                 "file_size_in_bytes": d["file-size-in-bytes"],
                 "lower_bounds": kvs(d.get("lower-bounds")),
@@ -398,7 +425,7 @@ def _avroize_chain(mp: str) -> str:
                     os.path.basename(jp).replace(".json", "") + ".avro")
                 write_ocf(
                     ap, manifest_schema(spec_id),
-                    [conv_entry(e) for e in man["entries"]],
+                    [conv_entry(e, spec_id) for e in man["entries"]],
                     metadata={
                         "schema": json.dumps(md["schemas"][-1]),
                         "partition-spec": json.dumps(
@@ -488,6 +515,68 @@ def test_adopt_partition_value_conversion_and_pruning(adopted):
     # field-id-keyed bounds rebound to names → stats pruning works
     kept = adopted._prune_files(snap.files, "k = 4")
     assert [os.path.basename(e.path) for e in kept] == ["f3.parquet"]
+
+
+# (Iceberg transform, source column type, each file's one value of the
+# column as DuckDB SQL, each file's partition value, a where matching
+# the first file's row)
+SPELLING_CASES = {
+    "hour_before_year_1000": (
+        "hour", "timestamptz",
+        ["TIMESTAMPTZ '0999-01-01 05:30:00+00'",
+         "TIMESTAMPTZ '2024-01-01 10:00:00+00'"],
+        [(datetime.datetime(999, 1, 1, 5) - datetime.datetime(1970, 1, 1))
+         // datetime.timedelta(hours=1), 473_362],
+        "c = '0999-01-01 05:30:00'"),
+    "decimal_identity": (
+        "identity", "decimal(10,2)",
+        ["CAST(12.34 AS DECIMAL(10,2))", "CAST(56.78 AS DECIMAL(10,2))"],
+        ["12.34", "56.78"], "c = 12.34"),
+    "boolean_identity": (
+        "identity", "boolean", ["true", "false"], [True, False],
+        "c = 'true'"),
+}
+
+
+@pytest.mark.parametrize("fmt", ["json", "avro"])
+@pytest.mark.parametrize("case", sorted(SPELLING_CASES))
+def test_adopted_partition_values_are_spelled_as_spark(spark, tmp_path,
+                                                       case, fmt):
+    """An adopted partition value is spelled as the JVM write path
+    spells it (``CAST(transform AS STRING)``), so pruning on it keeps
+    the rows Spark's filter returns: a four-digit year before 1000, a
+    decimal at its scale (Avro carries unscaled bytes), a lowercase
+    boolean."""
+    tr, ice_type, sqls, values, where = SPELLING_CASES[case]
+    root = str(tmp_path / "foreign")
+    os.makedirs(os.path.join(root, "data"))
+    entries = []
+    for k, (sql, v) in enumerate(zip(sqls, values), start=1):
+        f = _parquet(os.path.join(root, "data", f"f{k}.parquet"),
+                     f"SELECT CAST({k} AS BIGINT) AS k, {sql} AS c")
+        e = _data_file(f, 1, seq=1, extra={"partition": {"p": v}})
+        e["snapshot-id"] = 1
+        entries.append(e)
+    mp = _chain(
+        root, [(1, 1, [("m1.json", 0, entries)])],
+        schemas=[{"type": "struct", "schema-id": 0, "fields": [
+            {"id": 1, "name": "k", "required": False, "type": "long"},
+            {"id": 2, "name": "c", "required": False, "type": ice_type}]}],
+        specs=[{"spec-id": 0, "fields": [
+            {"field-id": 1000, "source-id": 2, "name": "p",
+             "transform": tr}]}])
+    if fmt == "avro":
+        mp = _avroize_chain(mp)
+    t = LakeTable.from_iceberg_metadata(spark, mp, str(tmp_path / "adopted"))
+    [native] = t.partition_spec
+    typ = t._fields()[1].type
+    files = sorted(t._snapshot().files, key=lambda e: e.path)
+    spark_spelling = [r[0] for r in t.read().orderBy("k").select(
+        transform_expr(native, typ).cast("string")).collect()]
+    assert [f.partition[key(native)] for f in files] == \
+        spark_spelling
+    assert [r.k for r in t.scan(where).collect()] == \
+        [r.k for r in t.read().filter(where).collect()] == [1]
 
 
 def test_adopt_converts_bucket_partition_spec(spark, tmp_path):

@@ -124,6 +124,24 @@ def test_bare_date_literal_on_a_timestamp_column(spark, tmp_path):
         assert t.scan(where).count() == t.read().filter(where).count() == 1
 
 
+def test_literal_with_a_zone_on_a_days_partition(spark, tmp_path):
+    """Spark reads ``'2024-01-05T23:30:00-05:00'`` as 2024-01-06 04:30
+    UTC, in the file of the next day."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), "k int, ts timestamp",
+                         partition_by=["days(ts)"])
+    t.append(spark.sql(
+        "SELECT 1 AS k, TIMESTAMP'2024-01-05 23:30:00' AS ts "
+        "UNION ALL SELECT 2, TIMESTAMP'2024-01-06 04:30:00' "
+        "UNION ALL SELECT 3, TIMESTAMP'2024-01-06 09:00:00'"))
+    assert len(t._snapshot().files) == 2
+    lit = "'2024-01-05T23:30:00-05:00'"
+    for where in (f"ts = {lit}", f"ts IN ({lit})", f"ts < {lit}",
+                  f"ts >= {lit}"):
+        assert sorted(r.k for r in t.scan(where).collect()) == \
+            sorted(r.k for r in t.read().filter(where).collect()), where
+    assert [r.k for r in t.scan(f"ts = {lit}").collect()] == [2]
+
+
 def test_overwrite_partitions_refuses_files_at_an_older_source_type(
         spark, tmp_path):
     t = LakeTable.create(spark, str(tmp_path / "t"), "k int, v string",

@@ -314,6 +314,23 @@ def test_bare_date_literal_on_a_timestamp_column_means_midnight():
     assert pruning.prune(files, [(("ts",), "<", "2024-01-05")], meta) == []
 
 
+def test_a_literal_with_a_zone_floors_on_no_calendar_partition():
+    """Spark reads '2024-01-05T23:30:00-05:00' as 2024-01-06 04:30 UTC:
+    the literal's wall clock names neither day for sure, so equality
+    leaves it to the Spark eval and ranges keep both files."""
+    spec = [Transform("days", "ts").to_json()]
+    meta = _meta([{"id": 1, "name": "ts", "type": "timestamp"}], spec=spec)
+    files = [Entry(0, [], {}, {"_p_days_ts": d})
+             for d in ("2024-01-05", "2024-01-06")]
+    lit = "'2024-01-05T23:30:00-05:00'"
+    for where in (f"ts = {lit}", f"ts IN ({lit})", f"ts >= {lit}",
+                  f"ts < {lit}"):
+        assert pruning.prune(files, pruning.conjuncts(where), meta) == files
+    # a wall-clock literal still floors on the driver
+    assert pruning.prune(files, pruning.conjuncts(
+        "ts = '2024-01-05T23:30:00'"), meta) == files[:1]
+
+
 def test_partition_values_bound_at_each_files_name_and_type():
     """Files written before ``k int`` was renamed to ``key`` and widened
     recorded ``_p_bucket_k`` at the int hash."""

@@ -232,9 +232,10 @@ def test_streaming_sink_partition_fanout(spark, tmp_path):
 
 
 def test_streaming_sink_fanout_disabled_for_nonreproducible(spark, tmp_path):
-    """A spec field the Python path can't render EXACTLY (legacy
-    xxhash64 bucket) disables fanout entirely — files are unkeyed
-    (never-prune, the old conservative behavior), never wrongly keyed."""
+    """A spec field the Python path can't render EXACTLY (identity over
+    a double: Spark and Python spell floats differently) disables
+    fanout entirely — files are unkeyed (never-prune, the old
+    conservative behavior), never wrongly keyed."""
     from iceberg_catalog_bench_spark.catalog.table import LakeTable
     from iceberg_catalog_bench_spark.streaming.table_source import (
         register_source,
@@ -243,12 +244,11 @@ def test_streaming_sink_fanout_disabled_for_nonreproducible(spark, tmp_path):
 
     register_source(spark)
     src = LakeTable.create(spark, str(tmp_path / "src"),
-                           "k bigint, v string")
+                           "k bigint, x double")
     src.append(spark.range(8).select(
-        F.col("id").alias("k"), F.concat(F.lit("v"), "id").alias("v")))
+        F.col("id").alias("k"), (F.col("id") * 1e7).alias("x")))
     dst = LakeTable.create(spark, str(tmp_path / "dst"),
-                           "k bigint, v string",
-                           partition_by=["bucket(4, k)"])
+                           "k bigint, x double", partition_by=["x"])
     q = (
         spark.readStream.format("laketable").option("path", src.path).load()
         .writeStream.format("laketable").option("path", dst.path)
@@ -260,6 +260,56 @@ def test_streaming_sink_fanout_disabled_for_nonreproducible(spark, tmp_path):
     snap = dst._snapshot(dst._meta["current_snapshot_id"])
     assert dst.read().count() == 8
     assert all(f.partition == {} for f in snap.files)
+
+
+def test_streaming_sink_keys_legacy_bucket_as_the_jvm_path(spark, tmp_path):
+    """Legacy xxhash64 ``bucket(4, k)``: the sink keys its files with
+    the values the JVM write path records for the same rows, a point
+    lookup prunes them, and the rows are unchanged."""
+    from iceberg_catalog_bench_spark.catalog.table import LakeTable
+    from iceberg_catalog_bench_spark.streaming.table_source import (
+        register_source,
+    )
+    from pyspark.sql import functions as F
+
+    register_source(spark)
+    rows = spark.range(40).select(
+        F.when(F.col("id") < 38, F.col("id")).alias("k"),
+        F.concat(F.lit("v"), "id").alias("v"))
+    src = LakeTable.create(spark, str(tmp_path / "src"),
+                           "k bigint, v string")
+    src.append(rows)
+    jvm = LakeTable.create(spark, str(tmp_path / "jvm"),
+                           "k bigint, v string",
+                           partition_by=["bucket(4, k)"])
+    jvm.append(rows)
+    dst = LakeTable.create(spark, str(tmp_path / "dst"),
+                           "k bigint, v string",
+                           partition_by=["bucket(4, k)"])
+    q = (
+        spark.readStream.format("laketable").option("path", src.path).load()
+        .writeStream.format("laketable").option("path", dst.path)
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+    dst = LakeTable.load(spark, dst.path)
+
+    def keyed_rows(t):
+        files = t._snapshot(t._meta["current_snapshot_id"]).files
+        assert all(set(f.partition) == {"_p_bucket_k"} for f in files)
+        part = {os.path.basename(f.path): f.partition["_p_bucket_k"]
+                for f in files}
+        df = t._read_entries(files, t._meta["current_schema_version"],
+                             with_file_path=True)
+        return files, {(r.k, r.v, part[os.path.basename(r._lake_file)])
+                       for r in df.collect()}
+
+    files, got = keyed_rows(dst)
+    assert len(got) == 40 and got == keyed_rows(jvm)[1]
+    kept = dst._prune_files(files, "k = 7")
+    assert 0 < len(kept) < len(files)
+    assert [r.v for r in dst.scan("k = 7").collect()] == ["v7"]
 
 
 def test_batch_writer_partition_fanout_and_nulls(spark, tmp_path):

@@ -62,56 +62,68 @@ def test_schema_evolution_not_applied_when_merge_refused(spark, tmp_path):
 
 
 def test_calendar_fanout_spelling_matches_jvm_write_path(spark, tmp_path):
-    """VERDICT r10 item 1: the Python write path's UTC-gated calendar
-    renderings (days/hours/months/years over TIMESTAMP, months/years/
-    hours over DATE) must equal the JVM path's
-    `transform_expr(t).cast("string")` EXACTLY for every value — the
-    r9 E-notation lesson: one divergent spelling and _prune_files
-    equality-compares different strings, wrongly pruning."""
+    """The partition-value codec spells every (transform, type) pair
+    that ``transforms.exact`` admits exactly as the JVM write path
+    records it, ``transform_expr(t).cast("string")``, and the Python
+    writer keys rows with those spellings: years before 1000, values
+    before the epoch, µs fractions and NULL included. One divergent
+    spelling and _prune_files equality-compares different strings,
+    wrongly pruning (the r9 E-notation lesson)."""
     import datetime
+    import decimal
+    import random
 
     import pyarrow as pa
-    from pyspark.sql import functions as F
 
+    from iceberg_catalog_bench_spark.catalog import transforms
     from iceberg_catalog_bench_spark.catalog.transforms import (
-        parse_spec, transform_expr,
+        SUPPORTED, Transform, parse_spec, transform_expr,
     )
     from iceberg_catalog_bench_spark.streaming.table_source import (
-        _python_partition_fn,
+        _arrow_type, _python_partition_fn,
     )
 
-    ts_vals = [
+    columns = [("ti", "tinyint"), ("si", "smallint"), ("i", "int"),
+               ("b", "bigint"), ("s", "string"), ("d", "date"),
+               ("ts", "timestamp"), ("tsn", "timestamp_ntz"),
+               ("dec", "decimal(10,2)"), ("dec7", "decimal(12,7)"),
+               ("bin", "binary"), ("x", "double")]
+    rng = random.Random(11)
+    walls = [
         datetime.datetime(2024, 2, 29, 23, 59, 59, 999999),
-        datetime.datetime(2024, 3, 1, 0, 0, 0),
         datetime.datetime(1969, 12, 31, 23, 0, 1),     # pre-epoch
-        datetime.datetime(1969, 6, 15, 11, 30),
-        datetime.datetime(1970, 1, 1, 0, 0, 0),
-        datetime.datetime(2001, 9, 9, 1, 46, 40, 1),
-        datetime.datetime(1900, 1, 2, 3, 4, 5),
+        datetime.datetime(1970, 1, 1),
         datetime.datetime(2024, 5, 1, 12, 0, 0, 500000),   # .5 not .500000
-        datetime.datetime(2024, 5, 1, 12, 0, 0, 120000),   # .12
-        None,
-    ]
-    # plus a seeded random sweep across ±45 years at µs granularity
-    rng = __import__("random").Random(11)
-    ts_vals += [
-        datetime.datetime(1970, 1, 1)
-        + datetime.timedelta(microseconds=rng.randrange(-2**50, 2**50))
-        for _ in range(60)
-    ]
-    d_vals = [datetime.date(2024, 2, 29), datetime.date(1969, 7, 20),
-              datetime.date(1970, 1, 1), None]
-    rows = [(t, t, d) for t in ts_vals for d in d_vals]
-    df = spark.createDataFrame(
-        rows, "ts timestamp, tsn timestamp_ntz, d date")
+        datetime.datetime(999, 1, 1, 5, 30),           # year < 1000
+        datetime.datetime(1, 1, 1),
+        datetime.datetime(9999, 12, 31, 23, 59, 59, 120000),
+    ] + [datetime.datetime(1, 1, 1) + datetime.timedelta(
+        microseconds=rng.randrange(315_537_897_600_000_000))
+        for _ in range(40)]
+    rows = []
+    for n, w in enumerate(walls):
+        rows.append((
+            rng.randrange(-128, 128), rng.randrange(-2**15, 2**15),
+            rng.randrange(-2**31, 2**31), rng.randrange(-2**63, 2**63),
+            "".join(rng.choice("aZ9 é-") for _ in range(n % 5)),
+            w.date(), w.replace(tzinfo=datetime.timezone.utc), w,
+            decimal.Decimal(rng.randrange(-10**10 + 1, 10**10)).scaleb(-2),
+            decimal.Decimal(rng.choice([1, -1, 10, 99, 10**7, 123456789])
+                            ).scaleb(-7),
+            rng.randbytes(n % 4), rng.random()))
+    rows.append((None,) * len(columns))
+    ddl = ", ".join(f"{n} {t}" for n, t in columns)
+    df = spark.createDataFrame(rows, ddl)
+    tbl = pa.table({n: pa.array([r[i] for r in rows], _arrow_type(t))
+                    for i, (n, t) in enumerate(columns)})
 
-    cases = [("days", "ts"), ("hours", "ts"), ("months", "ts"),
-             ("years", "ts"), ("identity", "ts"), ("days", "tsn"),
-             ("hours", "tsn"), ("months", "tsn"), ("years", "tsn"),
-             ("identity", "tsn"), ("days", "d")]
-    columns = [("ts", "timestamp"), ("tsn", "timestamp_ntz"),
-               ("d", "date")]
-    spec = parse_spec([f"{n}({c})" for n, c in cases])
+    type_of = dict(columns)
+    spec = [t for name in SUPPORTED for col, typ in columns
+            for t in [Transform(name, col, 3 if name in (
+                "bucket", "ibucket", "truncate", "itruncate") else None)]
+            if transforms.exact(t, typ)]
+    assert {t.name for t in spec} == set(SUPPORTED)
+    assert not any(t.column == "x" for t in spec)  # doubles: never
     fn = _python_partition_fn([t.to_json() for t in spec], columns)
     assert fn is not None, "UTC session must admit calendar fanout"
     # the plan declares which columns the task must tz-verify: the
@@ -125,20 +137,18 @@ def test_calendar_fanout_spelling_matches_jvm_write_path(spark, tmp_path):
         [t.to_json() for t in months_d], columns) is None
 
     # JVM spellings, one column per case
-    type_of = dict(columns)
     jvm = df.select(*[
         transform_expr(t, type_of[t.column]).cast("string").alias(f"c{i}")
         for i, t in enumerate(spec)
     ]).collect()
-
-    tbl = pa.Table.from_pandas(df.toPandas())
     got = fn(tbl)
-    from iceberg_catalog_bench_spark.catalog.table import _HIVE_NULL
+    assert len(jvm) == len(got) == len(rows)
     for r_jvm, r_py in zip(jvm, got):
         for i, t in enumerate(spec):
-            key = f"_p_{t.name}_{t.column}"
-            want = r_jvm[f"c{i}"] if r_jvm[f"c{i}"] is not None else _HIVE_NULL
-            assert r_py[key] == want, (t.name, t.column, want, r_py[key])
+            want = r_jvm[f"c{i}"]
+            want = transforms.HIVE_NULL if want is None else want
+            key = transforms.key(t)
+            assert r_py[key] == want, (t, type_of[t.column], want, r_py[key])
 
 
 def test_calendar_fanout_degrades_unkeyed_under_non_utc_session(
@@ -541,7 +551,7 @@ def test_foreign_decimal_truncate_numeric_value_never_prunes(spark, tmp_path):
 
 def test_calendar_partition_range_pruning_no_spark_jobs(spark, tmp_path):
     """hours/months/years partitions now prune equality, range AND IN
-    predicates via pure string flooring (`_calendar_floor`) — zero
+    predicates via driver-side flooring (`pruning.calendar_floor`) — zero
     Spark jobs (pinned by poisoning _transform_values), and ranges
     prune even on files with NO footer stats (the adopted stat-less
     chain case)."""

@@ -18,6 +18,7 @@ legitimately exercise:
    skipped, not fatal — only the default spec resolves strictly.
 """
 
+import datetime
 import json
 import os
 
@@ -505,8 +506,7 @@ def test_bound_binary_serialization_spec_vectors():
 def test_partition_value_conversions_are_inverses():
     """Property: adoption's Iceberg-int → native-string conversion and
     export's native-string → Iceberg-int conversion are exact inverses
-    for day/hour/month/year over a wide epoch range (±100 years), and
-    identity-date both ways."""
+    for day/hour/month/year over years 1–9999."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -516,19 +516,20 @@ def test_partition_value_conversions_are_inverses():
 
     spec_fields = {"p": {"name": "p", "source-id": 1, "transform": None}}
     names_by_id = {1: "ts"}
+    types_by_id = {1: "timestamptz"}
+    first = (datetime.date(1, 1, 1) - datetime.date(1970, 1, 1)).days
+    last = (datetime.date(9999, 12, 31) - datetime.date(1970, 1, 1)).days
 
-    @settings(max_examples=200, deadline=None)
-    @given(v=st.integers(min_value=-36_525, max_value=36_525),
+    @settings(max_examples=300, deadline=None)
+    @given(day=st.integers(min_value=first, max_value=last),
+           hour=st.integers(min_value=0, max_value=23),
            tr=st.sampled_from(["day", "hour", "month", "year"]))
-    def roundtrip(v, tr):
-        if tr == "year":
-            v = v % 200 - 100          # ±100 years
-        if tr == "month":
-            v = v % 2400 - 1200
-        if tr == "hour":
-            v = v * 24                 # ±100 years of hours
+    def roundtrip(day, hour, tr):
+        v = {"day": day, "hour": day * 24 + hour,
+             "month": (day - first) % (9999 * 12) + (1 - 1970) * 12,
+             "year": (day - first) % 9999 + 1 - 1970}[tr]
         sf = {"p": dict(spec_fields["p"], transform=tr)}
-        native = _adopt_partition({"p": v}, sf, names_by_id)
+        native = _adopt_partition({"p": v}, sf, names_by_id, types_by_id)
         [(key, sval)] = native.items()
         plural = {"day": "days", "hour": "hours",
                   "month": "months", "year": "years"}[tr]
