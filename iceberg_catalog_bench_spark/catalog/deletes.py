@@ -1,13 +1,25 @@
-"""Merge-on-read delete files resolved on the driver: which rows of
-which data files a snapshot's delete files kill, as plain Python sets.
+"""Merge-on-read delete files: the one owner of which rows of which
+data files a snapshot's delete files kill. Four decisions live here
+and nowhere else:
 
-Iceberg v2 applies a position delete (content=1) to the rows it names
-in the data file it names, and an equality delete (content=2) to every
-row whose key equals one of its key rows in a data file with a SMALLER
-sequence number. :func:`resolve` turns a read's data files and the
-delete files that apply to them into groups of files that share one
-kill set, so a reader filters each group with set probes instead of
-joining the delete rows to every data row.
+- **Applicability** (:func:`applying`). A position delete (Iceberg v2
+  content=1) applies to the data files its ``referenced`` list names.
+  An equality delete (content=2) applies to every data file with a
+  SMALLER sequence number, so an upsert's own rows, written at its
+  retraction's sequence number, survive it.
+- **Drop-at-commit** (:func:`applicable`). A commit keeps a delete
+  file only while it applies to some live data file of the new
+  snapshot; a commit that leaves no data file keeps none.
+- **Path matching** (:func:`matcher`). A tombstone's ``file_path`` is
+  the data file's absolute path at write time, maybe as a ``file:``
+  URI. With ``file:`` stripped, it names the file entered as ``path``
+  in the table at ``root`` when it equals ``join(root, path)``, or when
+  ``path`` is table-relative and it ends with ``"/" + path``: a table
+  reached through a symlink, or copied, still reads its tombstones.
+- **Kill sets and groups** (:func:`group`, :func:`resolve`). A read's
+  data files are grouped by the delete files that apply to them,
+  position deletes counted as one (each tombstone names its own file);
+  a reader filters each group by set probes or anti-joins.
 
 Each delete file is decoded with pyarrow once per process, keyed by
 its absolute path. Delete files are immutable and uuid-named, so the
@@ -22,7 +34,7 @@ import os
 import re
 import threading
 from collections import OrderedDict
-from collections.abc import Callable, Sequence
+from collections.abc import Callable, Iterable, Sequence
 from dataclasses import dataclass, field
 
 # Decoded delete rows kept across reads. A position row costs about
@@ -62,16 +74,68 @@ def clear_cache() -> None:
         _cached_rows = 0
 
 
+def applying(entries: Sequence, delete_files: Sequence) -> dict[str, list]:
+    """Each of ``entries``' paths → the ``delete_files`` that apply to
+    it (``FileEntry``/``DeleteFileEntry``-shaped): the position deletes
+    whose ``referenced`` list names it, then the equality deletes with
+    a larger sequence number than its own."""
+    eq = [d for d in delete_files if d.content == "equality"]
+    named: dict[str, list] = {}
+    for d in delete_files:
+        if d.content == "position":
+            for p in d.referenced:
+                named.setdefault(p, []).append(d)
+    return {e.path: named.get(e.path, [])
+            + [d for d in eq if (e.seq or 0) < (d.seq or 0)]
+            for e in entries}
+
+
+def applicable(entries: Sequence, delete_files: Sequence) -> list:
+    """The delete files that apply to some of ``entries``: those a read
+    of ``entries`` applies, and those a commit of ``entries`` keeps."""
+    hit = {id(d) for ds in applying(entries, delete_files).values()
+           for d in ds}
+    return [d for d in delete_files if id(d) in hit]
+
+
+def affected(entries: Sequence, delete_files: Sequence) -> set[str]:
+    """Paths of the ``entries`` some delete file applies to."""
+    return {p for p, ds in applying(entries, delete_files).items() if ds}
+
+
 def _norm_path(p: str) -> str:
-    """A ``file_path`` as a position delete records it, in the domain
-    of absolute filesystem paths: a foreign writer may spell it as a
-    ``file:`` URI."""
+    """A recorded ``file_path`` in the domain of absolute filesystem
+    paths: a foreign writer may spell it as a ``file:`` URI."""
     return re.sub(r"^file:/+", "/", p)
 
 
+def matcher(root: str, paths: Iterable[str]) -> Callable[[str], str | None]:
+    """The function from a recorded tombstone ``file_path`` to the one
+    of ``paths`` (data-file paths as entered in the table at ``root``)
+    it names, or None."""
+    by_full: dict[str, str] = {}
+    relative: set[str] = set()
+    for p in paths:
+        by_full[os.path.join(root, p)] = p
+        if not os.path.isabs(p):
+            relative.add(p)
+
+    def named(recorded: str) -> str | None:
+        r = _norm_path(recorded)
+        hit = by_full.get(r)
+        i = r.find("/")
+        while hit is None and i >= 0:
+            if r[i + 1:] in relative:
+                hit = r[i + 1:]
+            i = r.find("/", i + 1)
+        return hit
+
+    return named
+
+
 def positions(path: str) -> dict[str, frozenset[int]]:
-    """The rows a position-delete file kills: data-file path → row
-    ordinals."""
+    """The rows a position-delete file kills: recorded data-file path
+    (``file:`` stripped) → row ordinals."""
     def decode():
         import pyarrow.parquet as pq
 
@@ -83,6 +147,19 @@ def positions(path: str) -> dict[str, frozenset[int]]:
         return tbl.num_rows, {f: frozenset(ps) for f, ps in out.items()}
 
     return _cached(("position", path), decode)
+
+
+def spellings(path: str) -> list[str]:
+    """The distinct ``file_path`` values a position-delete file
+    records, spelled as recorded."""
+    def decode():
+        import pyarrow.parquet as pq
+
+        vals = pq.read_table(path, columns=["file_path"]) \
+            .column("file_path").unique().to_pylist()
+        return len(vals), vals
+
+    return _cached(("spellings", path), decode)
 
 
 def keys(path: str, cols: Sequence[str]) -> frozenset[tuple]:
@@ -98,29 +175,16 @@ def keys(path: str, cols: Sequence[str]) -> frozenset[tuple]:
     return _cached(("equality", path, tuple(cols)), decode)
 
 
-def applicable(entries: Sequence, delete_files: Sequence) -> list:
-    """The delete files that kill rows in some of ``entries``: position
-    deletes referencing one of them, equality deletes newer than one
-    of them."""
-    paths = {e.path for e in entries}
-    min_seq = min((e.seq or 0 for e in entries), default=None)
-    return [d for d in delete_files
-            if (d.content == "position"
-                and any(p in paths for p in d.referenced))
-            or (d.content == "equality" and min_seq is not None
-                and min_seq < (d.seq or 0))]
-
-
 @dataclass
 class Group:
-    """Data files that share one equality kill set.
-
+    """Data files of one kind (:func:`group`) and the ``deletes`` that
+    apply to some of them. :func:`resolve` fills the kill sets:
     ``keys`` maps a key's column names, spelled at the read's schema
     version, to the key tuples whose rows die; ``positions`` maps the
-    absolute path of each file of the group that a position delete
-    references to the row ordinals that die there."""
+    absolute path of each file a tombstone names to its dead rows."""
 
     entries: list = field(default_factory=list)
+    deletes: list = field(default_factory=list)
     keys: dict[tuple[str, ...], frozenset[tuple]] = field(default_factory=dict)
     positions: dict[str, frozenset[int]] = field(default_factory=dict)
 
@@ -132,44 +196,43 @@ class Group:
                        for cols, ks in self.keys.items()))
 
 
+def group(entries: Sequence, delete_files: Sequence) -> list[Group]:
+    """``entries`` (data files of one snapshot) grouped by the
+    ``delete_files`` that apply to them, with empty kill sets; the
+    files no delete file applies to form a group with no deletes."""
+    app = applying(entries, delete_files)
+    by_kind: dict[tuple, tuple[list, dict]] = {}
+    for e in entries:
+        ds = app[e.path]
+        eq = tuple(id(d) for d in ds if d.content == "equality")
+        files, dels = by_kind.setdefault((eq, len(eq) < len(ds)), ([], {}))
+        files.append(e)
+        dels.update((id(d), d) for d in ds)
+    return [Group(entries=files, deletes=list(dels.values()))
+            for files, dels in by_kind.values()]
+
+
 def resolve(root: str, entries: Sequence, delete_files: Sequence,
             names_at: Callable[[list[str]], list[str]]) -> list[Group]:
-    """``entries`` (data files of one snapshot) grouped by kill set.
+    """:func:`group` with each group's kill sets.
 
-    ``delete_files`` are the snapshot's delete files; ``names_at`` maps
-    an equality delete's column names to their spelling at the read's
-    schema version. Entry and delete paths are relative to ``root``
-    unless absolute. A group holds the files that the same equality
-    deletes apply to and that position deletes either may name or do
-    not name; the files no delete file applies to form a group with
-    empty kill sets."""
-    eq = [d for d in delete_files if d.content == "equality"]
-    refs: dict[str, list] = {}
-    for d in delete_files:
-        if d.content == "position":
-            for p in d.referenced:
-                refs.setdefault(p, []).append(d)
-    by_kind: dict[tuple, list] = {}
-    for e in entries:
-        newer = tuple(i for i, d in enumerate(eq)
-                      if (e.seq or 0) < (d.seq or 0))
-        by_kind.setdefault((newer, e.path in refs), []).append(e)
-    groups = []
-    for (newer, referenced), files in by_kind.items():
-        g = Group(entries=files)
-        for i in newer:
-            d = eq[i]
-            cols = tuple(names_at(list(d.equality_cols)))
-            found = keys(os.path.join(root, d.path), d.physical_cols)
-            g.keys[cols] = g.keys.get(cols, frozenset()) | found
-        if referenced:
-            for e in files:
-                full = os.path.join(root, e.path)
-                dead: set[int] = set()
-                for d in refs.get(e.path, ()):
-                    dead |= positions(os.path.join(root, d.path)).get(
-                        full, frozenset())
-                if dead:
-                    g.positions[full] = frozenset(dead)
-        groups.append(g)
+    ``names_at`` maps an equality delete's column names to their
+    spelling at the read's schema version. Entry and delete paths are
+    relative to ``root`` unless absolute."""
+    groups = group(entries, delete_files)
+    for g in groups:
+        named = matcher(root, [e.path for e in g.entries])
+        dead: dict[str, set[int]] = {}
+        for d in g.deletes:
+            full = os.path.join(root, d.path)
+            if d.content == "equality":
+                cols = tuple(names_at(list(d.equality_cols)))
+                g.keys[cols] = g.keys.get(cols, frozenset()) \
+                    | keys(full, d.physical_cols)
+                continue
+            for recorded, ps in positions(full).items():
+                p = named(recorded)
+                if p is not None:
+                    dead.setdefault(os.path.join(root, p), set()).update(ps)
+        g.positions = {p: frozenset(ps) for p, ps in dead.items()}
     return groups

@@ -122,7 +122,9 @@ def iceberg_hash(val: object) -> int:
             + val.microsecond
         return murmur3_x86_32(_encode_long(us))
     if isinstance(val, decimal.Decimal):
-        unscaled = int(val.scaleb(-val.as_tuple().exponent))
+        # the digits themselves: scaleb would round past 28 digits
+        sign, digits, _exp = val.as_tuple()
+        unscaled = int("".join(map(str, digits))) * (-1 if sign else 1)
         # Java BigInteger.toByteArray() minimum length: one sign bit
         # on top of the magnitude bits (for negatives, the magnitude
         # of ~v), so -128 is the single byte 0x80, not 0xFF80.

@@ -13,6 +13,7 @@ Spark eval come from the caller's ``transform_values``.
 from __future__ import annotations
 
 import datetime
+import decimal
 import re
 from collections.abc import Callable, Sequence
 from dataclasses import replace
@@ -42,10 +43,15 @@ _IN_PRED = re.compile(
 def conjuncts(where: str) -> list[Conjunct]:
     """The prunable conjuncts of a SQL ``where``: ``col op literal``
     and ``col IN (literals)`` terms of a top-level AND. Other terms are
-    skipped (they keep every file)."""
+    skipped (they keep every file). A number with a fraction reads as a
+    float, or, past the 15 significant digits a float holds, as the
+    exact decimal Spark reads."""
     def lit(s: str) -> Any:
-        return s[1:-1] if s.startswith("'") else (
-            float(s) if "." in s else int(s))
+        if s.startswith("'"):
+            return s[1:-1]
+        if "." not in s:
+            return int(s)
+        return decimal.Decimal(s) if _digits(s) > 15 else float(s)
 
     out: list[Conjunct] = []
     for c in re.split(r"(?i)\s+and\s+", where):
@@ -61,6 +67,17 @@ def conjuncts(where: str) -> list[Conjunct]:
             out.append((tuple(m.group(1).split(".")), "in",
                         [lit(v) for v in vals]))
     return out
+
+
+def _digits(v: Any) -> int:
+    """The significant digits of the number ``v`` reads as (0 when it
+    reads as none)."""
+    try:
+        d = decimal.Decimal(str(v).strip())
+    except decimal.InvalidOperation:
+        return 0
+    return len("".join(map(str, d.as_tuple().digits)).strip("0")) \
+        if d.is_finite() else 0
 
 
 def norm_stat(v: Any) -> Any:
@@ -302,9 +319,13 @@ def _bind(preds: list[tuple], cur: dict, fields: list[dict],
             # spelling; other transforms compare transform values
             floors = [calendar_floor(t, v) for v in lits]
             tkeys = []
+            # tables written before the ibucket hash of a decimal was
+            # exact hold buckets of its value rounded to 28 digits
+            wide = t.name == "ibucket" and old["type"].lower().startswith(
+                "decimal") and any(_digits(v) > 28 for v in lits)
             if None in floors:
                 floors = None
-                if op in ("=", "in"):
+                if op in ("=", "in") and not wide:
                     wanted += [(t, v, old["type"]) for v in lits]
                     tkeys = [tv_key(t, old["type"], v) for v in lits]
             parts.append((transforms.key(replace(t, column=old["name"])),

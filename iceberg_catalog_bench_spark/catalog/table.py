@@ -111,8 +111,9 @@ class FileEntry:
     stats: dict[str, list] = field(default_factory=dict)  # col -> [min, max]
     partition: dict[str, str] = field(default_factory=dict)  # transform -> value
     # Iceberg data sequence number: assigned at commit (the committing
-    # snapshot's id — monotonic), carried unchanged by later snapshots.
-    # Equality deletes apply only to files with a SMALLER sequence.
+    # snapshot's id — monotonic), carried unchanged by later snapshots;
+    # which equality deletes apply to the file follows from it
+    # (:mod:`.deletes`).
     seq: int | None = 0
 
     def to_json(self) -> dict:
@@ -136,19 +137,14 @@ class FileEntry:
 
 @dataclass
 class DeleteFileEntry:
-    """A merge-on-read delete file.
-
-    ``content="position"`` (Iceberg v2 content=1): parquet rows of
-    ``(file_path, pos)`` tombstoning specific rows of specific data
-    files; ``referenced`` lists the table-relative paths the tombstones
-    point at, so reads probe only those files and commits drop the
-    delete file once its targets leave the table.
-
-    ``content="equality"`` (Iceberg v2 content=2): parquet rows of key
-    values over ``equality_cols``; a row in any data file whose
-    sequence number is SMALLER than ``seq`` and whose key equals a
-    delete row is deleted. This is the streaming-CDC shape — a writer
-    retracts keys without ever reading the target."""
+    """A merge-on-read delete file: ``content="position"`` (Iceberg v2
+    content=1) holds ``(file_path, pos)`` tombstones, and
+    ``referenced`` lists the paths of the data files they name, as
+    entered in the table; ``content="equality"`` (content=2) holds key
+    rows over ``equality_cols``, the streaming-CDC shape (a writer
+    retracts keys without ever reading the target). Which rows of
+    which data files it kills, and when a commit drops it, is decided
+    in :mod:`.deletes`."""
 
     path: str  # relative to table root
     rows: int
@@ -215,15 +211,6 @@ class Snapshot:
         if self.delete_files:
             out["delete_files"] = [d.to_json() for d in self.delete_files]
         return out
-
-    def delete_affected(self) -> set[str]:
-        """Paths of the data files a delete file applies to: referenced
-        by a position delete, or older than an equality delete."""
-        hit = {p for d in self.delete_files if d.content == "position"
-               for p in d.referenced}
-        max_eq_seq = max((d.seq or 0 for d in self.delete_files
-                          if d.content == "equality"), default=0)
-        return hit | {e.path for e in self.files if (e.seq or 0) < max_eq_seq}
 
     @staticmethod
     def from_json(d: dict) -> "Snapshot":
@@ -975,24 +962,15 @@ class LakeTable:
                 if e.seq is None:
                     e.seq = sid
             # Delete-file carry-over: merge-on-read delete files ride
-            # along until nothing they can apply to remains — position
-            # deletes until every referenced data file left the table,
-            # equality deletes until no live file has a smaller sequence
-            # — then they are dropped automatically (Iceberg's dangling-
-            # delete cleanup in rewrite_data_files).
+            # along while they apply to a live file, then drop
+            # (Iceberg's dangling-delete cleanup in rewrite_data_files).
             if delete_files is None:
                 parent = self._snapshot(expected) if expected is not None else None
                 delete_files = list(parent.delete_files) if parent else []
             for d in delete_files:
                 if d.seq is None:
                     d.seq = sid
-            live = {e.path for e in files}
-            min_seq = min((e.seq for e in files), default=0)
-            delete_files = [
-                d for d in delete_files
-                if (d.content == "position" and any(p in live for p in d.referenced))
-                or (d.content == "equality" and min_seq < d.seq)
-            ]
+            delete_files = deletes.applicable(files, delete_files)
             snap = Snapshot(
                 snapshot_id=sid,
                 parent_id=expected,
@@ -1571,138 +1549,108 @@ class LakeTable:
                            entries: list[FileEntry] | None = None,
                            with_file_path: bool = False,
                            with_pos: bool = False) -> DataFrame:
-        """Snapshot read with merge-on-read delete files applied —
-        position deletes (Iceberg v2 content=1) AND equality deletes
-        (content=2).
-
-        The delete files are resolved on the driver
-        (:func:`.deletes.resolve`): files sharing one kill set are read
-        together and filtered by set probes, ``NOT coalesce(key IN
-        (...), false)`` for equality keys (NULL keys match NULL) and
-        one ``file#pos IN (...)`` probe for the files a position delete
-        references. Files no delete file applies to stream through
+        """Snapshot read with merge-on-read delete files applied, in
+        the groups :func:`.deletes.group` forms. Each group is filtered
+        by its kill set (:func:`.deletes.resolve`) as set probes: ``NOT
+        coalesce(key IN (...), false)`` for equality keys (NULL keys
+        match NULL) and one ``file#pos IN (...)`` probe for the files a
+        tombstone names. Files no delete file applies to stream through
         untouched, and the read starts no Spark job of its own. Above
         ``_DELETE_FILTER_ROWS`` tombstone rows, or for a key type with
-        no literal here, the tombstones are anti-joined instead
+        no literal here, each group anti-joins its delete files instead
         (:meth:`_anti_join_deletes`)."""
         entries = snap.files if entries is None else entries
         dels = deletes.applicable(entries, snap.delete_files)
         if not dels:
             return self._read_entries(entries, schema_version, with_file_path, with_pos)
+        names_at = functools.partial(self._names_at_version,
+                                     version=schema_version)
+        conds = None
         if sum(d.rows for d in dels) <= _DELETE_FILTER_ROWS:
             types = {f.name: f.type for f in self._fields(schema_version)}
-            groups = deletes.resolve(
-                self.path, entries, dels,
-                lambda cols: self._names_at_version(cols, schema_version))
+            groups = deletes.resolve(self.path, entries, dels, names_at)
             conds = [_kill_condition(g, types) for g in groups]
-            if None not in conds:
-                parts = []
-                for g, cond in zip(groups, conds):
-                    probe = bool(g.positions)
-                    df = self._read_entries(g.entries, schema_version,
-                                            with_file_path or probe,
-                                            with_pos or probe)
-                    if cond:
-                        df = df.where(f"NOT coalesce({cond}, false)")
-                    extra = [c for c, keep in (("_lake_file", with_file_path),
-                                               ("_lake_pos", with_pos))
-                             if probe and not keep]
-                    parts.append(df.drop(*extra) if extra else df)
-                return functools.reduce(DataFrame.unionByName, parts)
-        return self._anti_join_deletes(snap, entries, schema_version,
-                                       with_file_path, with_pos)
-
-    def _anti_join_deletes(self, snap: "Snapshot", entries: list[FileEntry],
-                           schema_version: int, with_file_path: bool,
-                           with_pos: bool) -> DataFrame:
-        """:meth:`_read_with_deletes` by anti-joins, for tombstone sets
-        too large for literal probes. Position-referenced files join
-        ``(file, pos)`` LEFT ANTI against the tombstones; files older
-        than an equality delete join its key columns LEFT ANTI with the
-        sequence guard ``file.seq < del.seq`` (so a key re-inserted
-        AFTER the retraction survives). Both sides broadcast below
-        ``_BROADCAST_DELETE_BYTES``, so the read costs the scan plus
-        hash probes, never a shuffle of the data."""
-        pos_dels = [d for d in snap.delete_files if d.content == "position"]
-        eq_dels = [d for d in snap.delete_files if d.content == "equality"]
-        affected = snap.delete_affected()
-        plain = [e for e in entries if e.path not in affected]
-        dirty = [e for e in entries if e.path in affected]
-        parts: list[DataFrame] = []
-        if dirty:
-            df = self._read_entries(dirty, schema_version, True, True)
-            if pos_dels:
-                del_paths = [os.path.join(self.path, d.path) for d in pos_dels]
-                # normalize BOTH sides: a foreign writer may record URI
-                # spellings (file:///...) INSIDE the delete parquet, not
-                # just in manifest metadata
-                tomb = _read_parquet(self.spark, *del_paths).select(
-                    F.regexp_replace("file_path", "^file:/+", "/").alias("file_path"),
-                    "pos",
-                )
-                if sum(d.bytes for d in pos_dels) <= _BROADCAST_DELETE_BYTES:
-                    tomb = F.broadcast(tomb)
-                df = df.join(
-                    tomb,
-                    (df["_lake_file"] == tomb["file_path"])
-                    & (df["_lake_pos"] == tomb["pos"]),
-                    "left_anti",
-                )
-            if eq_dels:
-                # attach each row's file sequence via a tiny broadcast
-                # map (path → seq), then one anti-join per distinct key
-                # set with the sequence guard
-                seq_map = self.spark.createDataFrame(
-                    [(os.path.join(self.path, e.path), e.seq or 0) for e in dirty],
-                    "_seq_path string, _file_seq bigint",
-                )
-                df = df.join(
-                    F.broadcast(seq_map), df["_lake_file"] == seq_map["_seq_path"],
-                    "left",
-                ).drop("_seq_path")
-                by_cols: dict[tuple, list[DeleteFileEntry]] = {}
-                for d in eq_dels:
-                    # group by key names AS SPELLED IN THE SCHEMA BEING
-                    # READ (field-id resolution — a time travel to a
-                    # pre-rename snapshot binds the old spelling); files
-                    # written before a rename read via their frozen
-                    # physical names below
-                    by_cols.setdefault(
-                        tuple(self._names_at_version(d.equality_cols, schema_version)),
-                        [],
-                    ).append(d)
-                for cols, group in by_cols.items():
-                    tombs = None
-                    for d in group:
-                        one = _read_parquet(
-                            self.spark, os.path.join(self.path, d.path)
-                        ).select(
-                            *[
-                                F.col(fc).alias(f"_del_{c}")
-                                for fc, c in zip(d.physical_cols, cols)
-                            ],
-                            F.lit(d.seq).cast("bigint").alias("_del_seq"),
-                        )
-                        tombs = one if tombs is None else tombs.unionByName(one)
-                    if sum(d.bytes for d in group) <= _BROADCAST_DELETE_BYTES:
-                        tombs = F.broadcast(tombs)
-                    cond = F.col("_file_seq") < tombs["_del_seq"]
-                    for c in cols:
-                        cond = cond & (df[c].eqNullSafe(tombs[f"_del_{c}"]))
-                    df = df.join(tombs, cond, "left_anti")
-                df = df.drop("_file_seq")
-            if not with_file_path:
-                df = df.drop("_lake_file")
-            if not with_pos:
-                df = df.drop("_lake_pos")
-            parts.append(df)
-        if plain:
-            parts.append(
-                self._read_entries(plain, schema_version, with_file_path, with_pos)
-            )
-        if not parts:
-            return self._read_entries([], schema_version, with_file_path, with_pos)
+            if None in conds:
+                conds = None
+        else:
+            groups = deletes.group(entries, dels)
+        parts = []
+        for i, g in enumerate(groups):
+            probe = any(d.content == "position" for d in g.deletes)
+            df = self._read_entries(g.entries, schema_version,
+                                    with_file_path or probe, with_pos or probe)
+            if conds is None:
+                df = self._anti_join_deletes(df, g, names_at)
+            elif conds[i]:
+                df = df.where(f"NOT coalesce({conds[i]}, false)")
+            extra = [c for c, keep in (("_lake_file", with_file_path),
+                                       ("_lake_pos", with_pos))
+                     if probe and not keep]
+            parts.append(df.drop(*extra) if extra else df)
         return functools.reduce(DataFrame.unionByName, parts)
+
+    def _anti_join_deletes(self, df: DataFrame, g: "deletes.Group",
+                           names_at: Callable[[list[str]], list[str]]
+                           ) -> DataFrame:
+        """The rows of ``df`` (the files of ``g``, with ``_lake_file``
+        and ``_lake_pos`` when a position delete applies) that ``g``'s
+        delete files do not kill, by anti-joins, for tombstone sets too
+        large for literal probes: ``(file, pos)`` against the
+        tombstones that name a file of the group, and the key columns
+        (``eqNullSafe``) against each set of equality keys. Delete
+        sides broadcast below ``_BROADCAST_DELETE_BYTES``, so the read
+        costs the scan plus hash probes, never a shuffle of the data."""
+        pos = [d for d in g.deletes if d.content == "position"]
+        if pos:
+            tomb = self._tombstones(pos, g.entries)
+            if sum(d.bytes for d in pos) <= _BROADCAST_DELETE_BYTES:
+                tomb = F.broadcast(tomb)
+            df = df.join(tomb, (df["_lake_file"] == tomb["file_path"])
+                         & (df["_lake_pos"] == tomb["pos"]), "left_anti")
+        by_cols: dict[tuple, list[DeleteFileEntry]] = {}
+        for d in g.deletes:
+            if d.content == "equality":
+                # key names AS SPELLED IN THE SCHEMA BEING READ (a time
+                # travel to a pre-rename snapshot binds the old
+                # spelling); the delete file holds its frozen names
+                by_cols.setdefault(tuple(names_at(d.equality_cols)),
+                                   []).append(d)
+        for cols, ds in by_cols.items():
+            tombs = functools.reduce(DataFrame.unionByName, [
+                _read_parquet(self.spark, os.path.join(self.path, d.path))
+                .select(*[F.col(fc).alias(f"_del_{c}")
+                          for fc, c in zip(d.physical_cols, cols)])
+                for d in ds])
+            if sum(d.bytes for d in ds) <= _BROADCAST_DELETE_BYTES:
+                tombs = F.broadcast(tombs)
+            cond = functools.reduce(lambda a, b: a & b, [
+                df[c].eqNullSafe(tombs[f"_del_{c}"]) for c in cols])
+            df = df.join(tombs, cond, "left_anti")
+        return df
+
+    def _tombstones(self, dels: list[DeleteFileEntry],
+                    entries: Sequence[FileEntry], *cols: Column) -> DataFrame:
+        """The tombstones ``(file_path, pos, *cols)`` of the
+        position-delete files ``dels`` that name one of ``entries``
+        (:func:`.deletes.matcher`), ``file_path`` spelled as that
+        file's absolute path through one map literal of the recorded
+        spellings, built on the driver."""
+        named = deletes.matcher(self.path, [e.path for e in entries])
+        pairs = {}
+        for d in dels:
+            for s in deletes.spellings(os.path.join(self.path, d.path)):
+                p = named(s)
+                if p is not None:
+                    pairs[s] = os.path.join(self.path, p)
+        tomb = _read_parquet(
+            self.spark, *[os.path.join(self.path, d.path) for d in dels]
+        ).select("file_path", F.col("pos").cast("bigint"), *cols)
+        if not pairs:
+            return tomb.where(F.lit(False))
+        spelled = F.create_map(*[F.lit(x) for kv in sorted(pairs.items())
+                                 for x in kv])
+        return tomb.withColumn("file_path", spelled[F.col("file_path")]) \
+            .where(F.col("file_path").isNotNull())
 
     def _write_delete_files(self, tombstones: DataFrame) -> list[DeleteFileEntry]:
         """Write ``(file_path, pos)`` tombstone rows as a position-delete
@@ -2042,20 +1990,8 @@ class LakeTable:
         version = self._meta["current_schema_version"]
 
         def file_state(snap: Snapshot) -> dict[str, frozenset]:
-            pos: dict[str, set[str]] = {}
-            eq: list[tuple[str, int]] = []
-            for d in snap.delete_files:
-                if d.content == "position":
-                    for p in d.referenced:
-                        pos.setdefault(p, set()).add(d.path)
-                else:  # equality: applies to files with a smaller sequence
-                    eq.append((d.path, d.seq or 0))
-            state: dict[str, frozenset] = {}
-            for e in snap.files:
-                applicable = set(pos.get(e.path, ()))
-                applicable.update(p for p, seq in eq if (e.seq or 0) < seq)
-                state[e.path] = frozenset(applicable)
-            return state
+            return {p: frozenset(d.path for d in ds) for p, ds in
+                    deletes.applying(snap.files, snap.delete_files).items()}
 
         s_state, e_state = file_state(start), file_state(end)
         changed_new = [
@@ -2083,10 +2019,10 @@ class LakeTable:
         inserts = new_rows.exceptAll(old_rows).withColumn(
             "_change_type", F.lit("insert")
         )
-        deletes = old_rows.exceptAll(new_rows).withColumn(
+        removed = old_rows.exceptAll(new_rows).withColumn(
             "_change_type", F.lit("delete")
         )
-        changes = inserts.unionAll(deletes)
+        changes = inserts.unionAll(removed)
         if not all(_map_free(f.dataType) for f in schema.fields):
             changes = changes.select(*[
                 _entries_to_maps(F.col(f.name), f.dataType).alias(f.name)
@@ -3134,7 +3070,9 @@ class LakeTable:
     def position_deletes(self, snapshot_id: int | None = None) -> DataFrame:
         """`t.position_deletes` metadata table (Iceberg spec): one row
         per position-delete TOMBSTONE live in the snapshot —
-        ``(file_path, pos, delete_file_path, sequence_number)``.
+        ``(file_path, pos, delete_file_path, sequence_number)``, where
+        ``file_path`` is the absolute path of the snapshot's data file
+        the tombstone names.
         ``.delete_files`` lists the delete FILES; this lists their
         ROWS — the view compaction planners and debuggers join against
         data to see exactly which records are dead. Equality deletes
@@ -3153,8 +3091,6 @@ class LakeTable:
         # MoR table); the owning delete file comes from
         # input_file_name() and its sequence number from a literal map
         # (delete files are dimension-sized, the map is KBs)
-        abs_to_rel = {os.path.join(self.path, d.path): d.path
-                      for d in pos_dels}
         seq_map = F.create_map(*[
             x for d in pos_dels
             for x in (F.lit(d.path), F.lit(d.seq or 0))
@@ -3184,16 +3120,9 @@ class LakeTable:
         ])
         own = F.element_at(F.split(F.input_file_name(), "/"), -1)
         rel = F.element_at(rel_map, own)
-        return _read_parquet(self.spark, *abs_to_rel).select(
-            # same URI normalization as the MoR read path — a foreign
-            # writer may record file:///… spellings
-            F.regexp_replace("file_path", "^file:/+", "/")
-            .cast("string").alias("file_path"),
-            F.col("pos").cast("bigint"),
-            rel.alias("delete_file_path"),
-            F.element_at(seq_map, rel).cast("bigint")
-            .alias("sequence_number"),
-        )
+        return self._tombstones(
+            pos_dels, snap.files, rel.alias("delete_file_path"),
+            F.element_at(seq_map, rel).cast("bigint").alias("sequence_number"))
 
     def entries(self, snapshot_id: int | None = None) -> DataFrame:
         """`t.entries` metadata table (Iceberg manifest entries): one
@@ -3288,21 +3217,15 @@ class LakeTable:
         files = list(snap.files) if snap else []
         dels = list(snap.delete_files) if snap else []
         total_bytes = sum(e.bytes for e in files)
-        affected = snap.delete_affected() if snap else set()
-        extra_bytes = 0
-        for d in dels:
-            refs = set(d.referenced)
-            extra_bytes += sum(
-                e.bytes for e in files
-                if (e.path in refs if d.content == "position"
-                    else (e.seq or 0) < (d.seq or 0)))
+        applying = deletes.applying(files, dels)
+        extra_bytes = sum(e.bytes * len(applying[e.path]) for e in files)
         amp = 1.0 + (extra_bytes / total_bytes if total_bytes else 0.0)
         return (
             len(dels),
             sum(1 for d in dels if d.content == "position"),
             sum(1 for d in dels if d.content == "equality"),
             sum(d.rows for d in dels),
-            sum(1 for e in files if e.path in affected),
+            sum(1 for ds in applying.values() if ds),
             len(files),
             round(amp, 3),
             "compact" if len(dels) >= threshold else "ok",
@@ -3379,7 +3302,7 @@ class LakeTable:
         stats: no data files are read."""
         snap = self._snapshot(snapshot_id)
         files = snap.files if snap else []
-        affected = snap.delete_affected() if snap else set()
+        affected = deletes.affected(files, snap.delete_files if snap else [])
         agg: dict[str, list[int]] = {}
         for e in files:
             key = json.dumps(e.partition, sort_keys=True)
@@ -3849,7 +3772,7 @@ class LakeTable:
         # compaction is what folds merge-on-read tombstones back into
         # clean data files, after which _commit drops the delete files
         # automatically (nothing references them anymore).
-        dirty = snap.delete_affected()
+        dirty = deletes.affected(snap.files, snap.delete_files)
         candidates = (
             self._prune_files(snap.files, where) if where else snap.files
         )
@@ -3891,7 +3814,7 @@ class LakeTable:
         if snap is None or not snap.delete_files:
             return {"rewritten_data_files_count": 0,
                     "removed_delete_files_count": 0}
-        affected = snap.delete_affected()
+        affected = deletes.affected(snap.files, snap.delete_files)
         dirty = [e for e in snap.files if e.path in affected]
         if not dirty:
             # delete files exist but apply to nothing live — commit a
@@ -4017,7 +3940,7 @@ class LakeTable:
         # a conflict retry restarts the WHOLE consolidation: the kept
         # tombstone set is live-file-relative, so rebasing the commit
         # onto a snapshot whose files changed would ship tombstones
-        # semi-joined against a stale live set (re-introducing the
+        # matched against a stale live set (re-introducing the
         # dangling rows this procedure exists to prune)
         def rebase(snap: Snapshot | None):
             # a conflicted attempt's output is referenced by no snapshot
@@ -4027,14 +3950,7 @@ class LakeTable:
                         if d.content == "position"]
             if not pos_dels:
                 return None
-            live_abs = [os.path.join(self.path, e.path) for e in snap.files]
-            tomb = _read_parquet(
-                self.spark,
-                *[os.path.join(self.path, d.path) for d in pos_dels],
-            ).select("file_path", "pos")
-            live_df = self.spark.createDataFrame(
-                [(p,) for p in live_abs], "file_path string")
-            kept = tomb.join(F.broadcast(live_df), "file_path", "left_semi")
+            kept = self._tombstones(pos_dels, snap.files)
             n_before = sum(d.rows for d in pos_dels)
             if not kept.isEmpty():
                 new_dels.extend(self._write_delete_files(kept))

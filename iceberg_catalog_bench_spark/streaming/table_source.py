@@ -152,7 +152,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from ..catalog import pruning, snapshots, transforms
+from ..catalog import deletes, pruning, snapshots, transforms
 from ..catalog._fsutil import unlink_quietly
 from ..catalog.pruning import leaf_type as _nested_leaf_ddl
 from ..catalog.pruning import split_top as _split_top
@@ -373,9 +373,8 @@ class _PosDeletePartition(InputPartition):
         self.data_abs = data_abs
         self.columns = columns
         self.sid = sid
-        # table-relative path of the data file — the path-form-stable
-        # matching key against the delete files' recorded write-time
-        # absolute paths (see _read_pos_delete)
+        # the data file's path as the table enters it (see
+        # _read_pos_delete)
         self.data_rel = data_rel
 
 
@@ -501,30 +500,23 @@ def _read_eq_delete(partition: _EqDeletePartition) -> Iterator:
 def _read_pos_delete(partition: _PosDeletePartition) -> Iterator:
     """Re-read the tombstoned rows of one data file by position.
 
-    Delete files record ``file_path`` as the WRITE-TIME absolute path
-    (Iceberg position deletes store full paths); the reader's path
-    option may spell the same table differently (relative path,
-    symlink, a moved/copied table). Matching is therefore done on the
-    normalized absolute path OR the table-relative suffix — and an
-    empty match RAISES: the partition was only planned because the
-    delete file's metadata references this data file, so zero matched
-    positions means the path forms diverged, not that nothing was
-    deleted (silently yielding no rows would drop -D records)."""
-    import pyarrow.compute as pc
+    Delete files record ``file_path`` as the WRITE-TIME absolute path,
+    which :func:`.deletes.matcher` matches against the data file as
+    the table enters it (``data_abs`` is ``data_rel`` joined to the
+    reader's table path). An empty match RAISES: the partition was
+    only planned because the delete file's metadata references this
+    data file, so zero matched positions means the path forms
+    diverged, not that nothing was deleted (silently yielding no rows
+    would drop -D records)."""
     import pyarrow.parquet as pq
 
-    data_real = os.path.realpath(partition.data_abs)
-    rel = partition.data_rel
+    rel = partition.data_rel or partition.data_abs
+    named = deletes.matcher(partition.data_abs[:-len(rel)], [rel])
     positions: set[int] = set()
     for delete_abs in partition.delete_abs_list:
-        dels = pq.read_table(delete_abs, columns=["file_path", "pos"])
-        paths = dels.column("file_path")
-        mask = pc.or_(
-            pc.equal(paths, partition.data_abs), pc.equal(paths, data_real)
-        )
-        if rel:
-            mask = pc.or_(mask, pc.ends_with(paths, pattern="/" + rel))
-        positions.update(dels.filter(mask).column("pos").to_pylist())
+        for recorded, ps in deletes.positions(delete_abs).items():
+            if named(recorded) is not None:
+                positions |= ps
     if not positions:
         raise ValueError(
             f"position-delete file(s) {partition.delete_abs_list} "

@@ -2,17 +2,22 @@
 resolution of merge-on-read delete files behind every LakeTable read.
 
 Each case builds a random table history as the write path records it:
-data files appended or upserted (an upsert's equality delete shares
-its data file's sequence number), position deletes naming rows of live
-files (their ``file_path`` spelled as a path or a ``file:`` URI),
-equality deletes over one or two key columns with NULL keys among
-them, a key-column rename (pending equality deletes keep their
-physical column names and follow the rename) and compactions that
-replace a file by its surviving rows under a new sequence number. The
-property: at the head and at a random earlier snapshot, the kill sets
-of :func:`deletes.resolve` delete exactly the rows a brute-force
-reading of the Iceberg v2 rules deletes.
+data files (entered table-relative) appended or upserted (an upsert's
+equality delete shares its data file's sequence number), position
+deletes naming rows of live files (their ``file_path`` spelled as the
+absolute path, as a ``file:`` URI, or under another root, as in a
+copied table), equality deletes over one or two key columns with NULL
+keys among them, a key-column rename (pending equality deletes keep
+their physical column names and follow the rename), compactions that
+replace a file by its surviving rows under a new sequence number, and
+commits that leave no data file. The properties: every commit keeps
+exactly the delete files that apply to some live file, and at the head
+and at a random earlier snapshot, :func:`deletes.affected` names the
+files some delete file applies to and the kill sets of
+:func:`deletes.resolve` delete exactly the rows a brute-force reading
+of the Iceberg v2 rules deletes.
 """
+import ast
 import os
 import subprocess
 import sys
@@ -33,11 +38,14 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIELDS = {1: ("k", "key", pa.int64()), 2: ("s", "s", pa.string()),
           3: ("v", "v", pa.int64())}
 KEY_SETS = [(1,), (1, 2)]
+# how a position delete spells a data file's path: as written, as a
+# URI, or under the root the table was copied from
+SPELLINGS = ["path", "uri", "copied"]
 
 
 @dataclass
 class Data:
-    path: str
+    path: str  # relative to the table root
     seq: int
     schema_version: int
     rows: list  # {field id: value}
@@ -53,7 +61,7 @@ class Delete:
     equality_cols: list = field(default_factory=list)
     file_cols: list = field(default_factory=list)
     ids: tuple = ()  # key field ids (equality)
-    dead: set = field(default_factory=set)  # (abs path, pos) (position)
+    dead: set = field(default_factory=set)  # (path, pos) (position)
     keys: list = field(default_factory=list)  # key tuples (equality)
 
     @property
@@ -65,13 +73,19 @@ def _name(fid: int, version: int) -> str:
     return FIELDS[fid][min(version, 1)]
 
 
+def _applies(d: Delete, f: Data) -> bool:
+    if d.content == "position":
+        return f.path in d.referenced
+    return f.seq < d.seq
+
+
 def _killed(f: Data, pos: int, dels: list) -> bool:
     """The Iceberg v2 rules, row by row."""
     row = f.rows[pos]
     for d in dels:
         if d.content == "position" and (f.path, pos) in d.dead:
             return True
-        if (d.content == "equality" and f.seq < d.seq
+        if (d.content == "equality" and _applies(d, f)
                 and tuple(row[i] for i in d.ids) in d.keys):
             return True
     return False
@@ -89,22 +103,23 @@ class History:
 
     def _path(self, kind: str) -> str:
         self.n += 1
-        return os.path.join(self.root, f"{kind}-{self.n}.parquet")
+        return f"{kind}-{self.n}.parquet"
 
     def _commit(self) -> None:
-        live = {f.path for f in self.files}
-        min_seq = min((f.seq for f in self.files), default=0)
-        self.dels = [d for d in self.dels
-                     if (d.content == "position"
-                         and any(p in live for p in d.referenced))
-                     or (d.content == "equality" and min_seq < d.seq)]
+        """Drop-at-commit: a delete file stays while it applies to some
+        live file."""
+        kept = [d for d in self.dels
+                if any(_applies(d, f) for f in self.files)]
+        assert deletes.applicable(self.files, self.dels) == kept
+        self.dels = kept
         self.snaps.append((list(self.files), list(self.dels), self.version))
 
     def _data(self, rows: list) -> Data:
         path = self._path("data")
         pq.write_table(pa.table({
             _name(i, self.version): pa.array([r[i] for r in rows], t)
-            for i, (_a, _b, t) in FIELDS.items()}), path)
+            for i, (_a, _b, t) in FIELDS.items()}),
+            os.path.join(self.root, path))
         return Data(path, self.sid, self.version, rows)
 
     def _eq(self, ids: tuple, keys: list) -> Delete:
@@ -112,7 +127,8 @@ class History:
         cols = [_name(i, self.version) for i in ids]
         pq.write_table(pa.table({
             c: pa.array([k[j] for k in keys], FIELDS[i][2])
-            for j, (c, i) in enumerate(zip(cols, ids))}), path)
+            for j, (c, i) in enumerate(zip(cols, ids))}),
+            os.path.join(self.root, path))
         return Delete(path, len(keys), "equality", self.sid,
                       equality_cols=cols, ids=ids, keys=list(keys))
 
@@ -133,15 +149,18 @@ class History:
         self.dels.append(self._eq(ids, keys))
         self._commit()
 
-    def pos_delete(self, picks: list, uri: bool) -> None:
+    def pos_delete(self, picks: list, spelling: str) -> None:
         dead = sorted({(f.path, p % len(f.rows)) for f, p in
                        ((self.files[i % len(self.files)], p)
                         for i, p in picks)})
         self.sid += 1
         path = self._path("posdel")
+        root = "/copied/from/t" if spelling == "copied" else self.root
+        scheme = "file://" if spelling == "uri" else ""
         pq.write_table(pa.table({
-            "file_path": [("file://" + f if uri else f) for f, _ in dead],
-            "pos": pa.array([p for _, p in dead], pa.int64())}), path)
+            "file_path": [scheme + os.path.join(root, f) for f, _ in dead],
+            "pos": pa.array([p for _, p in dead], pa.int64())}),
+            os.path.join(self.root, path))
         self.dels.append(Delete(
             path, len(dead), "position", self.sid,
             referenced=sorted({f for f, _ in dead}), dead=set(dead)))
@@ -167,6 +186,11 @@ class History:
             self.files.append(self._data(keep))
         self._commit()
 
+    def truncate(self) -> None:
+        self.sid += 1
+        self.files = []
+        self._commit()
+
 
 VALUES = {1: st.one_of(st.none(), st.integers(0, 4)),
           2: st.one_of(st.none(), st.sampled_from(["a", "b"])),
@@ -181,9 +205,10 @@ STEP = st.one_of(
         st.tuples(VALUES[1], VALUES[2]), min_size=1, max_size=4)),
     st.tuples(st.just("pos_delete"), st.lists(
         st.tuples(st.integers(0, 20), st.integers(0, 20)),
-        min_size=1, max_size=4), st.booleans()),
+        min_size=1, max_size=4), st.sampled_from(SPELLINGS)),
     st.tuples(st.just("rename")),
     st.tuples(st.just("compact"), st.integers(0, 20)),
+    st.tuples(st.just("truncate")),
 )
 
 
@@ -192,6 +217,8 @@ def _check(h: History, files: list, dels: list, version: int) -> None:
         now = {_name(i, h.version): i for i in FIELDS}
         return [_name(now[c], version) for c in cols]
 
+    assert deletes.affected(files, dels) == {
+        f.path for f in files if any(_applies(d, f) for d in dels)}
     groups = deletes.resolve(h.root, files, dels, names_at)
     applied = deletes.resolve(h.root, files,
                               deletes.applicable(files, dels), names_at)
@@ -200,9 +227,10 @@ def _check(h: History, files: list, dels: list, version: int) -> None:
     for gs in (groups, applied):
         for g in gs:
             for f in g.entries:
+                full = os.path.join(h.root, f.path)
                 for pos, row in enumerate(f.rows):
                     named = {_name(i, version): v for i, v in row.items()}
-                    assert g.kills(f.path, pos, named) == \
+                    assert g.kills(full, pos, named) == \
                         _killed(f, pos, dels), (f.path, pos, row)
 
 
@@ -266,3 +294,37 @@ def test_imports_without_pyspark(tmp_path):
         "{'/t/data/a.parquet': frozenset({3})}\n"
     )
     subprocess.run([sys.executable, "-c", code], cwd=ROOT, check=True)
+
+
+def _mentions_seq(node: ast.AST) -> bool:
+    return any(
+        "seq" in (getattr(n, "attr", None) or getattr(n, "id", None) or "")
+        or isinstance(n, ast.Constant) and "seq" in str(n.value)
+        for n in ast.walk(node))
+
+
+@pytest.mark.parametrize("rel", ["catalog/table.py",
+                                 "streaming/table_source.py"])
+def test_the_delete_rule_stays_in_the_deletes_module(rel):
+    """Neither module orders sequence numbers (which equality deletes
+    apply), nor strips ``file:`` from a recorded tombstone path or
+    matches one by ``realpath`` or an Arrow suffix mask (which file a
+    tombstone names): both are ``catalog/deletes.py``'s decisions.
+    ``_LAKE_FILE_SQL`` strips ``file:`` from Spark's own
+    ``_metadata.file_path``, not from a tombstone."""
+    path = os.path.join(ROOT, "iceberg_catalog_bench_spark", rel)
+    tree = ast.parse(open(path).read())
+    lake_file = {id(n) for a in ast.walk(tree) if isinstance(a, ast.Assign)
+                 and any(getattr(t, "id", None) == "_LAKE_FILE_SQL"
+                         for t in a.targets)
+                 for n in ast.walk(a)}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Compare) and any(
+                isinstance(op, (ast.Lt, ast.LtE, ast.Gt, ast.GtE))
+                for op in node.ops):
+            assert not _mentions_seq(node), (rel, node.lineno)
+        if (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                and "^file:" in node.value):
+            assert id(node) in lake_file, (rel, node.lineno)
+        assert getattr(node, "attr", None) not in ("realpath", "ends_with"), \
+            (rel, node.lineno)

@@ -42,6 +42,7 @@ from iceberg_catalog_bench_spark.catalog.transforms import parse_spec
 
 # --- the hash, against the spec's published vectors -----------------
 
+_WIDE = decimal.Decimal("12345678901234567890123456789012.345678")
 # Iceberg table spec, Appendix B "Bucket Transform Details" examples.
 _SPEC_VECTORS = [
     (34, 2017239379),                                   # int hashed as long
@@ -53,6 +54,9 @@ _SPEC_VECTORS = [
     (decimal.Decimal("14.20"), -500754589),
     (uuid.UUID("f79c3e09-677c-4bbd-a479-3f349cb785e7"), 1488055340),
     (bytes([0, 1, 2, 3]), -188683207),
+    # not in Appendix B: murmur3 over the minimum-length two's
+    # complement of a 38-digit unscaled value, exact past 28 digits
+    (_WIDE, 1808226235),
 ]
 
 
@@ -101,6 +105,32 @@ def test_decimal_minimum_length_twos_complement_boundaries():
         # round-trip sanity: the encoding IS the unscaled value
         unscaled = int(d.scaleb(-d.as_tuple().exponent))
         assert int.from_bytes(enc, "big", signed=True) == unscaled, d
+
+
+def test_wide_decimal_literal_scan_matches_filter(spark, tmp_path):
+    """``scan(where)`` equals ``read().filter(where)`` for a wide
+    decimal literal, whether the file's bucket was recorded from the
+    exact hash or, as before the hash was exact, from the value
+    rounded to 28 digits (buckets 11 and 15 of 16)."""
+    t = LakeTable.create(spark, str(tmp_path / "t"), "d decimal(38,6), n int",
+                         partition_by=["ibucket(16, d)"])
+    t.append(spark.createDataFrame([(_WIDE, 1)], "d decimal(38,6), n int"))
+    [first] = t._meta["snapshots"][-1]["files"]
+    t.append(spark.createDataFrame(
+        [(decimal.Decimal("1.5"), 2), (decimal.Decimal("-7.25"), 3),
+         (decimal.Decimal("99"), 4)], "d decimal(38,6), n int"))
+    assert (iceberg_bucket(_WIDE, 16), (2000495951 & 0x7FFFFFFF) % 16) == \
+        (11, 15)
+    [wide] = [f for f in t._meta["snapshots"][-1]["files"]
+              if f["path"] == first["path"]]
+    assert wide["partition"]["_p_ibucket_d"] == "11"
+    for recorded in ("11", "15"):
+        wide["partition"]["_p_ibucket_d"] = recorded
+        t.__dict__.pop("_tv_cache", None)
+        for where in (f"d = {_WIDE}", f"d IN ({_WIDE}, 1.5)"):
+            assert sorted(r.n for r in t.scan(where).collect()) == sorted(
+                r.n for r in t.read().filter(where).collect()), \
+                (recorded, where)
 
 
 def test_tz_aware_datetime_hashes_utc_instant():

@@ -7,10 +7,15 @@ user_id)`` and holds position deletes, equality deletes on
 ``user_id`` and on ``(user_id, region)`` (a ``bigint, string`` key,
 NULL regions among its rows), and re-inserted keys that must survive
 older retractions. Each read runs under the default tombstone bound
-(scan filters) and with ``_DELETE_FILTER_ROWS`` at 0 (anti-joins).
+(scan filters) and with ``_DELETE_FILTER_ROWS`` at 0 (anti-joins), on
+the table at its own path, through a symlink and as a copy: position
+deletes record absolute data-file paths, which still name the files
+of a table reached under another path.
 """
 
 import datetime
+import os
+import shutil
 from collections import Counter
 from decimal import Decimal
 
@@ -67,6 +72,23 @@ def churned(spark, tmp_path_factory):
     return _build(spark, str(tmp_path_factory.mktemp("deletes") / "t"))
 
 
+def _elsewhere(spark, path):
+    """The table at ``path`` loaded through a symlink, and a copy of
+    it loaded at the copy's path."""
+    link, copy = path + "-link", path + "-copy"
+    os.symlink(path, link)
+    shutil.copytree(path, copy)
+    return [LakeTable.load(spark, link), LakeTable.load(spark, copy)]
+
+
+@pytest.fixture(scope="module")
+def reached(spark, churned):
+    """The churned table at its own path, through a symlink and as a
+    copy."""
+    t = churned[0]
+    return [t] + _elsewhere(spark, t.path)
+
+
 def _both_paths(monkeypatch, read):
     """``read()``'s rows as a multiset under scan filters and under
     anti-joins."""
@@ -101,11 +123,12 @@ def _model():
     return Counter((k, r, a) for k, (r, _d, a) in live.items())
 
 
-def test_read_matches_the_model_on_both_paths(churned, monkeypatch):
-    t, _appended, _retracted = churned
-    probed, joined = _both_paths(
-        monkeypatch, lambda: t.read().select("user_id", "region", "amount"))
-    assert probed == joined == _model()
+def test_read_matches_the_model_on_both_paths(reached, monkeypatch):
+    for t in reached:
+        probed, joined = _both_paths(
+            monkeypatch,
+            lambda: t.read().select("user_id", "region", "amount"))
+        assert probed == joined == _model(), t.path
 
 
 @pytest.mark.parametrize("where", [
@@ -113,48 +136,68 @@ def test_read_matches_the_model_on_both_paths(churned, monkeypatch):
     "region IS NULL",
     "ts >= '2024-01-02 00:00:00' AND ts < '2024-01-03 00:00:00'",
 ])
-def test_scan_is_the_same_on_both_paths(churned, monkeypatch, where):
-    t, _appended, _retracted = churned
-    probed, joined = _both_paths(monkeypatch, lambda: t.scan(where))
-    assert probed == joined
-    assert sum(probed.values()) > 0
+def test_scan_is_the_same_on_both_paths(reached, monkeypatch, where):
+    results = [_both_paths(monkeypatch, lambda t=t: t.scan(where))
+               for t in reached]
+    assert all(r == results[0][0] for pair in results for r in pair)
+    assert sum(results[0][0].values()) > 0
 
 
-def test_time_travel_is_the_same_on_both_paths(churned, monkeypatch):
-    t, appended, retracted = churned
+def test_time_travel_is_the_same_on_both_paths(churned, reached,
+                                               monkeypatch):
+    _t, appended, retracted = churned
     for sid in (appended, retracted):
-        probed, joined = _both_paths(
-            monkeypatch, lambda sid=sid: t.read(snapshot_id=sid))
-        assert probed == joined
-    assert sum(_both_paths(monkeypatch, lambda: t.read(
+        results = [_both_paths(monkeypatch,
+                               lambda t=t, sid=sid: t.read(snapshot_id=sid))
+                   for t in reached]
+        assert all(r == results[0][0] for pair in results for r in pair)
+    assert sum(_both_paths(monkeypatch, lambda: reached[0].read(
         snapshot_id=appended))[0].values()) == 600
 
 
-def test_changelog_and_incremental_read_on_both_paths(churned, monkeypatch):
-    t, appended, retracted = churned
+def test_changelog_and_incremental_read_on_both_paths(churned, reached,
+                                                      monkeypatch):
+    _t, appended, retracted = churned
     for start in (appended, retracted):
-        probed, joined = _both_paths(monkeypatch,
-                                     lambda start=start: t.changelog(start))
-        assert probed == joined
-        assert {c[-1] for c in probed} == {"insert", "delete"}
-    first = t._snapshot(appended).parent_id
-    probed, joined = _both_paths(
-        monkeypatch, lambda: t.incremental_read(first, appended))
-    assert probed == joined and sum(probed.values()) == 200
+        results = [_both_paths(monkeypatch,
+                               lambda t=t, start=start: t.changelog(start))
+                   for t in reached]
+        assert all(r == results[0][0] for pair in results for r in pair)
+        assert {c[-1] for c in results[0][0]} == {"insert", "delete"}
+    first = reached[0]._snapshot(appended).parent_id
+    for t in reached:
+        probed, joined = _both_paths(
+            monkeypatch, lambda t=t: t.incremental_read(first, appended))
+        assert probed == joined and sum(probed.values()) == 200
 
 
 def test_rewrite_data_files_output_is_the_same_on_both_paths(
         spark, tmp_path, monkeypatch):
-    out = {}
+    """On each path, a table compacted at its own path, through a
+    symlink (its target is the other build) and as a copy."""
     for bound in (table_mod._DELETE_FILTER_ROWS, 0):
         monkeypatch.setattr(table_mod, "_DELETE_FILTER_ROWS", bound)
         t, _appended, _retracted = _build(spark, str(tmp_path / str(bound)))
-        t.rewrite_data_files(min_input_files=1)
-        assert not t._snapshot().delete_files
-        out[bound] = Counter(
-            tuple(r) for r in t.read().select("user_id", "region", "amount")
-            .collect())
-    assert list(out.values())[0] == list(out.values())[1] == _model()
+        other, _a, _r = _build(spark, str(tmp_path / f"{bound}-other"))
+        for u in [t] + _elsewhere(spark, other.path):
+            u.rewrite_data_files(min_input_files=1)
+            assert not u._snapshot().delete_files
+            assert Counter(
+                tuple(r) for r in u.read().select(
+                    "user_id", "region", "amount").collect()
+            ) == _model(), (bound, u.path)
+
+
+def test_compact_delete_files_through_a_symlink_keeps_live_tombstones(
+        spark, tmp_path):
+    t = LakeTable.create(spark, str(tmp_path / "t"), "k bigint, v double")
+    t.append(spark.createDataFrame([(1, 1.0), (2, 2.0), (3, 3.0)],
+                                   "k bigint, v double"))
+    t.delete_where("k = 1", mode="merge-on-read")
+    link, _copy = _elsewhere(spark, t.path)
+    assert link.compact_delete_files()["removed_dangling_rows"] == 0
+    assert sorted(r.k for r in LakeTable.load(spark, t.path).read()
+                  .collect()) == [2, 3]
 
 
 def test_reads_run_only_the_jobs_that_move_rows(churned, spark_jobs):
